@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every SparkEntry query executed end-to-end at
   * SPARK_GRAFT_SF_DIR (default sf0.1), one JSON line to stdout.
@@ -15,34 +14,7 @@ object Bench {
     val wanted = args.toSeq
     def selected(name: String) = wanted.isEmpty || wanted.exists(name.startsWith)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the engine's Catalyst extension class, activated the sanctioned
-      // way (at session construction): SQL functions, optimizer rule,
-      // and the as-of join planner strategy
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // fork-free local-FS permissions (graft.NioLocalFs): Hadoop
-      // shells out chmod per created file without libhadoop native
-      .config("spark.hadoop.fs.file.impl", "graft.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.NioLocalFsAbstract")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.Fs.scratch("graft_spark_warehouse"))
-      // r15 (guide §1 measured, DriverProfile): the default 100-entry
-      // whole-stage-codegen class cache is smaller than ONE lifecycle
-      // query's ~150 generated classes, so every statement recompiled
-      // its fragments on every rep (qec rep-2: 141 Janino compilations
-      // with the default, 0 with the cache sized to the workload; the
-      // qd*/qe* family's tail improved 1.3-1.9x). Plan-count-dependent,
-      // not data-size-dependent — a production driver serving many
-      // distinct statements wants the same headroom. Env-overridable.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // untimed warm-up: JVM/codegen/shuffle-infra first-use costs land
     // here instead of inside whichever query happens to run first
     spark.range(1000000).selectExpr("sum(id) s", "avg(id) a")

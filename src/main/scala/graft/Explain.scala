@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-audit dump: `explain("formatted")` of every SparkEntry query to
@@ -66,7 +65,7 @@ object Explain {
     "qat_spj_join",
     // qei's builder consumes the change feed twice (the option-vs-
     // Scala equality probe) AND needs the session-construction-time
-    // CdfReadOptionRule — absent in the shared plan-audit session
+    // CdfReadOptionRule
     "qei_cdf_read_option",
     // qek drives the full statement lifecycle (CALLs, CDF option
     // reads, rename, update) in its builder — eager by construction
@@ -93,8 +92,7 @@ object Explain {
     // (the qat/qdz/qel shape)
     "qer_sql_reshard",
     // qeu needs the session-construction-time ViewSubstitutionRule
-    // (absent in the shared plan-audit session) and drives view DDL
-    // CALLs in its builder
+    // and drives view DDL CALLs in its builder
     "qeu_sql_views",
     // qex needs the session-construction-time MorDmlRule (the
     // merge-on-read UPDATE router) and drives the full DML lifecycle
@@ -104,22 +102,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_plans"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the engine's Catalyst extension class, activated the sanctioned
-      // way (at session construction): SQL functions, optimizer rule,
-      // and the as-of join planner strategy
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // fork-free local-FS permissions (graft.NioLocalFs): Hadoop
-      // shells out chmod per created file without libhadoop native
-      .config("spark.hadoop.fs.file.impl", "graft.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.NioLocalFsAbstract")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.Fs.scratch("graft_spark_warehouse"))
-      .getOrCreate()
+    val spark = Session.build(4)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,27 +9,7 @@ object Verify {
     // tools/run_main.sh graft.Verify <sf> <out> q48 q58
     val wanted = args.drop(2)
     def selected(name: String) = wanted.isEmpty || wanted.exists(name.startsWith)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the engine's Catalyst extension class, activated the sanctioned
-      // way (at session construction): SQL functions, optimizer rule,
-      // and the as-of join planner strategy
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // fork-free local-FS permissions (graft.NioLocalFs): Hadoop
-      // shells out chmod per created file without libhadoop native
-      .config("spark.hadoop.fs.file.impl", "graft.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.NioLocalFsAbstract")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.Fs.scratch("graft_spark_warehouse"))
-      // same codegen-class-cache sizing as Bench (see the note there)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // same cache policy as Bench: keep caches within a query group
     // (q70-q74 share ML lineage), clear at group boundaries so the

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The round-12 verdict's "what's wrong #2": the plan-invariant sweep
   * ([[PlanInvariantsSpec]]) deliberately skips `Explain.eager` — the
@@ -20,10 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * Gated behind GRAFT_SLOW_AUDIT=1 (the builders replay streams, fit
   * models, and stage transactional lifecycles — minutes, not seconds):
   *   GRAFT_SLOW_AUDIT=1 sbt "testOnly graft.EagerPlanAuditSpec"
-  * Run it standalone: the session must be constructed WITH
-  * `spark.sql.extensions` (a shared plain test session would make the
-  * rule-dependent builders fail for the wrong reason — the spec
-  * cancels loudly if the parser seam is absent).
+  * It runs on the shared [[SparkSpec]] session, which [[graft.Session]]
+  * builds WITH `spark.sql.extensions` (without them the rule-dependent
+  * builders would fail for the wrong reason — the spec cancels loudly
+  * if the parser seam is absent).
   *
   * Allowlist discipline mirrors PlanInvariantsSpec: every justified
   * hit is named with WHY its frame is bounded; an unlisted offender
@@ -31,21 +29,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * through QueryExecutionListener (they report through the streaming
   * listener bus); their plans are audited by the per-query streaming
   * specs instead — noted here so the coverage boundary is explicit. */
-class EagerPlanAuditSpec extends AnyFunSuite {
+class EagerPlanAuditSpec extends SparkSpec {
 
   private def gated = sys.env.get("GRAFT_SLOW_AUDIT").contains("1")
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-eager-audit")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", graft.Fs.scratch("graft_spark_warehouse"))
-    .getOrCreate()
-
-  private val sfDir = "/root/testdata/sf0.001"
 
   // query -> why its builder-internal (or returned-frame) GLOBAL
   // window rides a provably bounded frame. These are frames the lazy
@@ -136,8 +122,8 @@ class EagerPlanAuditSpec extends AnyFunSuite {
         "(replays streams, fits models; minutes)")
     assume(spark.sessionState.sqlParser
       .isInstanceOf[graft.sources.GraftSqlDdlParser],
-      "the audit session lacks the construction-time extensions — run " +
-        "standalone: GRAFT_SLOW_AUDIT=1 sbt 'testOnly graft.EagerPlanAuditSpec'")
+      "the shared test session lacks the construction-time extensions " +
+        "(it must be built by graft.Session)")
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,

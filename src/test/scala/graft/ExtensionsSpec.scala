@@ -4,9 +4,9 @@ import graft.functions.GraftExtensions
 import graft.report.Report
 
 /** SQL-function registration (GraftExtensions) + the R-29 report sink.
-  * Uses the shared session: `spark.sql.extensions` only applies at
-  * session construction, so the runtime `register` path is what a test
-  * JVM (and any long-lived session) exercises. */
+  * The shared session is built with `spark.sql.extensions`; these tests
+  * also call the runtime `register` path that a session built without
+  * it (any long-lived session) relies on. */
 class ExtensionsSpec extends SparkSpec {
 
   test("cosine_sim and squared_l2 resolve in SQL and compute correctly") {

@@ -3,26 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs (one JVM-wide session; specs
-  * run on the sf0.001 fixtures so the whole suite stays fast). */
+/** Shared local SparkSession for all specs (one JVM-wide session, built
+  * by [[graft.Session]] exactly as Verify and Bench build theirs, so the
+  * whole suite doubles as an integration test of the shipped session;
+  * specs run on the sf0.001 fixtures so the suite stays fast). */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.Fs.scratch("graft_spark_warehouse"))
-      // fork-free local-FS permissions, same registration as the mains —
-      // the whole suite doubles as an integration test of graft.NioLocalFs
-      .config("spark.hadoop.fs.file.impl", "graft.NioLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.NioLocalFsAbstract")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.build(4)
   val sfDir = "/root/testdata/sf0.001"
 }
 

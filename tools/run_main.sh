@@ -1,12 +1,13 @@
 #!/bin/bash
 # Run a graft main class directly with java (bypasses sbt startup).
 # Usage: tools/run_main.sh <mainClass> [args...]
-# Env: GRAFT_MEM (default 12g), classpath cached at /tmp/graft_cp.txt
+# Env: SPARK_DRIVER_MEM is the heap (-Xmx), default 24g; set it below
+# physical memory on a smaller host. Classpath cached at /tmp/graft_cp.txt
 # (regenerate with: sbt -batch "export Runtime/fullClasspath").
 set -e
 CP=$(cat /tmp/graft_cp.txt)
 MAIN=$1; shift
-exec java -Xmx${GRAFT_MEM:-24g} \
+exec java -Xmx${SPARK_DRIVER_MEM:-24g} \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
@@ -20,6 +21,5 @@ exec java -Xmx${GRAFT_MEM:-24g} \
   --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
   --add-opens=java.base/sun.security.action=ALL-UNNAMED \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   ${GRAFT_JAVA_OPTS:-} \
   -cp "$CP" "$MAIN" "$@"

@@ -3801,15 +3801,7 @@ private[sources] class TxnDvBatch(spark: SparkSession, root: String,
   private lazy val posByFile: Map[String, Array[Long]] = {
     val dvd = keptNow().filter(_.dvRows > 0)
     val hconf = ConfCache.sessionConf(spark)
-    val local = dvd.map(f =>
-      TxnTable.readDvPositions(root, f, hconf).map(f.path -> _))
-    if (local.forall(_.isDefined))
-      local.flatten.map { case (p, pos) => p -> pos.sorted }.toMap
-    else dvd.map(f => TxnTable.readDvSidecar(spark, root, f))
-      .reduce(_ unionByName _)
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (p, rows) => p -> rows.map(_.getLong(1)).sorted }
+    dvd.map(f => f.path -> TxnTable.readDvPositions(root, f, hconf).sorted).toMap
   }
 
   private def pf(f: FileEntry): PartitionedFile = {
@@ -4229,6 +4221,8 @@ private[sources] class TxnStagedTable(ident: Identifier, root: String,
       s"(supported: ${TxnTable.StatTypes.mkString(",")})")
   private val checkExpr = props.getOrElse("check", "")
   private val op = if (targetVersion == 0) "ctas" else "rtas"
+  TxnTable.requireLocalRoot(root)
+  TxnTable.requireBigintKeys(schema0, keyCol)
 
   @volatile private var staged: Option[(Manifest, String)] = None
 

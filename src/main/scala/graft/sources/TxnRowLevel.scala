@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.sources.TxnTable.{FileEntry, Manifest}
+import graft.sources.TxnTable.Manifest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, S
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** qdo/qdp: SQL `MERGE INTO` / `UPDATE` (and non-key `DELETE`) on the
@@ -22,14 +22,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the GENERAL path — arbitrary predicates, arbitrary assignments —
   * priced honestly as a full-snapshot replace commit.
   *
-  * The write side is the PRODUCTION write path the round-9
-  * writeSnapshot scaladoc promised ("at 100 TB the writer task would
-  * emit stats inline rather than re-read"): a real distributed
-  * [[TxnBatchWrite]] whose tasks write parquet files DIRECTLY
-  * (Spark's own `ParquetWriteSupport`) while accumulating per-file
-  * (rows, min/max key, per-stats-column min/max, bytes) and shipping
-  * them to the driver as `WriterCommitMessage`s — the manifest is
-  * assembled from task messages, scanning nothing. The write declares
+  * The write side is a real distributed [[TxnBatchWrite]] whose tasks
+  * write through the one txn file writer ([[TxnFileWriter]]) — the
+  * same per-file stats fold (rows, key ranges, every stats lane's
+  * min/max/count/sum/bloom) and the same CHECK count as a batch
+  * INSERT — and ship each file's stats to the driver as its
+  * `WriterCommitMessage`; the manifest is assembled from the task
+  * messages, scanning nothing, and a CHECK violation rejects the
+  * command with its attempt dir deleted. The write declares
   * `RequiresDistributionAndOrdering` ORDERED BY the table key, so
   * Spark range-partitions + sorts and the replacement files stay
   * range-clustered — pruning survives a MERGE. Commit is the same
@@ -37,21 +37,6 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * command loudly (write-write conflict on a replace cannot rebase —
   * the Delta ConcurrentModificationException semantics). */
 object TxnRowLevel {
-
-  /** One task's file, stats accumulated inline — the commit message. */
-  private[sources] case class TxnFileCommit(path: String, nRows: Long,
-      minK: Long, maxK: Long, minK2: Long, maxK2: Long,
-      vmin: Seq[Long], vmax: Seq[Long], bytes: Long)
-      extends WriterCommitMessage
-
-  /** Stat slots for the task writer: keyCol, keyCol2 (if any), then
-    * statsCols — indices resolved against the write schema once on
-    * the driver. `vTypes` parallels `values` with each stats column's
-    * declared type; the task writer folds the same order-preserving
-    * Long encode the batch writer's SQL pass uses, so a row-level
-    * rewrite's bounds land in the identical stat lane. */
-  private[sources] case class StatSlots(key: Int, key2: Int,
-      values: Seq[Int], vTypes: Seq[String] = Nil)
 
   private[sources] class TxnReplaceWrite(root: String, base: Manifest,
       info: LogicalWriteInfo, op: String,
@@ -72,46 +57,26 @@ object TxnRowLevel {
       // the plan's rows arrive under LOGICAL names; the files a
       // rewrite emits must carry the PHYSICAL names the manifest's
       // pinned DDL speaks (the column-mapping write translation,
-      // positionally — structural columns refuse renames, so every
-      // stat slot's name is identical in both worlds)
+      // positionally — structural and CHECK-referenced columns refuse
+      // renames, so every lane binds to the same name in both worlds)
       val l2p = base.renames.map(_.swap).toMap
       val schema = StructType(info.schema().fields.map(f =>
         f.copy(name = l2p.getOrElse(f.name, f.name))))
-      def slot(c: String, t: String): Int =
-        if (c.isEmpty) -1
-        else {
-          val i = schema.fieldIndex(c)
-          val want: org.apache.spark.sql.types.DataType = t match {
-            case "long"      => LongType
-            case "date"      => org.apache.spark.sql.types.DateType
-            case "timestamp" => org.apache.spark.sql.types.TimestampType
-            case "string"    => org.apache.spark.sql.types.StringType
-            case other => sys.error(s"unknown stats type $other for $c")
-          }
-          require(schema.fields(i).dataType == want,
-            s"stats column $c must be $want for inline task stats " +
-              s"(declared type $t), got ${schema.fields(i).dataType}")
-          i
-        }
-      val vTypes = base.statsCols.indices.map(i =>
-        if (base.statsTypes.length > i) base.statsTypes(i) else "long")
-      val slots = StatSlots(slot(base.keyCol, "long"),
-        slot(base.keyCol2, "long"),
-        base.statsCols.zip(vTypes).map { case (c, t) => slot(c, t) },
-        vTypes)
-      new TxnBatchWrite(root, base, schema, slots, op, carriedPaths)
+      new TxnBatchWrite(root, base, TxnFileWriter.plan(SparkSession.active,
+        schema, base.keyCol, base.keyCol2, base.checkExpr, base.statsCols,
+        base.statsTypes), op, carriedPaths)
     }
   }
 
   private[sources] class TxnBatchWrite(root: String, base: Manifest,
-      schema: StructType, slots: StatSlots, op: String,
+      plan: TxnFileWriter.WritePlan, op: String,
       carriedPaths: () => Seq[String]) extends BatchWrite {
     private val attempt = java.util.UUID.randomUUID().toString.take(8)
     private val sub = f"data/v${base.version + 1}%08d-$attempt"
 
     override def createBatchWriterFactory(info: PhysicalWriteInfo)
         : DataWriterFactory =
-      new TxnWriterFactory(s"$root/$sub", schema.toDDL, slots)
+      new TxnWriterFactory(s"$root/$sub", plan)
 
     // runs ONCE on the driver after every task committed: assemble the
     // manifest FROM the task messages (no post-write scan), CARRY every
@@ -119,11 +84,8 @@ object TxnRowLevel {
     // never flowed through the write — see TxnRowLevelOperation), and
     // publish with the same put-if-absent CAS as every other commit
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val rewritten = messages.collect {
-        case m: TxnFileCommit if m.nRows > 0 =>
-          FileEntry(s"$sub/${m.path}", m.nRows, m.minK, m.maxK,
-            m.minK2, m.maxK2, m.bytes, m.vmin, m.vmax)
-      }.sortBy(_.path).toSeq
+      val rewritten = TxnFileWriter.fileEntries(root, sub, base.checkExpr,
+        messages.toSeq.collect { case s: TxnFileWriter.FileStats => s })
       val carry = carriedPaths().toSet
       val files = base.files.filter(f => carry(f.path)) ++ rewritten
       val m = base.copy(version = base.version + 1, op = op,
@@ -144,41 +106,15 @@ object TxnRowLevel {
       graft.Fs.deleteRecursively(s"$root/$sub")
   }
 
-  private[sources] class TxnWriterFactory(outDir: String, schemaDdl: String,
-      slots: StatSlots) extends DataWriterFactory {
+  /** One task writes one file under `outDir` through the txn file
+    * writer; its commit message is that file's [[TxnFileWriter.FileStats]]. */
+  private[sources] class TxnWriterFactory(outDir: String,
+      plan: TxnFileWriter.WritePlan) extends DataWriterFactory {
 
     override def createWriter(partitionId: Int, taskId: Long)
         : DataWriter[InternalRow] = new DataWriter[InternalRow] {
-      private val schema = StructType.fromDDL(schemaDdl)
-      private val fileName =
-        f"part-$partitionId%05d-${java.util.UUID.randomUUID().toString.take(8)}.parquet"
-      private val hPath = new org.apache.hadoop.fs.Path(s"$outDir/$fileName")
-      private val conf = {
-        // clone of a once-loaded defaults template: a bare
-        // `new Configuration()` re-parses the XML defaults per TASK
-        val c = ConfCache.defaultsCopy()
-        org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-          .setSchema(schema, c)
-        // the write-support/schema-converter read these from the RAW
-        // hadoop conf (ParquetFileFormat.prepareWrite normally seeds
-        // them); seed the session defaults by ConfigEntry so a key
-        // rename breaks the build, not the executor
-        val sqlc = org.apache.spark.sql.internal.SQLConf
-        Seq(sqlc.PARQUET_WRITE_LEGACY_FORMAT,
-          sqlc.PARQUET_OUTPUT_TIMESTAMP_TYPE,
-          sqlc.PARQUET_FIELD_ID_WRITE_ENABLED,
-          sqlc.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE,
-          sqlc.PARQUET_REBASE_MODE_IN_WRITE,
-          sqlc.PARQUET_INT96_REBASE_MODE_IN_WRITE)
-          .foreach(e => c.set(e.key, e.defaultValueString))
-        c
-      }
-      private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
-      private var n = 0L
-      private var mnK, mnK2 = Long.MaxValue
-      private var mxK, mxK2 = Long.MinValue
-      private val vmn = Array.fill(slots.values.length)(Long.MaxValue)
-      private val vmx = Array.fill(slots.values.length)(Long.MinValue)
+      private val w = new TxnFileWriter.Writer(plan, outDir)
+      private val width = w.schema.length
 
       // a group-based ReplaceData query prefixes each row with the
       // __row_operation column (always a KEEP op — 5 WRITE / 6
@@ -188,91 +124,30 @@ object TxnRowLevel {
       // other shape fails loudly rather than writing a torn row.
       private var shift: org.apache.spark.sql.catalyst.ProjectingInternalRow = _
       private def dataRow(row: InternalRow): InternalRow =
-        if (row.numFields == schema.length) row
+        if (row.numFields == width) row
         else {
-          require(row.numFields == schema.length + 1,
-            s"row has ${row.numFields} fields for ${schema.length}-column " +
-              s"schema ($schemaDdl)")
+          require(row.numFields == width + 1,
+            s"row has ${row.numFields} fields for $width-column " +
+              s"schema (${plan.schemaDdl})")
           val op = row.getInt(0)
           require(op == 5 || op == 6,
             s"unexpected __row_operation $op in a replace write")
           if (shift == null)
             shift = org.apache.spark.sql.catalyst.ProjectingInternalRow(
-              schema, 1 to schema.length)
+              w.schema, 1 to width)
           shift.project(row)
           shift
         }
 
       override def write(raw: InternalRow): Unit = {
-        val row = dataRow(raw)
-        if (writer == null) writer = new TxnParquetBuilder(hPath, conf).build()
-        // the writer consumes the row lazily per column; our stats read
-        // it first, which is safe (InternalRow getters are pure)
-        if (!row.isNullAt(slots.key)) {
-          val k = row.getLong(slots.key)
-          mnK = math.min(mnK, k); mxK = math.max(mxK, k)
-        }
-        if (slots.key2 >= 0 && !row.isNullAt(slots.key2)) {
-          val k2 = row.getLong(slots.key2)
-          mnK2 = math.min(mnK2, k2); mxK2 = math.max(mxK2, k2)
-        }
-        slots.values.indices.foreach { i =>
-          val si = slots.values(i)
-          if (!row.isNullAt(si)) {
-            // fold the declared type's Long encode — physical layouts:
-            // DATE = Int epoch days, TIMESTAMP = Long epoch micros,
-            // STRING through the shared prefix encode
-            val v = slots.vTypes(i) match {
-              case "date"   => row.getInt(si).toLong
-              case "string" =>
-                TxnTable.encodeStringStat(row.getUTF8String(si).toString)
-              case _        => row.getLong(si) // long & timestamp micros
-            }
-            vmn(i) = math.min(vmn(i), v); vmx(i) = math.max(vmx(i), v)
-          }
-        }
-        writer.write(row)
-        n += 1
+        if (!w.isOpen) w.open(TxnFileWriter.partName(partitionId))
+        w.write(dataRow(raw))
       }
-
-      override def commit(): WriterCommitMessage = {
-        val bytes =
-          if (writer == null) 0L
-          else {
-            writer.close()
-            hPath.getFileSystem(conf).getFileStatus(hPath).getLen
-          }
-        // null-stat sentinels mean "prunes nothing" (the qd6 doctrine)
-        val (k2lo, k2hi) =
-          if (slots.key2 >= 0 && mnK2 != Long.MaxValue) (mnK2, mxK2)
-          else (Long.MinValue, Long.MaxValue)
-        TxnFileCommit(fileName, n, mnK, mxK, k2lo, k2hi,
-          vmn.toSeq.map(v => if (v == Long.MaxValue) Long.MinValue else v),
-          vmx.toSeq.map(v => if (v == Long.MinValue) Long.MaxValue else v),
-          bytes)
-      }
-      override def abort(): Unit = {
-        if (writer != null) writer.close()
-        hPath.getFileSystem(conf).delete(hPath, false)
-        ()
-      }
+      override def commit(): WriterCommitMessage =
+        if (w.isOpen) w.close() else TxnFileWriter.NoFile
+      override def abort(): Unit = w.abort()
       override def close(): Unit = ()
     }
-  }
-
-  /** parquet-hadoop builder over Spark's own InternalRow WriteSupport —
-    * the executor-side writer with no driver round-trip. */
-  private[sources] class TxnParquetBuilder(path: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration)
-      extends org.apache.parquet.hadoop.ParquetWriter.Builder[
-        InternalRow, TxnParquetBuilder](path) {
-    withConf(conf)
-    withCompressionCodec(
-      org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-    override def self(): TxnParquetBuilder = this
-    override def getWriteSupport(c: org.apache.hadoop.conf.Configuration)
-        : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
   }
 
   /** The row-level operation itself: scan = the table's pruning scan

@@ -1,12 +1,12 @@
 package graft.sources
 
-import graft.sources.TxnTable.{FileEntry, Manifest}
+import graft.sources.TxnTable.Manifest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** qdr: STREAMING WRITE INTO the transactional table —
   * `df.writeStream.toTable("graft.t")` as a real DSv2
@@ -26,17 +26,15 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * attempt directory, never the committed epoch's (run-scoped dirs are
   * what make the delete safe).
   *
-  * The write path is the distributed stats-inline one ([[TxnRowLevel]]'s
-  * task writer): executor tasks write parquet directly, accumulate
-  * per-file (rows, key/value min-max, bytes), and ship them as commit
-  * messages; the driver folds messages into a DELTA manifest — O(batch)
-  * data AND metadata per epoch, zero post-write scans. The write
-  * declares `RequiresDistributionAndOrdering` ordered by the table key
-  * so every epoch's files land range-clustered and the table keeps
-  * pruning as it grows. A CHECK constraint, when present, is validated
-  * against the epoch's files AS WRITTEN before publish (the qd4
-  * doctrine: one pass over the batch, never a table rescan); a
-  * violating epoch is cleaned and fails the query loudly. */
+  * The write path is the one txn file writer ([[TxnFileWriter]], via
+  * [[TxnRowLevel]]'s task writer): executor tasks write parquet
+  * directly, fold every per-file stat (rows, key ranges, each stats
+  * lane's min/max/count/sum/bloom, typed lanes included) and the CHECK
+  * count, and ship them as commit messages; the driver folds messages
+  * into a DELTA manifest — O(batch) data AND metadata per epoch, zero
+  * post-write scans. An epoch with a CHECK violation is rejected with
+  * the batch write's message, its attempt dir is cleaned, and the
+  * query fails loudly. */
 object TxnStreamSink {
 
   /** Epoch files follow the SOURCE partitioning (one file per input
@@ -60,44 +58,18 @@ object TxnStreamSink {
     private def subFor(epochId: Long) = f"data/stream-$runTag-e$epochId%06d"
 
     override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-        : StreamingDataWriterFactory = {
-      val schema = StructType.fromDDL(base.schemaDdl)
-      def slot(c: String): Int =
-        if (c.isEmpty) -1
-        else {
-          val i = schema.fieldIndex(c)
-          require(schema.fields(i).dataType == LongType,
-            s"stats column $c must be BIGINT for inline task stats")
-          i
-        }
-      val slots = TxnRowLevel.StatSlots(slot(base.keyCol), slot(base.keyCol2),
-        base.statsCols.map(slot))
-      new TxnStreamingWriterFactory(root, runTag, base.schemaDdl, slots)
-    }
+        : StreamingDataWriterFactory =
+      new TxnStreamingWriterFactory(root, runTag,
+        TxnFileWriter.plan(SparkSession.active,
+          StructType.fromDDL(base.schemaDdl), base.keyCol, base.keyCol2,
+          base.checkExpr, base.statsCols, base.statsTypes))
 
     override def commit(epochId: Long,
         messages: Array[WriterCommitMessage]): Unit = {
       val sub = subFor(epochId)
-      val files = messages.collect {
-        case m: TxnRowLevel.TxnFileCommit if m.nRows > 0 =>
-          FileEntry(s"$sub/${m.path}", m.nRows, m.minK, m.maxK,
-            m.minK2, m.maxK2, m.bytes, m.vmin, m.vmax)
-      }.sortBy(_.path).toSeq
+      val files = TxnFileWriter.fileEntries(root, sub, base.checkExpr,
+        messages.toSeq.collect { case s: TxnFileWriter.FileStats => s })
       if (files.isEmpty) return // empty epoch: nothing to publish
-      // CHECK constraint against the rows AS WRITTEN (one pass over the
-      // epoch's own files, never a table rescan)
-      if (base.checkExpr.nonEmpty) {
-        val spark = SparkSession.active
-        val bad = spark.read.schema(StructType.fromDDL(base.schemaDdl))
-          .parquet(files.map(f => s"$root/${f.path}"): _*)
-          .where(!coalesce(expr(base.checkExpr), lit(true))).count()
-        if (bad > 0) {
-          graft.Fs.deleteRecursively(s"$root/$sub")
-          throw new IllegalArgumentException(
-            s"requirement failed: CHECK constraint (${base.checkExpr}) " +
-              s"violated by $bad row(s) in streaming epoch $epochId")
-        }
-      }
       val (_, _, applied) = TxnTable.commitAdds(root, files,
         op = s"stream_${appId.take(8)}_e$epochId",
         txn = Some(appId -> epochId))
@@ -110,16 +82,16 @@ object TxnStreamSink {
       graft.Fs.deleteRecursively(s"$root/${subFor(epochId)}")
   }
 
-  /** Per-epoch delegation onto the batch task writer: same parquet
-    * writer, same inline stats — only the target directory is
-    * epoch-scoped (and run-scoped, see [[TxnStreamingWrite.subFor]]). */
+  /** Per-epoch delegation onto the row-level task writer: same file
+    * writer, same stats — only the target directory is epoch-scoped
+    * (and run-scoped, see [[TxnStreamingWrite.subFor]]). */
   private[sources] class TxnStreamingWriterFactory(root: String,
-      runTag: String, schemaDdl: String, slots: TxnRowLevel.StatSlots)
+      runTag: String, plan: TxnFileWriter.WritePlan)
       extends StreamingDataWriterFactory {
     override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
         : DataWriter[InternalRow] =
       new TxnRowLevel.TxnWriterFactory(
-        f"$root/data/stream-$runTag-e$epochId%06d", schemaDdl, slots)
+        f"$root/data/stream-$runTag-e$epochId%06d", plan)
         .createWriter(partitionId, taskId)
   }
 

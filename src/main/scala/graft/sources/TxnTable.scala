@@ -4,6 +4,7 @@ import java.nio.file.{FileAlreadyExistsException, Files, Paths}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
 
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -61,8 +62,8 @@ object TxnTable {
     * a SECOND column's range when the table is multi-dimensionally
     * clustered (see [[createZordered]]); the full-range sentinels make
     * a missing second dimension prune nothing rather than everything.
-    * `bytes` is the file's on-disk size (captured from
-    * `_metadata.file_size` at write time) — the Iceberg/Delta manifest
+    * `bytes` is the file's on-disk size (taken when the writer closes
+    * the file) — the Iceberg/Delta manifest
     * fact that lets scan PLANNING run entirely from the log, never a
     * filesystem listing. `vmin`/`vmax` carry per-file ranges for the
     * manifest's declared [[Manifest.statsCols]] (parallel by index);
@@ -85,8 +86,8 @@ object TxnTable {
     * trailing zero words, so sparse filters serialize smaller); empty
     * on pre-bloom files (skips nothing, never wrong). */
   /** `vcnt`/`vsum` carry each stats column's per-file NON-NULL count
-    * and exact sum (computed in DECIMAL(38) at write; a sum outside
-    * the Long range stores the vcnt = -1 "unknown" sentinel) — the
+    * and exact sum (folded exactly at write; a sum outside the Long
+    * range stores the vcnt = -1 "unknown" sentinel) — the
     * facts that let `SUM(col)` / `COUNT(col)` answer METADATA-ONLY
     * next to qds's count/min/max. */
   final case class FileEntry(path: String, nRows: Long, minK: Long, maxK: Long,
@@ -113,10 +114,10 @@ object TxnTable {
     * chain the way Delta's `_last_checkpoint` does. */
   /** `checkExpr` (when nonempty) is a SQL boolean every row of every
     * later commit must satisfy — the Delta CHECK-constraint/invariant
-    * shape, enforced at WRITE time by [[writeSnapshot]] against the
-    * rows as WRITTEN (one pass over the incoming batch's files, never
-    * a table rescan) so a violating batch is rejected loudly at commit
-    * rather than discovered downstream.
+    * shape, enforced at WRITE time by every data write's
+    * [[TxnFileWriter]] against the rows as WRITTEN (counted while the
+    * files are written, never a table rescan) so a violating batch is
+    * rejected loudly at commit rather than discovered downstream.
     *
     * `statsCols` declares extra long-typed VALUE columns whose per-file
     * min/max ride each [[FileEntry]] (`vmin`/`vmax`, parallel by
@@ -238,8 +239,8 @@ object TxnTable {
   /** Bloom sizing: 64K bits / 3 hashes keeps the false-positive rate
     * under ~1% up to ~10k distinct values per file; a saturated filter
     * only degrades to "prunes nothing", never to a wrong skip. */
-  private val BloomBits = 65536
-  private val BloomSeeds = 3
+  private[sources] val BloomBits = 65536
+  private[sources] val BloomSeeds = 3
 
   /** The probe's bit positions — the DRIVER-side twin of the writer's
     * `pmod(xxhash64(col, seed), bits)` (same Catalyst expression
@@ -278,7 +279,32 @@ object TxnTable {
       (if (m.identityCol.nonEmpty) Seq("identity-columns")
        else Nil)).sorted
 
-  private def logDir(root: String) = s"$root/_log"
+  /** The one root contract: a table root is a plain local path. The
+    * log's put-if-absent link and head move are java.nio operations, so
+    * a root with a URI scheme (`file:`, `hdfs:`, `s3:`) would split the
+    * table — its log under a relative path, its data wherever Hadoop
+    * resolves the scheme. Checked on every log access and before any
+    * data write. */
+  private val UriScheme = "^[A-Za-z][A-Za-z0-9+.-]*:".r
+  private[sources] def requireLocalRoot(root: String): Unit =
+    require(UriScheme.findPrefixOf(root).isEmpty,
+      s"graft_txn table root must be a local path without a URI scheme: $root")
+
+  /** The manifest's key stats are Longs: a key (or second clustering)
+    * column must be BIGINT. Checked where a table is defined, before
+    * anything is written, and on every write's schema. */
+  private[sources] def requireBigintKeys(schema: org.apache.spark.sql.types.StructType,
+      keyCols: String*): Unit =
+    keyCols.filter(_.nonEmpty).foreach { c =>
+      schema.find(_.name == c).foreach(f =>
+        require(f.dataType == org.apache.spark.sql.types.LongType,
+          s"graft_txn key column $c must be BIGINT, got ${f.dataType.sql}"))
+    }
+
+  private def logDir(root: String) = {
+    requireLocalRoot(root)
+    s"$root/_log"
+  }
   private def logFile(root: String, v: Int) =
     Paths.get(logDir(root), f"v$v%08d.json")
 
@@ -472,7 +498,6 @@ object TxnTable {
     val d = Paths.get(logDir(root))
     if (!Files.exists(d)) Nil
     else {
-      import scala.jdk.CollectionConverters._
       val s = Files.list(d)
       try s.iterator().asScala
         .map(_.getFileName.toString)
@@ -622,20 +647,19 @@ object TxnTable {
     won
   }
 
-  /** Write `df` as version-`version` data files under an
-    * attempt-unique subdir (losers of a commit race delete ONLY their
-    * own attempt; the winner's files are never touched), re-sharded on
-    * the pinned layout, and return the manifest candidate. Per-file
-    * stats come from reading the written files back grouped by
-    * `_metadata.file_path` — footer-scale row groups at these SFs; at
-    * 100 TB the writer task would emit stats inline (as DSv2 commit
-    * messages do in qa7) rather than re-read. The collect is bounded
-    * by the shard count (≤ `shards` + a few for out-of-range keys). */
-  /** Returns the manifest candidate AND the attempt subdir (needed for
-    * lost-race cleanup even when the snapshot wrote zero files). */
-  /** private[sources]: [[GraftTxnCatalog]]'s STAGED CTAS/RTAS writes
-    * data through this seam and publishes with [[commit]]'s CAS only
-    * at `commitStagedChanges` — the two-phase shape StagingTableCatalog
+  /** Write `df` as version-`version` data files under an attempt-unique
+    * subdir (losers of a commit race delete ONLY their own attempt; the
+    * winner's files are never touched), re-sharded on the pinned layout,
+    * and return the manifest candidate AND the attempt subdir (needed for
+    * lost-race cleanup even when the snapshot wrote zero files). The
+    * files go through the one txn file writer ([[TxnFileWriter]]) in a
+    * single job: its tasks write each shard run's parquet file and fold
+    * the per-file stats and the CHECK count from the rows as written, so
+    * nothing is read back; a violating batch deletes its attempt dir and
+    * is rejected before any manifest references it. private[sources]:
+    * [[GraftTxnCatalog]]'s STAGED CTAS/RTAS writes data through this
+    * seam and publishes with [[commit]]'s CAS only at
+    * `commitStagedChanges` — the two-phase shape StagingTableCatalog
     * demands. */
   private[sources] def writeSnapshot(spark: SparkSession, root: String, version: Int,
       op: String, df: DataFrame, keyCol: String, shards: Int,
@@ -644,8 +668,7 @@ object TxnTable {
       checkExpr: String = "", statsCols: Seq[String] = Nil,
       statsTypes: Seq[String] = Nil)
       : (Manifest, String) = {
-    def statTypeOf(i: Int): String =
-      if (statsTypes.length > i) statsTypes(i) else "long"
+    requireLocalRoot(root)
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val sub = f"data/v$version%08d-$attempt"
     val out = s"$root/$sub"
@@ -662,145 +685,22 @@ object TxnTable {
     val shardExpr = shardExprOverride.getOrElse(
       expr(s"greatest(0, least(${shards - 1}, " +
         s"cast($keyCol as decimal(38,0)) * $shards div $layoutDiv))"))
-    // r15 (guide §1.2, VERDICT-r14 item 2): stats/CHECK commits go
-    // through the single-pass stats-inline writer — the write job
-    // itself folds every per-file stat and the CHECK count, so the
-    // whole-data read-back pass these commits paid is gone.
-    // r15 continuation: PLAIN commits with BIGINT key lanes take the
-    // same inline writer — the manifest needs only rows / key min-max /
-    // bytes, which the writer tasks fold for free, so the per-commit
-    // FileFormatWriter machinery (committer temp-dir dance, JobConf
-    // construction with its containing-jar classpath scan, _SUCCESS)
-    // and the driver-side footer fold both drop out. Non-BIGINT key
-    // lanes (none in the current catalog — the manifest key stats are
-    // Longs) keep the committed-write + footer/read-back shape.
-    val inlineKeysOk =
-      df.schema(keyCol).dataType == org.apache.spark.sql.types.LongType &&
-        (keyCol2.isEmpty ||
-          df.schema(keyCol2).dataType == org.apache.spark.sql.types.LongType)
-    if (checkExpr.nonEmpty || statsCols.nonEmpty || inlineKeysOk) {
-      val files = inlineStatsWrite(spark, out, sub, df, keyCol, keyCol2,
-        shards, shardExpr, checkExpr, statsCols, statsTypes)
-      require(files.length <= shards,
-        s"snapshot wrote ${files.length} files for $shards shards")
-      require(files.forall(_.path.startsWith("data/")),
-        s"bad rel paths under $root/")
-      return (Manifest(version, op, keyCol, df.schema.toDDL, shards,
-        layoutDiv, files, keyCol2 = keyCol2, checkExpr = checkExpr,
-        statsCols = statsCols, statsTypes = statsTypes), sub)
-    }
-    df.withColumn("__shard", shardExpr)
+    val plan = TxnFileWriter.plan(spark, df.schema, keyCol, keyCol2,
+      checkExpr, statsCols, statsTypes)
+    val enriched = df.select(df.columns.toIndexedSeq.map(col) :+
+        shardExpr.cast("long").as("__shard"): _*)
       .repartition(shards, col("__shard"))
-      .sortWithinPartitions(keyCol)
-      .write.partitionBy("__shard").parquet(out)
-    val back = spark.read.schema(
-        org.apache.spark.sql.types.StructType.fromDDL(df.schema.toDDL))
-      .parquet(out)
-    val k2 = if (keyCol2.nonEmpty) col(keyCol2) else lit(0L)
-    val vAggs = statsCols.indices.flatMap { i =>
-      Seq(min(col(s"__v$i")).as(s"vmn$i"), max(col(s"__v$i")).as(s"vmx$i"),
-        count(col(s"__v$i")).as(s"vct$i"), // non-null count
-        // exact sum in DECIMAL(38): a value outside the Long range at
-        // fold time stores the "unknown" sentinel instead of wrapping
-        sum(col(s"__v$i").cast("decimal(38,0)")).as(s"vsm$i")) }
-    // per-file bloom positions for every stats column (3 hash seeds):
-    // a bounded collect_set of bit indexes per (file, column, seed) —
-    // at 100 TB the writer task would fold the bitset inline like the
-    // other stats; here the sets ride the same bounded stats collect
-    val bAggs = statsCols.indices.flatMap { i =>
-      (0 until BloomSeeds).map { s =>
-        collect_set(when(col(s"__v$i").isNotNull,
-          pmod(xxhash64(col(s"__v$i"), lit(s.toLong)), lit(BloomBits.toLong))
-            .cast("int"))).as(s"bl${i}_$s") } }
-    // CHECK constraint: validated against the rows AS WRITTEN (the
-    // round-9 advice fix — a non-deterministic batch can no longer pass
-    // a pre-write probe yet persist violating rows); standard SQL
-    // semantics — FALSE violates, NULL passes. r14: the violation count
-    // rides the SAME read-back pass as the per-file stats (one job per
-    // commit instead of two — at any scale the stats pass must touch
-    // every written row anyway, so the CHECK is free there). A
-    // violating batch deletes its own attempt dir and rejects before
-    // any manifest references it, so no file SURVIVES a rejected
-    // commit.
-    val chkCol =
-      if (checkExpr.isEmpty) lit(0L)
-      else when(!coalesce(expr(checkExpr), lit(true)), 1L).otherwise(0L)
-    // r14 fast path (guide §1.2: remove whole passes before tuning
-    // them): with no CHECK expression and no declared stats columns,
-    // everything the manifest needs per file — row count, key min/max,
-    // byte size — is already in the written parquet FOOTERS. Read the
-    // ≤`shards` footers driver-side instead of scheduling a whole-data
-    // read-back job per commit; this is the inline-writer-stats shape
-    // the scaladoc above promises at 100 TB (qa7's DSv2 commit
-    // messages do the same from executor tasks). Footers describe the
-    // rows AS WRITTEN, so the round-9 honesty guarantee is unchanged.
-    // Files with missing/non-INT64/null-bearing key stats fall back to
-    // the read-back pass wholesale.
-    val fastFiles: Option[Seq[FileEntry]] =
-      if (checkExpr.isEmpty && statsCols.isEmpty)
-        footerFileEntries(out, sub, keyCol, keyCol2,
-          ConfCache.sessionConf(spark))
-      else None
-    val files: Seq[FileEntry] = fastFiles.getOrElse {
-    val stats = back
-      .select(Seq(col(keyCol).as("k"), k2.as("k2"),
-        col("_metadata.file_path").as("fp"),
-        col("_metadata.file_size").as("fsz"), chkCol.as("__chk")) ++
-        statsCols.zipWithIndex.map { case (c, i) =>
-          statSourceExpr(c, statTypeOf(i)).as(s"__v$i") }: _*)
-      .groupBy("fp")
-      .agg(count(lit(1)).as("n"),
-        (Seq(min("k").as("mn"), max("k").as("mx"),
-          min("k2").as("mn2"), max("k2").as("mx2"),
-          first("fsz").as("bytes")) ++ vAggs ++ bAggs ++
-          Seq(sum("__chk").as("chk_bad"))): _*)
-      .collect()
-    if (checkExpr.nonEmpty) {
-      val bad = stats.map(_.getAs[Long]("chk_bad")).sum
-      if (bad != 0) {
-        graft.Fs.deleteRecursively(out)
-        throw new IllegalArgumentException(
-          s"requirement failed: CHECK constraint ($checkExpr) violated by " +
-            s"$bad row(s); commit rejected, attempt cleaned")
-      }
-    }
-    stats.map { r =>
-      val full = r.getString(0).stripPrefix("file:").stripPrefix("//")
-      val rel = full.substring(full.indexOf(sub))
-      // an all-null stats column in a file (a lagging producer's batch
-      // on a stats-carrying table) gets the full-range sentinels:
-      // min/max over nulls is null, and a null stat must mean "prunes
-      // nothing", never a crash or a file silently skipped
-      val (mn2, mx2) =
-        if (keyCol2.nonEmpty && !r.isNullAt(4)) (r.getLong(4), r.getLong(5))
-        else (Long.MinValue, Long.MaxValue)
-      val vmins = statsCols.indices.map { i =>
-        if (r.isNullAt(7 + 4 * i)) Long.MinValue else r.getLong(7 + 4 * i) }
-      val vmaxs = statsCols.indices.map { i =>
-        if (r.isNullAt(8 + 4 * i)) Long.MaxValue else r.getLong(8 + 4 * i) }
-      val vcnts0 = statsCols.indices.map(i => r.getLong(9 + 4 * i))
-      val vsums = statsCols.indices.map { i =>
-        if (r.isNullAt(10 + 4 * i)) BigDecimal(0)
-        else BigDecimal(r.getDecimal(10 + 4 * i)) }
-      // a per-file sum outside the Long range stores the "unknown"
-      // sentinel (vcnt = -1): the metadata-agg path then declines
-      val (vcnts, vsumL) = statsCols.indices.map { i =>
-        if (vsums(i).abs > BigDecimal(Long.MaxValue)) (-1L, 0L)
-        else (vcnts0(i), vsums(i).toLongExact)
-      }.unzip
-      val bBase = 7 + 4 * statsCols.size
-      val blooms = statsCols.indices.map { i =>
-        val bits = new java.util.BitSet(BloomBits)
-        (0 until BloomSeeds).foreach { s =>
-          r.getSeq[Int](bBase + BloomSeeds * i + s).foreach(bits.set)
-        }
-        java.util.Base64.getEncoder.encodeToString(bits.toByteArray)
-      }
-      FileEntry(rel, r.getLong(1), r.getLong(2), r.getLong(3), mn2, mx2,
-        r.getLong(6), vmins, vmaxs, bloom = blooms,
-        vcnt = vcnts, vsum = vsumL)
-    }.sortBy(_.path).toSeq
-    }
+      // __shard prefix groups each task's shard runs; within a shard
+      // the rows are in key order
+      .sortWithinPartitions(col("__shard"), col(keyCol))
+    // mapPartitionsUnclean: the closure calls a static method with only
+    // serializable locals captured — the ClosureCleaner ASM scan it
+    // skips was a measurable per-commit driver cost (stack samples)
+    val recs = org.apache.spark.graftbridge.RddBridge
+      .mapPartitionsUnclean(enriched.queryExecution.toRdd) { it =>
+        writeShardRuns(it, out, plan)
+      }.collect()
+    val files = TxnFileWriter.fileEntries(root, sub, checkExpr, recs.toSeq)
     require(files.length <= shards,
       s"snapshot wrote ${files.length} files for $shards shards")
     require(files.forall(_.path.startsWith("data/")), s"bad rel paths under $root/")
@@ -809,282 +709,35 @@ object TxnTable {
       statsTypes = statsTypes), sub)
   }
 
-  /** Per-file manifest stats read from the parquet FOOTERS of a
-    * just-written attempt dir — the zero-Spark-job twin of the
-    * read-back stats pass, usable whenever the manifest needs only
-    * (row count, key min/max, bytes): footer statistics for INT64
-    * columns are exact and are computed by the writer from the rows as
-    * written. Returns None (caller falls back to the read-back pass)
-    * when any file lacks exact non-null INT64 stats for the key
-    * column(s), or when the attempt wrote no files at all. */
-  private def footerFileEntries(out: String, sub: String, keyCol: String,
-      keyCol2: String, hconf: org.apache.hadoop.conf.Configuration)
-      : Option[Seq[FileEntry]] = {
-    import scala.jdk.CollectionConverters._
-    val base = java.nio.file.Paths.get(out)
-    if (!java.nio.file.Files.isDirectory(base)) return None
-    val parts = {
-      val s = java.nio.file.Files.walk(base)
-      try s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-      }.toVector
-      finally s.close()
-    }
-    if (parts.isEmpty) return None
-    val entries: Seq[Option[FileEntry]] = parts.map { p =>
-      val hp = new org.apache.hadoop.fs.Path(p.toString)
-      val reader =
-        // 2-arg open with conf-backed options: the 1-arg overload mints
-        // a fresh Configuration whose first read re-parses the XML
-        // defaults against the whole classpath (~10 ms/footer)
-        try org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, hconf),
-          ConfCache.readOptions(hconf, hp))
-        catch { case _: java.io.IOException => null }
-      if (reader == null) None
-      else try {
-        val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        val n = blocks.map(_.getRowCount).sum
-        def range(name: String): Option[(Long, Long)] = {
-          val perBlock = blocks.map { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == name) match {
-              case Some(c) if c.getPrimitiveType.getPrimitiveTypeName ==
-                  org.apache.parquet.schema.PrimitiveType
-                    .PrimitiveTypeName.INT64 =>
-                val st = c.getStatistics
-                if (st != null && !st.isEmpty && st.isNumNullsSet &&
-                    st.getNumNulls == 0 && st.hasNonNullValue)
-                  Some((st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
-                    st.genericGetMax.asInstanceOf[java.lang.Long].longValue))
-                else None
-              case _ => None
-            }
-          }
-          if (perBlock.isEmpty || perBlock.exists(_.isEmpty)) None
-          else Some((perBlock.flatten.map(_._1).min,
-            perBlock.flatten.map(_._2).max))
-        }
-        for {
-          (mn, mx) <- range(keyCol)
-          (mn2, mx2) <-
-            if (keyCol2.isEmpty) Some((Long.MinValue, Long.MaxValue))
-            else range(keyCol2)
-        } yield {
-          val full = p.toString
-          FileEntry(full.substring(full.indexOf(sub)), n, mn, mx, mn2, mx2,
-            java.nio.file.Files.size(p))
-        }
-      } finally reader.close()
-    }
-    if (entries.exists(_.isEmpty)) None
-    else Some(entries.flatten.sortBy(_.path))
-  }
-
-  /** One written file's inline-folded stats — the task→driver record
-    * of the single-pass stats write ([[inlineStatsWrite]]). `vsum`
-    * rides as exact BigInteger so the driver applies the same
-    * overflow sentinel the read-back's DECIMAL(38) sum did. */
-  private case class InlineFileStats(dir: String, name: String, n: Long,
-      hasK: Boolean, mnK: Long, mxK: Long,
-      hasK2: Boolean, mnK2: Long, mxK2: Long, bytes: Long, chkBad: Long,
-      vmn: Array[Long], vmx: Array[Long], vcnt: Array[Long],
-      vsum: Array[java.math.BigInteger], bloom: Array[Array[Byte]])
-
-  /** The single-pass STATS-INLINE snapshot write (r15, guide §1.2 —
-    * remove the pass; the VERDICT-r14 item 2 shape): stats/CHECK
-    * commits used to pay a Spark write job PLUS a whole-data read-back
-    * aggregation per commit. Here the writer tasks write the parquet
-    * files themselves ([[TxnRowLevel.TxnParquetBuilder]] — Spark's own
-    * InternalRow write support) while folding per-file rows, key and
-    * key2 min/max, per-stats-column min/max / non-null count / exact
-    * BigInteger sum / bloom bits, and the CHECK violation count, all
-    * from the rows AS WRITTEN (the round-9 honesty doctrine: the rows
-    * folded are the very objects handed to the parquet writer). One
-    * job, no read-back, manifest assembled from the task records —
-    * the qa7/TxnRowLevel commit-message shape on the batch write path.
-    *
-    * Equivalences pinned against the old read-back aggregate:
-    *   - stat lanes arrive PRE-ENCODED by [[statSourceExpr]] (same
-    *     expression), so min/max/bloom fold the identical Long;
-    *   - bloom bits replay `pmod(xxhash64(v, seed), bits)` via the
-    *     same XXH64 chain (seed 42, then each child);
-    *   - all-null lanes keep the full-range sentinels; a per-file sum
-    *     outside Long keeps the (-1, 0) "unknown" sentinel;
-    *   - a CHECK violation deletes the attempt dir and throws the
-    *     byte-identical rejection message. */
-  private def inlineStatsWrite(spark: SparkSession, out: String, sub: String,
-      df: DataFrame, keyCol: String, keyCol2: String, shards: Int,
-      shardExpr: org.apache.spark.sql.Column, checkExpr: String,
-      statsCols: Seq[String], statsTypes: Seq[String]): Seq[FileEntry] = {
-    def statTypeOf(i: Int): String =
-      if (statsTypes.length > i) statsTypes(i) else "long"
-    val chkCol =
-      if (checkExpr.isEmpty) lit(0L)
-      else when(!coalesce(expr(checkExpr), lit(true)), 1L).otherwise(0L)
-    val dataCols = df.columns.toIndexedSeq
-    val lanes = statsCols.zipWithIndex.map { case (c, i) =>
-      statSourceExpr(c, statTypeOf(i)).as(s"__v$i") }
-    val enriched = df.select(
-      dataCols.map(col) ++ Seq(shardExpr.cast("long").as("__shard"),
-        chkCol.as("__chk")) ++ lanes: _*)
-      .repartition(shards, col("__shard"))
-      // __shard prefix groups each task's shard runs; within a shard
-      // the key order is exactly the old write's sort
-      .sortWithinPartitions(col("__shard"), col(keyCol))
-    val schemaDdl = df.schema.toDDL
-    val nData = dataCols.length
-    val nV = statsCols.length
-    val keyOrd = df.schema.fieldIndex(keyCol)
-    val key2Ord = if (keyCol2.isEmpty) -1 else df.schema.fieldIndex(keyCol2)
-    val outStr = out
-    // mapPartitionsUnclean: the closure calls a static method with only
-    // local primitives/strings captured — the ClosureCleaner ASM scan
-    // it skips was a measurable per-commit driver cost (stack samples)
-    val recs = org.apache.spark.graftbridge.RddBridge
-      .mapPartitionsUnclean(enriched.queryExecution.toRdd) { it =>
-        writeShardRuns(it, outStr, schemaDdl, nData, keyOrd, key2Ord, nV)
-      }.collect()
-    if (checkExpr.nonEmpty) {
-      val bad = recs.map(_.chkBad).sum
-      if (bad != 0) {
-        graft.Fs.deleteRecursively(out)
-        throw new IllegalArgumentException(
-          s"requirement failed: CHECK constraint ($checkExpr) violated by " +
-            s"$bad row(s); commit rejected, attempt cleaned")
-      }
-    }
-    val longMax = java.math.BigInteger.valueOf(Long.MaxValue)
-    recs.map { r =>
-      val (mn, mx) = if (r.hasK) (r.mnK, r.mxK) else (0L, 0L)
-      val (mn2, mx2) =
-        if (keyCol2.nonEmpty && r.hasK2) (r.mnK2, r.mxK2)
-        else (Long.MinValue, Long.MaxValue)
-      val vmins = (0 until nV).map(i =>
-        if (r.vcnt(i) == 0) Long.MinValue else r.vmn(i))
-      val vmaxs = (0 until nV).map(i =>
-        if (r.vcnt(i) == 0) Long.MaxValue else r.vmx(i))
-      val (vcnts, vsumL) = (0 until nV).map { i =>
-        if (r.vsum(i).abs.compareTo(longMax) > 0) (-1L, 0L)
-        else (r.vcnt(i), r.vsum(i).longValueExact)
-      }.unzip
-      val blooms = (0 until nV).map(i =>
-        java.util.Base64.getEncoder.encodeToString(r.bloom(i)))
-      FileEntry(s"$sub/${r.dir}/${r.name}", r.n, mn, mx, mn2, mx2, r.bytes,
-        vmins, vmaxs, bloom = blooms, vcnt = vcnts, vsum = vsumL)
-    }.sortBy(_.path).toSeq
-  }
-
-  /** The executor side of [[inlineStatsWrite]]: consume one sorted
-    * partition, open one parquet file per `__shard` run (the dir name
-    * is the layout contract — `__shard=N`, Hive's default-partition
-    * name for a null shard), fold the stats from each row, and emit
-    * one record per file. Row layout: data columns 0..nData-1, then
-    * __shard, __chk, __v0..__v{nV-1}. */
+  /** The executor side of [[writeSnapshot]]: consume one sorted
+    * partition (data columns, then `__shard`) and open one file per
+    * `__shard` run — the dir name is the layout contract, `__shard=N`,
+    * Hive's default-partition name for a null shard. */
   private def writeShardRuns(it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      out: String, schemaDdl: String, nData: Int, keyOrd: Int, key2Ord: Int,
-      nV: Int): Iterator[InlineFileStats] = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(schemaDdl)
-    val shardOrd = nData; val chkOrd = nData + 1; val vOrd0 = nData + 2
-    val conf = {
-      // clone of a once-loaded defaults template: a bare
-      // `new Configuration()` re-parses the XML defaults per TASK
-      val c = ConfCache.defaultsCopy()
-      org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-        .setSchema(schema, c)
-      val sqlc = org.apache.spark.sql.internal.SQLConf
-      Seq(sqlc.PARQUET_WRITE_LEGACY_FORMAT,
-        sqlc.PARQUET_OUTPUT_TIMESTAMP_TYPE,
-        sqlc.PARQUET_FIELD_ID_WRITE_ENABLED,
-        sqlc.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE,
-        sqlc.PARQUET_REBASE_MODE_IN_WRITE,
-        sqlc.PARQUET_INT96_REBASE_MODE_IN_WRITE)
-        .foreach(e => c.set(e.key, e.defaultValueString))
-      c
-    }
-    val pid = org.apache.spark.TaskContext.getPartitionId()
+      out: String, plan: TxnFileWriter.WritePlan)
+      : Iterator[TxnFileWriter.FileStats] = {
+    val w = new TxnFileWriter.Writer(plan, out)
+    val shardOrd = w.schema.length
     val project = org.apache.spark.sql.catalyst.ProjectingInternalRow(
-      schema, 0 until nData)
-    val recs = scala.collection.mutable.ArrayBuffer[InlineFileStats]()
-    var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = null
-    var hPath: org.apache.hadoop.fs.Path = null
-    var dir = ""; var name = ""
+      w.schema, 0 until shardOrd)
+    val pid = org.apache.spark.TaskContext.getPartitionId()
+    val recs = scala.collection.mutable.ArrayBuffer[TxnFileWriter.FileStats]()
     var curShard = 0L; var curNull = false
-    var n = 0L; var chkBad = 0L
-    var hasK = false; var mnK = 0L; var mxK = 0L
-    var hasK2 = false; var mnK2 = 0L; var mxK2 = 0L
-    var vmn: Array[Long] = null; var vmx: Array[Long] = null
-    var vcnt: Array[Long] = null; var vsum: Array[java.math.BigInteger] = null
-    var bloom: Array[java.util.BitSet] = null
-    def openFile(shardNull: Boolean, shard: Long): Unit = {
-      curNull = shardNull; curShard = shard
-      dir =
-        if (shardNull) "__shard=__HIVE_DEFAULT_PARTITION__"
-        else s"__shard=$shard"
-      name = f"part-$pid%05d-${java.util.UUID.randomUUID().toString.take(8)}.parquet"
-      hPath = new org.apache.hadoop.fs.Path(s"$out/$dir/$name")
-      writer = new TxnRowLevel.TxnParquetBuilder(hPath, conf).build()
-      n = 0L; chkBad = 0L; hasK = false; hasK2 = false
-      vmn = Array.fill(nV)(Long.MaxValue); vmx = Array.fill(nV)(Long.MinValue)
-      vcnt = Array.fill(nV)(0L)
-      vsum = Array.fill(nV)(java.math.BigInteger.ZERO)
-      bloom = Array.fill(nV)(new java.util.BitSet(BloomBits))
-    }
-    def roll(): Unit = {
-      writer.close()
-      val bytes = hPath.getFileSystem(conf).getFileStatus(hPath).getLen
-      recs += InlineFileStats(dir, name, n, hasK, mnK, mxK,
-        hasK2, mnK2, mxK2, bytes, chkBad, vmn, vmx, vcnt, vsum,
-        bloom.map(_.toByteArray))
-      writer = null
-    }
     while (it.hasNext) {
       val row = it.next()
       val sNull = row.isNullAt(shardOrd)
       val s = if (sNull) 0L else row.getLong(shardOrd)
-      if (writer == null || sNull != curNull || s != curShard) {
-        if (writer != null) roll()
-        openFile(sNull, s)
-      }
-      if (!row.isNullAt(keyOrd)) {
-        val k = row.getLong(keyOrd)
-        if (!hasK) { hasK = true; mnK = k; mxK = k }
-        else { if (k < mnK) mnK = k; if (k > mxK) mxK = k }
-      }
-      if (key2Ord >= 0 && !row.isNullAt(key2Ord)) {
-        val k2 = row.getLong(key2Ord)
-        if (!hasK2) { hasK2 = true; mnK2 = k2; mxK2 = k2 }
-        else { if (k2 < mnK2) mnK2 = k2; if (k2 > mxK2) mxK2 = k2 }
-      }
-      chkBad += row.getLong(chkOrd)
-      var i = 0
-      while (i < nV) {
-        if (!row.isNullAt(vOrd0 + i)) {
-          val v = row.getLong(vOrd0 + i)
-          if (v < vmn(i)) vmn(i) = v
-          if (v > vmx(i)) vmx(i) = v
-          vcnt(i) += 1
-          vsum(i) = vsum(i).add(java.math.BigInteger.valueOf(v))
-          // the writer's SQL twin: pmod(xxhash64(__v, seed), bits) —
-          // XxHash64 folds children left-to-right from seed 42
-          var sd = 0
-          while (sd < BloomSeeds) {
-            val h1 = org.apache.spark.sql.catalyst.expressions.XXH64
-              .hashLong(v, 42L)
-            val h = org.apache.spark.sql.catalyst.expressions.XXH64
-              .hashLong(sd.toLong, h1)
-            bloom(i).set(((h % BloomBits + BloomBits) % BloomBits).toInt)
-            sd += 1
-          }
-        }
-        i += 1
+      if (!w.isOpen || sNull != curNull || s != curShard) {
+        if (w.isOpen) recs += w.close()
+        curNull = sNull; curShard = s
+        val dir =
+          if (sNull) "__shard=__HIVE_DEFAULT_PARTITION__" else s"__shard=$s"
+        w.open(s"$dir/${TxnFileWriter.partName(pid)}")
       }
       project.project(row)
-      writer.write(project)
-      n += 1
+      w.write(project)
     }
-    if (writer != null) roll()
+    if (w.isOpen) recs += w.close()
     recs.iterator
   }
 
@@ -1370,13 +1023,6 @@ object TxnTable {
       .drop("__fpraw")
   }
 
-  /** One file's deletion vector as ((file, position)) rows. Shared
-    * with the SQL connector's DV-applying scan ([[TxnDvBatch]]). */
-  private[sources] def readDvSidecar(spark: SparkSession, root: String,
-      f: FileEntry): DataFrame =
-    spark.read.schema("idx BIGINT").parquet(resolvePath(root, f.dv))
-      .select(lit(f.path).as("__fp"), col("idx").as("__idx"))
-
   /** One file's deletion-vector positions read DRIVER-SIDE straight
     * from the tiny sidecar parquet — no Spark job, no Catalyst plan.
     * r15 (guide §1.2, DriverProfile evidence): every MoR statement
@@ -1385,9 +1031,8 @@ object TxnTable {
     * PLANNING time (qec: ~3 s/rep of physical planning). The positions
     * were always collected (or broadcast) to the driver anyway, so a
     * direct footer-to-page read changes the bound nothing — it only
-    * removes the per-statement plan + job. None when the sidecar dir
-    * is not locally walkable (non-local FS) — callers fall back to the
-    * Spark-side read, mirroring parquetRowCount's convention. */
+    * removes the per-statement plan + job. Shared with the SQL
+    * connector's DV-applying scan ([[TxnDvBatch]]). */
   /** Decoded deletion-vector positions keyed on the sidecar dir's
     * identity (r15 continuation, guide §1.2): sidecar dirs live under
     * attempt-unique `data/vNNNNNNNN-<uuid>` subtrees and are never
@@ -1405,22 +1050,12 @@ object TxnTable {
     }
 
   private[sources] def readDvPositions(root: String, f: FileEntry,
-      hconf: org.apache.hadoop.conf.Configuration): Option[Array[Long]] = {
-    import scala.jdk.CollectionConverters._
-    val base = java.nio.file.Paths.get(resolvePath(root, f.dv))
-    if (!java.nio.file.Files.isDirectory(base)) return None
-    val parts = {
-      val s = java.nio.file.Files.walk(base)
-      try s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-      }.toVector
-      finally s.close()
-    }
-    val key = (base.toString, parts.length,
-      parts.map(java.nio.file.Files.size).sum)
+      hconf: org.apache.hadoop.conf.Configuration): Array[Long] = {
+    val dir = resolvePath(root, f.dv)
+    val parts = parquetParts(dir)
+    val key = (dir, parts.length, parts.map(java.nio.file.Files.size).sum)
     val cached = dvPosCache.synchronized(dvPosCache.get(key))
-    if (cached != null) return Some(cached)
+    if (cached != null) return cached
     val buf = Array.newBuilder[Long]
     parts.foreach { p =>
       // low-level page read with conf-backed options:
@@ -1449,73 +1084,59 @@ object TxnTable {
     }
     val pos = buf.result()
     dvPosCache.synchronized(dvPosCache.put(key, pos))
-    Some(pos)
+    pos
   }
 
   /** All the given dv-carrying files' (file, position) rows as ONE
-    * frame — a driver-built LocalRelation when every sidecar reads
-    * locally (the common case: no plan-time union of N parquet scans,
-    * no job to build the broadcast side), else the original per-file
-    * Spark union. Row set is identical either way. */
+    * driver-built LocalRelation: no plan-time union of N parquet scans,
+    * no job to build the broadcast side. */
   private[sources] def dvPositionsDf(spark: SparkSession, root: String,
       dvd: Seq[FileEntry]): DataFrame = {
     val hconf = ConfCache.sessionConf(spark)
-    val local = dvd.map(f => readDvPositions(root, f, hconf).map(f.path -> _))
-    if (local.forall(_.isDefined)) {
-      import spark.implicits._
-      local.flatten.flatMap { case (p, pos) => pos.map(p -> _) }
-        .toDF("__fp", "__idx")
-    } else dvd.map(f => readDvSidecar(spark, root, f))
-      .reduce(_ unionByName _)
+    import spark.implicits._
+    dvd.flatMap(f => readDvPositions(root, f, hconf).map(f.path -> _))
+      .toDF("__fp", "__idx")
   }
 
   /** Write a DML commit's CHANGE FILE set under the attempt dir (the
-    * `_cdf` name keeps it invisible to the snapshot read-back — Spark
-    * file listings skip underscore-prefixed children) and return the
+    * `_cdf` name marks it as no snapshot data file — Spark file
+    * listings skip underscore-prefixed children) and return the
     * row count (a parquet footer fold, no data read). A lost commit
     * race cleans the attempt dir and the change files with it. */
   private def writeCdf(spark: SparkSession, root: String, sub: String,
       changes: DataFrame): Long = {
     val path = s"$root/$sub/_cdf"
     changes.write.parquet(path)
-    // r14: the count really IS a footer fold now — the old
-    // `spark.read.parquet(path).count()` spelled the same intent but
-    // paid a schema-inference footer job plus a count job per DML
-    // commit; summing the block row counts driver-side costs neither.
-    // r15 (ADVICE): the fold only understands LOCAL directories; on a
-    // non-local root (hdfs://, s3://…) it falls back to the Spark-side
-    // count instead of silently recording cdfRows = 0 — mirroring
-    // footerFileEntries' None-fallback convention.
     parquetRowCount(path, ConfCache.sessionConf(spark))
-      .getOrElse(spark.read.schema(changes.schema).parquet(path).count())
   }
 
   /** Total row count of a just-written parquet directory from its file
     * FOOTERS — a driver-side metadata fold (no Spark job, no data
-    * pages). Only used on attempt dirs this writer itself produced.
-    * None when `dir` is not a local directory (the java.nio walk
-    * cannot see it) — callers must then count through Spark. */
+    * pages). Only used on attempt dirs this writer itself produced. */
   private[sources] def parquetRowCount(dir: String,
-      hconf: org.apache.hadoop.conf.Configuration): Option[Long] = {
-    import scala.jdk.CollectionConverters._
-    val base = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(base)) return None
-    val parts = {
-      val s = java.nio.file.Files.walk(base)
-      try s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-      }.toVector
-      finally s.close()
-    }
-    Some(parts.map { p =>
+      hconf: org.apache.hadoop.conf.Configuration): Long =
+    parquetParts(dir).map { p =>
       val hp = new org.apache.hadoop.fs.Path(p.toString)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, hconf),
         ConfCache.readOptions(hconf, hp))
       try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
       finally r.close()
-    }.sum)
+    }.sum
+
+  /** The part files of a parquet directory the table wrote — the one
+    * walk behind every driver-side footer read. A missing directory is
+    * an error, never an empty result: under a local root, every dir a
+    * manifest or a just-finished write names exists. */
+  private def parquetParts(dir: String): Vector[java.nio.file.Path] = {
+    val base = Paths.get(dir)
+    require(Files.isDirectory(base), s"missing parquet directory $dir")
+    val s = Files.walk(base)
+    try s.iterator().asScala.filter { p =>
+      val n = p.getFileName.toString
+      n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+    }.toVector
+    finally s.close()
   }
 
   /** Present a physical-schema frame under the manifest's LOGICAL
@@ -1554,6 +1175,8 @@ object TxnTable {
     * the manifest stats are selective for [[prunedRead]]. */
   def create(spark: SparkSession, root: String, df: DataFrame,
       keyCol: String, shards: Int): Manifest = {
+    requireLocalRoot(root)
+    requireBigintKeys(df.schema, keyCol)
     graft.Fs.deleteRecursively(root)
     val mx = df.agg(max(col(keyCol))).head().getLong(0)
     val (m0, _) = writeSnapshot(spark, root, 0, "create", df, keyCol, shards, mx + 1)
@@ -1589,6 +1212,8 @@ object TxnTable {
     * but the 2D pruning seam never silently degrades to sentinels). */
   def createZordered(spark: SparkSession, root: String, df: DataFrame,
       xCol: String, yCol: String, bits: Int, shards: Int): Manifest = {
+    requireLocalRoot(root)
+    requireBigintKeys(df.schema, xCol, yCol)
     graft.Fs.deleteRecursively(root)
     val r = df.agg(max(col(xCol)), max(col(yCol))).head() // 1-row probe (qaq)
     val (mxX, mxY) = (r.getLong(0), r.getLong(1))
@@ -1635,6 +1260,9 @@ object TxnTable {
       statsCols: Seq[String] = Nil,
       statsTypes: Seq[String] = Nil,
       identityCol: String = "", identityStart: Long = 0L): Manifest = {
+    requireLocalRoot(root)
+    requireBigintKeys(
+      org.apache.spark.sql.types.StructType.fromDDL(schemaDdl), keyCol)
     graft.Fs.deleteRecursively(root)
     require(statsTypes.isEmpty || statsTypes.length == statsCols.length,
       s"stats_types (${statsTypes.length}) must parallel stats_cols " +

@@ -572,4 +572,114 @@ class TxnCatalogSpec extends SparkSpec {
     assert(sql("SELECT sum(v) FROM graft.spec_both VERSION AS OF 1")
       .head().getLong(0) == 0L)
   }
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  private def whRoot(t: String) = graft.Fs.scratch("graft_txn_catalog_wh") + s"/$t"
+
+  private def dataDirs(root: String): Set[String] =
+    Option(new java.io.File(s"$root/data").list()).map(_.toSet).getOrElse(Set.empty)
+
+  /** Drain `src` into `dst` as one AvailableNow streaming run. */
+  private def runSink(src: String, dst: String, ckpt: String): Unit = {
+    val q = spark.readStream.table(src)
+      .writeStream.option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .toTable(dst)
+    try q.awaitTermination() finally q.stop()
+  }
+
+  test("key lanes must be BIGINT: CREATE TABLE and CTAS refuse an INT key before writing") {
+    sql("DROP TABLE IF EXISTS graft.spec_intkey")
+    val e1 = intercept[Exception] {
+      sql("""CREATE TABLE graft.spec_intkey (k INT, v BIGINT) USING graft_txn
+             TBLPROPERTIES ('key'='k','shards'='2','layout_div'='10')""")
+    }
+    assert(messages(e1).exists(_.contains("key column k must be BIGINT")),
+      messages(e1))
+    assert(!spark.catalog.tableExists("graft.spec_intkey"))
+    val e2 = intercept[Exception] {
+      sql("""CREATE TABLE graft.spec_intkey USING graft_txn
+             TBLPROPERTIES ('key'='k','shards'='2','layout_div'='10')
+             AS SELECT CAST(id AS INT) AS k, id AS v FROM range(10)""")
+    }
+    assert(messages(e2).exists(_.contains("key column k must be BIGINT")),
+      messages(e2))
+    assert(!new java.io.File(whRoot("spec_intkey") + "/data").exists,
+      "a refused CTAS must not write data")
+  }
+
+  test("CHECK binds every write: wide UPDATE, MERGE and a stream epoch are rejected") {
+    val ckpt = graft.Fs.scratch("spec_chk_ckpt")
+    graft.Fs.deleteRecursively(ckpt)
+    sql("DROP TABLE IF EXISTS graft.spec_chk")
+    sql("DROP TABLE IF EXISTS graft.spec_chk_src")
+    sql("""CREATE TABLE graft.spec_chk (k BIGINT, v BIGINT) USING graft_txn
+           TBLPROPERTIES ('key'='k','shards'='4','layout_div'='100',
+                          'check'='v >= 0')""")
+    sql("INSERT INTO graft.spec_chk SELECT id, id FROM range(100)")
+    val root = whRoot("spec_chk")
+    val (v0, dirs0) = (TxnTable.latestVersion(root), dataDirs(root))
+    def rejected(what: String, bad: Int)(stmt: => Unit): Unit = {
+      val e = intercept[Exception](stmt)
+      assert(messages(e).exists(_.contains(s"CHECK constraint (v >= 0) " +
+        s"violated by $bad row(s); commit rejected, attempt cleaned")),
+        s"$what: ${messages(e)}")
+      assert(TxnTable.latestVersion(root) == v0, s"$what moved the head")
+      assert(dataDirs(root) == dirs0, s"$what left an attempt dir")
+    }
+    // 50 % selective: the copy-on-write rewrite, not the MoR route
+    rejected("UPDATE", 3)(sql("UPDATE graft.spec_chk SET v = v - 3 WHERE k < 50"))
+    rejected("MERGE", 4)(sql("""
+      MERGE INTO graft.spec_chk t
+      USING (SELECT id AS k, -1L AS v FROM range(98, 102)) s ON t.k = s.k
+      WHEN MATCHED THEN UPDATE SET v = s.v
+      WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)"""))
+    sql("""CREATE TABLE graft.spec_chk_src (k BIGINT, v BIGINT) USING graft_txn
+           TBLPROPERTIES ('key'='k','shards'='2','layout_div'='1000')""")
+    sql("INSERT INTO graft.spec_chk_src SELECT id + 200, 1 - id FROM range(4)")
+    rejected("stream epoch", 2)(runSink("graft.spec_chk_src", "graft.spec_chk", ckpt))
+    assert(sql("SELECT count(1), sum(v) FROM graft.spec_chk").head() ===
+      org.apache.spark.sql.Row(100L, 4950L))
+  }
+
+  test("UPDATE, MERGE and stream epochs write the batch path's full per-file stats") {
+    val ckpt = graft.Fs.scratch("spec_twin_ckpt")
+    graft.Fs.deleteRecursively(ckpt)
+    sql("DROP TABLE IF EXISTS graft.spec_twin")
+    sql("DROP TABLE IF EXISTS graft.spec_twin_src")
+    sql("""CREATE TABLE graft.spec_twin (k BIGINT, t BIGINT, s STRING) USING graft_txn
+           TBLPROPERTIES ('key'='k','shards'='4','layout_div'='400',
+                          'stats_cols'='t,s','stats_types'='long,string')""")
+    sql("""INSERT INTO graft.spec_twin SELECT id,
+             CASE WHEN id % 7 = 0 THEN NULL ELSE id * 13 % 997 END,
+             concat('doc-', id) FROM range(400)""")
+    val root = whRoot("spec_twin")
+    def twinOfNewFiles(what: String): Unit = {
+      val v = TxnTable.latestVersion(root)
+      val prev = TxnTable.readManifest(root, v - 1).files.map(_.path).toSet
+      val m = TxnTable.readManifest(root, v)
+      val added = m.files.filterNot(f => prev(f.path))
+      assert(added.nonEmpty && added.forall(_.bloom.length == 2), s"$what: $added")
+      TxnStatsTwin.assertMatches(spark, root, m, added)
+    }
+    // 50 % selective: the copy-on-write rewrite, not the MoR route
+    sql("UPDATE graft.spec_twin SET t = t + 1, s = concat(s, '-u') WHERE k < 200")
+    twinOfNewFiles("UPDATE")
+    sql("""MERGE INTO graft.spec_twin t
+           USING (SELECT id * 3 AS k, id AS t, concat('m-', id) AS s
+                  FROM range(200)) s ON t.k = s.k
+           WHEN MATCHED THEN UPDATE SET t = s.t, s = s.s
+           WHEN NOT MATCHED THEN INSERT (k, t, s) VALUES (s.k, s.t, s.s)""")
+    twinOfNewFiles("MERGE")
+    // a typed (string) stats lane streams too
+    sql("""CREATE TABLE graft.spec_twin_src (k BIGINT, t BIGINT, s STRING) USING graft_txn
+           TBLPROPERTIES ('key'='k','shards'='2','layout_div'='1000')""")
+    sql("""INSERT INTO graft.spec_twin_src SELECT id + 1000, id,
+             CASE WHEN id % 5 = 0 THEN NULL ELSE concat('e-', id) END
+           FROM range(300)""")
+    runSink("graft.spec_twin_src", "graft.spec_twin", ckpt)
+    twinOfNewFiles("stream epoch")
+  }
 }

@@ -386,57 +386,10 @@ class TxnTableSpec extends SparkSpec {
     val m = TxnTable.readManifest(r, TxnTable.latestVersion(r))
     val added = m.files
     assert(added.nonEmpty && added.forall(_.bloom.length == 2))
-    // the DECLARATIVE twin: the pre-r15 read-back aggregate, replayed
-    // over the very files the inline writer produced — every stat the
-    // manifest carries must match it bit-for-bit
-    val back = spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl))
-      .parquet(added.map(f => s"$r/${f.path}"): _*)
-    val lanes = Seq(TxnTable.statSourceExpr("t", "long").as("__v0"),
-      TxnTable.statSourceExpr("s", "string").as("__v1"))
-    val bloomAggs = (0 until 2).flatMap { i =>
-      (0 until 3).map { sd => // 3 seeds × 65536 bits (the writer's sizing)
-        collect_set(when(col(s"__v$i").isNotNull,
-          pmod(xxhash64(col(s"__v$i"), lit(sd.toLong)), lit(65536L))
-            .cast("int"))).as(s"bl${i}_$sd") } }
-    val vAggs = (0 until 2).flatMap { i =>
-      Seq(min(col(s"__v$i")).as(s"vmn$i"), max(col(s"__v$i")).as(s"vmx$i"),
-        count(col(s"__v$i")).as(s"vct$i"),
-        sum(col(s"__v$i").cast("decimal(38,0)")).as(s"vsm$i")) }
-    val twin = back
-      .select(Seq(col("k"), col("_metadata.file_path").as("fp")) ++ lanes: _*)
-      .groupBy("fp")
-      .agg(count(lit(1)).as("n"),
-        (Seq(min("k").as("mn"), max("k").as("mx")) ++ vAggs ++ bloomAggs): _*)
-      .collect()
-      .map(row => {
-        val full = row.getString(0).stripPrefix("file:").stripPrefix("//")
-        full.substring(full.indexOf("data/")) -> row
-      }).toMap
-    assert(twin.keySet == added.map(_.path).toSet, s"file sets differ: $twin")
-    added.foreach { f =>
-      val row = twin(f.path)
-      assert(f.nRows == row.getAs[Long]("n") &&
-        f.minK == row.getAs[Long]("mn") && f.maxK == row.getAs[Long]("mx"),
-        s"row/key stats drift on ${f.path}: $f vs $row")
-      (0 until 2).foreach { i =>
-        // the read-back's own post-agg rule: a per-file sum outside the
-        // Long range declines to the (-1, 0) "unknown" sentinel
-        val sum = BigDecimal(row.getAs[java.math.BigDecimal](s"vsm$i"))
-        val (expCnt, expSum) =
-          if (sum.abs > BigDecimal(Long.MaxValue)) (-1L, 0L)
-          else (row.getAs[Long](s"vct$i"), sum.toLongExact)
-        assert(f.vmin(i) == row.getAs[Long](s"vmn$i") &&
-          f.vmax(i) == row.getAs[Long](s"vmx$i") &&
-          f.vcnt(i) == expCnt && f.vsum(i) == expSum,
-          s"lane $i stats drift on ${f.path}: $f vs $row")
-        val bits = new java.util.BitSet(65536)
-        (0 until 3).foreach(sd =>
-          row.getAs[scala.collection.Seq[Int]](s"bl${i}_$sd").foreach(bits.set))
-        val b64 = java.util.Base64.getEncoder.encodeToString(bits.toByteArray)
-        assert(f.bloom(i) == b64, s"bloom $i drift on ${f.path}")
-      }
-    }
+    // the DECLARATIVE twin: the read-back aggregate, replayed over the
+    // very files the writer produced — every stat the manifest carries
+    // must match it bit-for-bit
+    TxnStatsTwin.assertMatches(spark, r, m, added)
     // CHECK enforcement: the violating batch is counted exactly,
     // rejected with the same message, and its attempt dir is cleaned
     val before = TxnTable.latestVersion(r)
@@ -956,5 +909,18 @@ class TxnTableSpec extends SparkSpec {
         sum(when(col("o_orderkey") % 13 === 0, 5L).otherwise(0L))).head()
     assert(row.getAs[Long]("sum_cents") ==
       base.getLong(0) + base.getLong(1) + base.getLong(2))
+  }
+
+  test("one txn file writer: the parquet builder and write schema live in one file") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    def filesWith(needle: String): Seq[String] =
+      Files.walk(Paths.get("src/main")).iterator().asScala
+        .filter(p => Files.isRegularFile(p))
+        .filter(p => Files.readString(p).contains(needle))
+        .map(_.toString).toSeq
+    val writer = Seq(Paths.get("src/main/scala/graft/sources/TxnFileWriter.scala").toString)
+    assert(filesWith("new TxnParquetBuilder" + "(") == writer)
+    assert(filesWith("ParquetWriteSupport" + ".setSchema") == writer)
   }
 }

@@ -128,19 +128,32 @@ class RefsAndEvolutionSpec extends SparkSpec {
       === org.apache.spark.sql.Row(120L, 140L))
   }
 
-  test("parquetRowCount: None on a non-local/missing dir, Some on a real one") {
+  test("local roots: a missing dir throws; a scheme root is refused") {
     val hconf = spark.sessionState.newHadoopConf()
-    // non-walkable paths (missing dir, non-file scheme) must decline so
-    // writeCdf falls back to the Spark count — never a silent 0
-    assert(TxnTable.parquetRowCount(
-      "/no/such/dir/for/graft/cdf", hconf).isEmpty)
-    assert(TxnTable.parquetRowCount(
-      "hdfs://nn/warehouse/t/_cdf", hconf).isEmpty)
+    // the footer fold reads only dirs the table wrote: a missing one is
+    // an error, never a silent 0
+    intercept[IllegalArgumentException](
+      TxnTable.parquetRowCount("/no/such/dir/for/graft/cdf", hconf))
     val d = graft.Fs.scratch("graft_prc_spec")
     graft.Fs.deleteRecursively(d)
     spark.range(123).repartition(2).write.parquet(d)
-    assert(TxnTable.parquetRowCount(d, hconf).contains(123L))
+    assert(TxnTable.parquetRowCount(d, hconf) == 123L)
     graft.Fs.deleteRecursively(d)
+    // a root with a URI scheme fails before anything is written under it
+    val local = graft.Fs.scratch("graft_scheme_spec")
+    graft.Fs.deleteRecursively(local)
+    val df = spark.range(10).select(col("id").as("k"), col("id").as("v"))
+    Seq(s"file:$local", "hdfs://nn/warehouse/t").foreach { r =>
+      Seq(
+        () => TxnTable.create(spark, r, df, "k", 2),
+        () => TxnTable.createEmpty(spark, r, "k BIGINT, v BIGINT", "k", 2, 10L),
+        () => TxnTable.latestVersion(r)).foreach { op =>
+        val e = intercept[IllegalArgumentException](op())
+        assert(e.getMessage.contains("must be a local path"), e.getMessage)
+      }
+    }
+    assert(!new java.io.File(local).exists && !new java.io.File("file:").exists,
+      "a refused root must leave nothing behind")
   }
 
   test("branch-table addressing: real tables win; missing branches refuse") {

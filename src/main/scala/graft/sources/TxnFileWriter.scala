@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.sources.TxnTable.{BloomBits, BloomSeeds, FileEntry}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression, UnsafeProjection, XXH64}
 import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
@@ -12,9 +12,10 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.functions.{coalesce, expr, lit}
 import org.apache.spark.sql.types.StructType
 
-/** The ONE executor-side writer behind every txn data file: the batch
-  * snapshot write ([[TxnTable.writeSnapshot]]), the SQL row-level
-  * replace ([[TxnRowLevel]]) and the streaming sink ([[TxnStreamSink]]).
+/** The ONE writer behind every txn file: data files (the batch
+  * snapshot write [[TxnTable.writeSnapshot]], the SQL row-level replace
+  * [[TxnRowLevel]], the streaming sink [[TxnStreamSink]]), change-data-
+  * feed change files and deletion-vector sidecars.
   *
   * A task writes parquet through Spark's own InternalRow write support
   * and folds each file's manifest stats from the rows AS WRITTEN (the
@@ -27,7 +28,9 @@ import org.apache.spark.sql.types.StructType
   * ships to the driver as a [[FileStats]], and [[fileEntries]] turns a
   * write's messages into manifest [[FileEntry]]s, rejecting the write
   * when any row violated the CHECK (standard SQL: FALSE violates, NULL
-  * passes). */
+  * passes). Change files and sidecars use a [[bare]] plan: no key, no
+  * lanes, only the row count. Batch writes go through [[write]]; the
+  * DSv2 writers drive a [[Writer]] per task themselves. */
 private[sources] object TxnFileWriter {
 
   /** One written file's stats — the task→driver commit message of
@@ -43,9 +46,9 @@ private[sources] object TxnFileWriter {
       extends WriterCommitMessage
 
   /** What every file of one write folds: the write schema, the key
-    * ordinals, and `nV` stats lanes (then the CHECK violation flag, when
-    * the table has a CHECK) as expressions bound to the schema's
-    * ordinals. */
+    * ordinals (-1 = no such column), and `nV` stats lanes (then the
+    * CHECK violation flag, when the table has a CHECK) as expressions
+    * bound to the schema's ordinals. */
   final case class WritePlan(schemaDdl: String, keyOrd: Int, key2Ord: Int,
       nV: Int, lanes: Seq[Expression])
 
@@ -87,6 +90,11 @@ private[sources] object TxnFileWriter {
       if (keyCol2.isEmpty) -1 else schema.fieldIndex(keyCol2),
       statsCols.length, lanes)
   }
+
+  /** A plan that folds only rows: change files and sidecars, whose
+    * manifest reference needs no key range or lanes. */
+  def bare(schema: StructType): WritePlan =
+    WritePlan(schema.toDDL, -1, -1, 0, Nil)
 
   /** A unique part-file name for the task writing partition `pid`. */
   def partName(pid: Int): String =
@@ -151,7 +159,7 @@ private[sources] object TxnFileWriter {
     }
 
     def write(row: InternalRow): Unit = {
-      if (!row.isNullAt(plan.keyOrd)) {
+      if (plan.keyOrd >= 0 && !row.isNullAt(plan.keyOrd)) {
         val k = row.getLong(plan.keyOrd)
         if (!hasK) { hasK = true; mnK = k; mxK = k }
         else { if (k < mnK) mnK = k; if (k > mxK) mxK = k }
@@ -204,6 +212,60 @@ private[sources] object TxnFileWriter {
         writer = null
         path.getFileSystem(conf).delete(path, false)
       }
+  }
+
+  /** The driver call of every batch txn file write: ONE job writes `df`
+    * under `outDir` and returns each written file's stats. `df` holds
+    * the plan's columns, then, when `runCol` is set, one trailing BIGINT
+    * run column: a partition opens one file per run of equal values
+    * under `runCol=N/` (Hive's default-partition name for a null) — the
+    * dir name is the layout contract (`__shard=N` data, `__fid=N`
+    * sidecars), so the caller partitions and sorts each run contiguous.
+    * Without `runCol` each non-empty partition writes one file directly
+    * under `outDir`. */
+  def write(df: DataFrame, outDir: String, plan: WritePlan,
+      runCol: String = ""): Seq[FileStats] = {
+    // mapPartitionsUnclean: the closure calls a static method with only
+    // serializable locals captured — the ClosureCleaner ASM scan it
+    // skips was a measurable per-commit driver cost (stack samples)
+    org.apache.spark.graftbridge.RddBridge
+      .mapPartitionsUnclean(df.queryExecution.toRdd) { it =>
+        writeRuns(it, outDir, plan, runCol)
+      }.collect().toSeq
+  }
+
+  /** The executor side of [[write]]: consume one partition. */
+  private def writeRuns(it: Iterator[InternalRow], outDir: String,
+      plan: WritePlan, runCol: String): Iterator[FileStats] = {
+    val w = new Writer(plan, outDir)
+    val pid = org.apache.spark.TaskContext.getPartitionId()
+    val recs = scala.collection.mutable.ArrayBuffer[FileStats]()
+    if (runCol.isEmpty) {
+      while (it.hasNext) {
+        if (!w.isOpen) w.open(partName(pid))
+        w.write(it.next())
+      }
+    } else {
+      val runOrd = w.schema.length
+      val project = org.apache.spark.sql.catalyst.ProjectingInternalRow(
+        w.schema, 0 until runOrd)
+      var cur = 0L; var curNull = false
+      while (it.hasNext) {
+        val row = it.next()
+        val rNull = row.isNullAt(runOrd)
+        val r = if (rNull) 0L else row.getLong(runOrd)
+        if (!w.isOpen || rNull != curNull || r != cur) {
+          if (w.isOpen) recs += w.close()
+          curNull = rNull; cur = r
+          val dir = s"$runCol=" + (if (rNull) "__HIVE_DEFAULT_PARTITION__" else r)
+          w.open(s"$dir/${partName(pid)}")
+        }
+        project.project(row)
+        w.write(project)
+      }
+    }
+    if (w.isOpen) recs += w.close()
+    recs.iterator
   }
 
   /** The message of a task that wrote no file. */

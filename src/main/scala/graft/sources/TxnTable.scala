@@ -636,15 +636,25 @@ object TxnTable {
       // racing a newer one can only trail — latestVersion's forward
       // walk heals any lag, and a crash HERE leaves the previous head,
       // which is the same trailing case)
-      val htmp = Paths.get(logDir(root),
-        s".head-${java.util.UUID.randomUUID().toString.take(8)}")
-      Files.writeString(htmp, version.toString)
-      try Files.move(htmp, headFile(root),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.io.IOException => Files.deleteIfExists(htmp) }
+      try replaceAtomically(headFile(root), version.toString)
+      catch { case _: java.io.IOException => () }
     }
     won
+  }
+
+  /** Replace a small pointer file (head, tag, branch base, boundary
+    * checkpoint) through a temp sibling and an atomic move: a reader or
+    * a crash sees the old content or the new, never an empty or torn
+    * file. */
+  private def replaceAtomically(target: java.nio.file.Path,
+      content: String): Unit = {
+    val tmp = target.resolveSibling(
+      s".${target.getFileName}-${java.util.UUID.randomUUID().toString.take(8)}")
+    Files.writeString(tmp, content)
+    try Files.move(tmp, target,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    finally Files.deleteIfExists(tmp)
   }
 
   /** Write `df` as version-`version` data files under an attempt-unique
@@ -693,52 +703,14 @@ object TxnTable {
       // __shard prefix groups each task's shard runs; within a shard
       // the rows are in key order
       .sortWithinPartitions(col("__shard"), col(keyCol))
-    // mapPartitionsUnclean: the closure calls a static method with only
-    // serializable locals captured — the ClosureCleaner ASM scan it
-    // skips was a measurable per-commit driver cost (stack samples)
-    val recs = org.apache.spark.graftbridge.RddBridge
-      .mapPartitionsUnclean(enriched.queryExecution.toRdd) { it =>
-        writeShardRuns(it, out, plan)
-      }.collect()
-    val files = TxnFileWriter.fileEntries(root, sub, checkExpr, recs.toSeq)
+    val recs = TxnFileWriter.write(enriched, out, plan, "__shard")
+    val files = TxnFileWriter.fileEntries(root, sub, checkExpr, recs)
     require(files.length <= shards,
       s"snapshot wrote ${files.length} files for $shards shards")
     require(files.forall(_.path.startsWith("data/")), s"bad rel paths under $root/")
     (Manifest(version, op, keyCol, df.schema.toDDL, shards, layoutDiv, files,
       keyCol2 = keyCol2, checkExpr = checkExpr, statsCols = statsCols,
       statsTypes = statsTypes), sub)
-  }
-
-  /** The executor side of [[writeSnapshot]]: consume one sorted
-    * partition (data columns, then `__shard`) and open one file per
-    * `__shard` run — the dir name is the layout contract, `__shard=N`,
-    * Hive's default-partition name for a null shard. */
-  private def writeShardRuns(it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      out: String, plan: TxnFileWriter.WritePlan)
-      : Iterator[TxnFileWriter.FileStats] = {
-    val w = new TxnFileWriter.Writer(plan, out)
-    val shardOrd = w.schema.length
-    val project = org.apache.spark.sql.catalyst.ProjectingInternalRow(
-      w.schema, 0 until shardOrd)
-    val pid = org.apache.spark.TaskContext.getPartitionId()
-    val recs = scala.collection.mutable.ArrayBuffer[TxnFileWriter.FileStats]()
-    var curShard = 0L; var curNull = false
-    while (it.hasNext) {
-      val row = it.next()
-      val sNull = row.isNullAt(shardOrd)
-      val s = if (sNull) 0L else row.getLong(shardOrd)
-      if (!w.isOpen || sNull != curNull || s != curShard) {
-        if (w.isOpen) recs += w.close()
-        curNull = sNull; curShard = s
-        val dir =
-          if (sNull) "__shard=__HIVE_DEFAULT_PARTITION__" else s"__shard=$s"
-        w.open(s"$dir/${TxnFileWriter.partName(pid)}")
-      }
-      project.project(row)
-      w.write(project)
-    }
-    if (w.isOpen) recs += w.close()
-    recs.iterator
   }
 
   /** Add (or replace) the table's CHECK constraint AS A COMMIT: the
@@ -1100,34 +1072,20 @@ object TxnTable {
 
   /** Write a DML commit's CHANGE FILE set under the attempt dir (the
     * `_cdf` name marks it as no snapshot data file — Spark file
-    * listings skip underscore-prefixed children) and return the
-    * row count (a parquet footer fold, no data read). A lost commit
-    * race cleans the attempt dir and the change files with it. */
-  private def writeCdf(spark: SparkSession, root: String, sub: String,
-      changes: DataFrame): Long = {
+    * listings skip underscore-prefixed children) and return the row
+    * count the writer folded. The dir exists even for zero changes: the
+    * feed readers list it. A lost commit race cleans the attempt dir
+    * and the change files with it. */
+  private def writeCdf(root: String, sub: String, changes: DataFrame): Long = {
     val path = s"$root/$sub/_cdf"
-    changes.write.parquet(path)
-    parquetRowCount(path, ConfCache.sessionConf(spark))
+    Files.createDirectories(Paths.get(path))
+    TxnFileWriter.write(changes, path, TxnFileWriter.bare(changes.schema))
+      .map(_.n).sum
   }
 
-  /** Total row count of a just-written parquet directory from its file
-    * FOOTERS — a driver-side metadata fold (no Spark job, no data
-    * pages). Only used on attempt dirs this writer itself produced. */
-  private[sources] def parquetRowCount(dir: String,
-      hconf: org.apache.hadoop.conf.Configuration): Long =
-    parquetParts(dir).map { p =>
-      val hp = new org.apache.hadoop.fs.Path(p.toString)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, hconf),
-        ConfCache.readOptions(hconf, hp))
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally r.close()
-    }.sum
-
-  /** The part files of a parquet directory the table wrote — the one
-    * walk behind every driver-side footer read. A missing directory is
-    * an error, never an empty result: under a local root, every dir a
-    * manifest or a just-finished write names exists. */
+  /** The part files of a sidecar directory a manifest names. A missing
+    * directory is an error, never an empty vector: under a local root,
+    * every dir a manifest names exists. */
   private def parquetParts(dir: String): Vector[java.nio.file.Path] = {
     val base = Paths.get(dir)
     require(Files.isDirectory(base), s"missing parquet directory $dir")
@@ -1749,7 +1707,7 @@ object TxnTable {
         statsCols = base.statsCols, statsTypes = base.statsTypes)
       // change data feed: the deleted rows, recorded AT WRITE TIME so
       // reading the feed later costs O(changes), never a snapshot diff
-      val nCdf = writeCdf(spark, root, sub,
+      val nCdf = writeCdf(root, sub,
         touchedRows.where(col(base.keyCol).between(lo, hi))
           .withColumn("_change_type", lit("delete")))
       rewritten = adds.files.size; carriedN = carried.size
@@ -1887,8 +1845,7 @@ object TxnTable {
       s"branch $name already exists on $root")
     val base = latestVersion(root)
     shallowClone(root, bRoot)
-    val bf = new java.io.File(s"$bRoot/_base")
-    java.nio.file.Files.writeString(bf.toPath, base.toString)
+    replaceAtomically(Paths.get(s"$bRoot/_base"), base.toString)
     bRoot
   }
 
@@ -2054,7 +2011,7 @@ object TxnTable {
       s"cannot tag $root@v$version: no such committed version")
     val f = tagFile(root, name)
     f.getParentFile.mkdirs()
-    java.nio.file.Files.writeString(f.toPath, version.toString)
+    replaceAtomically(f.toPath, version.toString)
   }
 
   /** Resolve a ref name: a tag → its pinned main version (Left), a
@@ -2071,137 +2028,67 @@ object TxnTable {
     }
   }
 
-  /** Control-flow signal: a merge-on-read delete matched no live row —
-    * no version is minted (a no-op commit would bloat the log). */
-  private final class NothingToDelete(val version: Int)
-      extends RuntimeException
-
-  /** MERGE-ON-READ DELETE — deletion vectors (the Delta DV / Iceberg
-    * position-delete idea, built from scratch on this log): instead of
-    * rewriting every touched file ([[deleteRange]]'s copy-on-write),
-    * the commit writes a tiny POSITION SIDECAR per touched file
-    * listing the row ordinals the predicate killed, and tags the
-    * file's manifest entry with it ([[FileEntry.dv]]/`dvRows`). NO
-    * DATA FILE IS REWRITTEN — at 100 TB this is the difference between
-    * a 1-row delete costing a gigabyte file rewrite and costing a
-    * few-byte sidecar. Readers apply vectors transparently
-    * ([[readFiles]]): an anti-join on (file, row_index) against the
-    * broadcast sidecars, so every read path (readVersion, pruned
-    * reads, CDC, surgical DML's touched-file reads) sees live rows
-    * only. Vectors ACCUMULATE: a second delete anti-joins the existing
-    * positions first (only LIVE matches mint fresh positions) and each
-    * new sidecar is self-contained (old ∪ fresh for that file — no
-    * sidecar chains to resolve at read). Min/max stats stay sound for
-    * pruning (deletion only shrinks a file's true range); `nRows`
-    * stays physical with live = nRows - dvRows, which [[history]] and
-    * the no-op guard use. [[purgeDeletes]] (the OPTIMIZE gesture)
-    * folds vectors back into clean files. The per-file position counts
-    * collect on the driver bounded by the FILE count — manifest scale,
-    * the same bound the manifest itself lives under. Returns (version,
-    * filesTagged, rowsDeleted) — (head, 0, 0) when nothing matched. */
+  /** MERGE-ON-READ DELETE: the [[morDml]] commit with no new rows.
+    * Returns (version, filesTagged, rowsDeleted) — (head, 0, 0) when
+    * nothing matched. */
   def deleteMor(spark: SparkSession, root: String, pred: String,
-      maxRetries: Int = 5): (Int, Int, Long) = {
-    var tagged = 0
-    var deleted = 0L
-    try {
-      val (ver, _) = retryCommit(root, "deleteMor", maxRetries) { v =>
-        val base = readManifest(root, v)
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(base.schemaDdl)
-        val attempt = java.util.UUID.randomUUID().toString.take(8)
-        val sub = f"data/dv-v${v + 1}%08d-$attempt"
-        // the predicate is written against LOGICAL names; the __fp/__idx
-        // tags pass through the aliasing untouched
-        val rows = toLogical(base, withFilePos(spark, root, schema, base.files))
-        val oldDvFiles = base.files.filter(_.dvRows > 0)
-        val oldDv =
-          if (oldDvFiles.isEmpty) None
-          else Some(dvPositionsDf(spark, root, oldDvFiles))
-        val hits = rows.where(expr(pred)).select("__fp", "__idx")
-        // only LIVE matches mint fresh positions (idempotent re-delete)
-        val fresh = oldDv.fold(hits)(o =>
-          hits.join(broadcast(o), Seq("__fp", "__idx"), "left_anti"))
-        val freshPerFile = fresh.groupBy("__fp").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (freshPerFile.isEmpty) throw new NothingToDelete(v)
-        val touched = base.files.filter(f => freshPerFile.contains(f.path))
-        val fid = touched.map(_.path).sorted.zipWithIndex.toMap
-        import spark.implicits._
-        val fidDf = broadcast(fid.toSeq.toDF("__fp", "__fid"))
-        // each touched file's NEW sidecar = its old positions ∪ fresh
-        val oldTouchedFiles = touched.filter(_.dvRows > 0)
-        val oldTouched =
-          if (oldTouchedFiles.isEmpty) None
-          else Some(dvPositionsDf(spark, root, oldTouchedFiles))
-        val allPos = oldTouched.fold(fresh)(_ unionByName fresh)
-        allPos.join(fidDf, Seq("__fp"))
-          .select(col("__idx").as("idx"), col("__fid"))
-          .repartition(col("__fid"))
-          .write.partitionBy("__fid").parquet(s"$root/$sub")
-        val files2 = base.files.map { f =>
-          fid.get(f.path) match {
-            case Some(i) => f.copy(dv = s"$sub/__fid=$i",
-              dvRows = f.dvRows + freshPerFile(f.path))
-            case None => f
-          }
-        }
-        // change files: the freshly-deleted rows' full images — the
-        // feed reads these, never the table (the `_cdf` name hides
-        // them from the sidecar dir's own listings)
-        val freshFull = oldDv.fold(rows.where(expr(pred)))(o =>
-          rows.where(expr(pred))
-            .join(broadcast(o), Seq("__fp", "__idx"), "left_anti"))
-        val nCdf = writeCdf(spark, root, sub,
-          toPhysical(base, freshFull.drop("__fp", "__idx"))
-            .withColumn("_change_type", lit("delete")))
-        tagged = touched.size
-        deleted = freshPerFile.values.sum
-        (base.copy(version = v + 1, op = "delete_mor", files = files2,
-          deltaOf = -1, cdfKind = "files", cdfPath = s"$sub/_cdf",
-          cdfRows = nCdf), sub)
-      }
-      (ver, tagged, deleted)
-    } catch {
-      case none: NothingToDelete => (none.version, 0, 0L)
-    }
-  }
+      maxRetries: Int = 5): (Int, Int, Long) =
+    morDml(spark, root, pred, None, maxRetries)
 
-  /** Control-flow signal twin of [[NothingToDelete]] for updates. */
-  private final class NothingToUpdate(val version: Int)
-      extends RuntimeException
-
-  /** MERGE-ON-READ UPDATE (the Delta DV-DML / Iceberg position-delete
-    * + data-file shape, qex): a narrow UPDATE lands as ONE commit that
-    * (a) tags each touched file with a deletion vector killing the
-    * matched rows' positions and (b) APPENDS the updated images as new
-    * layout files — NO existing data file is rewritten. At 100 TB this
-    * is the difference between a 0.1%-selective UPDATE costing a few
-    * new files plus byte-sized sidecars and costing a rewrite of every
-    * file the predicate touches ([[TxnRowLevel]]'s group-filtered
-    * copy-on-write, which remains the right shape for WIDE
-    * predicates — the planner chooses, see [[MorDml]]). Candidate
-    * files prune from the manifest ([[morBounds]]); hit positions
-    * anti-join the existing vectors (idempotent re-update of a
-    * half-deleted file mints only live positions, the deleteMor
-    * doctrine); new rows re-shard through [[writeSnapshot]] (CHECK
-    * enforced, stats inline, pruning preserved); the change feed
-    * records full pre/post images. Assignments apply SIMULTANEOUSLY
-    * over the old row (`SET a = b, b = a` swaps). Sidecars, change
-    * files and adds all stage under the ONE attempt dir, so a lost
-    * commit race cleans everything. Returns (version, filesTagged,
+  /** MERGE-ON-READ UPDATE: the [[morDml]] commit whose new rows are
+    * the matched rows with `sets` applied SIMULTANEOUSLY over the old
+    * row (`SET a = b, b = a` swaps). Returns (version, filesTagged,
     * rowsUpdated) — (head, 0, 0) when nothing matched. */
   def updateMor(spark: SparkSession, root: String, pred: String,
-      sets: Seq[(String, String)], maxRetries: Int = 5): (Int, Int, Long) = {
+      sets: Seq[(String, String)], maxRetries: Int = 5): (Int, Int, Long) =
+    morDml(spark, root, pred, Some(sets), maxRetries)
+
+  /** Control-flow signal: a merge-on-read DML matched no live row — no
+    * version is minted (a no-op commit would bloat the log). */
+  private final class NothingMatched(val version: Int)
+      extends RuntimeException
+
+  /** MERGE-ON-READ DML — deletion vectors (the Delta DV / Iceberg
+    * position-delete idea, built on this log), the one commit behind
+    * [[deleteMor]] and [[updateMor]]; a delete is an update that appends
+    * no rows. Instead of rewriting every touched file ([[deleteRange]]'s
+    * copy-on-write, or [[TxnRowLevel]]'s for WIDE SQL updates — the
+    * planner chooses, see [[MorDml]]), the commit writes a tiny
+    * POSITION SIDECAR per touched file listing the row ordinals the
+    * predicate matched, and tags the file's manifest entry with it
+    * ([[FileEntry.dv]]/`dvRows`). NO DATA FILE IS REWRITTEN — at 100 TB
+    * this is the difference between a 1-row change costing a gigabyte
+    * file rewrite and costing a few-byte sidecar.
+    *
+    * Candidate files prune from the manifest ([[morBounds]]); matches
+    * anti-join the existing vectors, so only LIVE rows match (a re-run
+    * mints nothing), and are read ONCE into a local checkpoint that
+    * serves the per-file counts, the new images, the positions and the
+    * change images. An update's new images re-shard through
+    * [[writeSnapshot]] (CHECK enforced, stats inline, pruning kept).
+    * Each new sidecar is self-contained (old ∪ fresh positions for
+    * that file — no chains to resolve at read); readers apply vectors
+    * transparently ([[readFiles]]). The change feed records `delete`
+    * images, or `update_preimage`/`update_postimage`. Sidecars, change
+    * files and adds stage under ONE attempt dir, so a lost commit race
+    * cleans everything. Min/max stats stay sound (deletion only shrinks
+    * a file's true range); `nRows` stays physical with live = nRows -
+    * dvRows. [[purgeDeletes]] folds vectors back into clean files. The
+    * per-file counts collect on the driver bounded by the FILE count —
+    * the bound the manifest itself lives under. */
+  private def morDml(spark: SparkSession, root: String, pred: String,
+      sets: Option[Seq[(String, String)]], maxRetries: Int): (Int, Int, Long) = {
+    val opName = if (sets.isEmpty) "deleteMor" else "updateMor"
     var tagged = 0
-    var updated = 0L
+    var matched = 0L
     try {
-      val (ver, _) = retryCommit(root, "updateMor", maxRetries) { v =>
+      val (ver, _) = retryCommit(root, opName, maxRetries) { v =>
         val base = readManifest(root, v)
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(base.schemaDdl)
         val logicalFields = logicalSchema(base).fields
-        val setMap = sets.toMap
+        val setMap = sets.getOrElse(Nil).toMap
         val unknown = setMap.keySet -- logicalFields.map(_.name)
         require(unknown.isEmpty,
-          s"updateMor on $root: unknown column(s) ${unknown.mkString(",")}")
+          s"$opName on $root: unknown column(s) ${unknown.mkString(",")}")
         // manifest-priced candidates: files whose stat ranges overlap
         // the predicate's extracted bounds (all files when unpriceable)
         val condExpr = spark.sessionState.sqlParser.parseExpression(pred)
@@ -2210,76 +2097,73 @@ object TxnTable {
             val (mn, mx) = statRange(base, f, c); !(hi < mn || lo > mx) })
           case None => base.files
         }
-        val rows = toLogical(base, withFilePos(spark, root, schema, candidates))
+        // the predicate is written against LOGICAL names; the __fp/__idx
+        // tags pass through the aliasing untouched
+        val hits0 = toLogical(base, withFilePos(spark, root,
+          org.apache.spark.sql.types.StructType.fromDDL(base.schemaDdl),
+          candidates)).where(expr(pred))
         val oldDvFiles = candidates.filter(_.dvRows > 0)
-        val oldDv =
-          if (oldDvFiles.isEmpty) None
-          else Some(dvPositionsDf(spark, root, oldDvFiles))
-        val hits0 = rows.where(expr(pred))
-        // only LIVE rows update (vector-deleted positions are gone)
-        val hits = oldDv.fold(hits0)(o =>
-          hits0.join(broadcast(o), Seq("__fp", "__idx"), "left_anti"))
-          .localCheckpoint() // one pass: positions, images, and counts
-        val freshPerFile = hits.groupBy("__fp").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (freshPerFile.isEmpty) {
-          unpinCheckpoint(hits)
-          throw new NothingToUpdate(v)
-        }
+        val hits = (if (oldDvFiles.isEmpty) hits0
+          else hits0.join(broadcast(dvPositionsDf(spark, root, oldDvFiles)),
+            Seq("__fp", "__idx"), "left_anti"))
+          .localCheckpoint() // one pass: counts, images, positions
         try {
-          // the updated images, assignments applied simultaneously,
-          // re-sharded into the table layout as ordinary adds
-          val newRows = hits.select(logicalFields.map { f =>
-            setMap.get(f.name)
-              .map(e => expr(e).cast(f.dataType).as(f.name))
-              .getOrElse(col(f.name))
-          }.toIndexedSeq: _*)
-          val (addsM, sub) = writeSnapshot(spark, root, v + 1, "update_mor",
-            toPhysical(base, newRows), base.keyCol, base.shards,
-            base.layoutDiv, keyCol2 = base.keyCol2,
-            checkExpr = base.checkExpr, statsCols = base.statsCols,
-            statsTypes = base.statsTypes)
-          // deletion vectors for the old images — the deleteMor shape,
-          // staged UNDER the adds' attempt dir (one cleanup unit)
-          val touched = base.files.filter(f => freshPerFile.contains(f.path))
+          val perFile = hits.groupBy("__fp").agg(count(lit(1)))
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          if (perFile.isEmpty) throw new NothingMatched(v)
+          val pre = hits.drop("__fp", "__idx")
+          val (sub, adds, changes) = sets match {
+            case None =>
+              val attempt = java.util.UUID.randomUUID().toString.take(8)
+              (f"data/dv-v${v + 1}%08d-$attempt", Nil,
+                pre.withColumn("_change_type", lit("delete")))
+            case Some(_) =>
+              val post = pre.select(logicalFields.map { f =>
+                setMap.get(f.name)
+                  .map(e => expr(e).cast(f.dataType).as(f.name))
+                  .getOrElse(col(f.name))
+              }.toIndexedSeq: _*)
+              val (addsM, sub) = writeSnapshot(spark, root, v + 1,
+                "update_mor", toPhysical(base, post), base.keyCol,
+                base.shards, base.layoutDiv, keyCol2 = base.keyCol2,
+                checkExpr = base.checkExpr, statsCols = base.statsCols,
+                statsTypes = base.statsTypes)
+              (sub, addsM.files,
+                pre.withColumn("_change_type", lit("update_preimage"))
+                  .unionByName(post
+                    .withColumn("_change_type", lit("update_postimage"))))
+          }
+          // each touched file's NEW sidecar = its old positions ∪ fresh,
+          // one `__fid=N` run per file
+          val touched = base.files.filter(f => perFile.contains(f.path))
           val fid = touched.map(_.path).sorted.zipWithIndex.toMap
-          import spark.implicits._
-          val fidDf = broadcast(fid.toSeq.toDF("__fp", "__fid"))
-          val oldTouchedFiles = touched.filter(_.dvRows > 0)
-          val oldTouched =
-            if (oldTouchedFiles.isEmpty) None
-            else Some(dvPositionsDf(spark, root, oldTouchedFiles))
+          val oldTouched = touched.filter(_.dvRows > 0)
           val freshPos = hits.select("__fp", "__idx")
-          val allPos = oldTouched.fold(freshPos)(_ unionByName freshPos)
-          allPos.join(fidDf, Seq("__fp"))
-            .select(col("__idx").as("idx"), col("__fid"))
-            .repartition(col("__fid"))
-            .write.partitionBy("__fid").parquet(s"$root/$sub/_dv")
-          val nCdf = writeCdf(spark, root, sub,
-            toPhysical(base, hits.drop("__fp", "__idx")
-              .withColumn("_change_type", lit("update_preimage"))
-              .unionByName(newRows
-                .withColumn("_change_type", lit("update_postimage")))))
-          val files2 = base.files.map { f =>
-            fid.get(f.path) match {
-              case Some(i) => f.copy(dv = s"$sub/_dv/__fid=$i",
-                dvRows = f.dvRows + freshPerFile(f.path))
-              case None => f
-            }
-          } ++ addsM.files
+          val allPos = if (oldTouched.isEmpty) freshPos
+            else dvPositionsDf(spark, root, oldTouched).unionByName(freshPos)
+          import spark.implicits._
+          val dvs = allPos.join(broadcast(fid.toSeq.toDF("__fp", "__fid")),
+              Seq("__fp"))
+            .select(col("__idx").as("idx"), col("__fid").cast("long"))
+            .repartition(col("__fid")).sortWithinPartitions("__fid")
+          TxnFileWriter.write(dvs, s"$root/$sub/_dv",
+            TxnFileWriter.bare(org.apache.spark.sql.types.StructType(
+              dvs.schema.fields.init)), "__fid")
+          val nCdf = writeCdf(root, sub, toPhysical(base, changes))
           tagged = touched.size
-          updated = freshPerFile.values.sum
-          (addsM.copy(version = v + 1, op = "update_mor",
-            schemaDdl = base.schemaDdl, files = files2, deltaOf = -1,
-            txns = base.txns, renames = base.renames, dropped = base.dropped,
-            cdfKind = "files", cdfPath = s"$sub/_cdf", cdfRows = nCdf,
-            nextId = base.nextId, identityCol = base.identityCol,
-            identityStart = base.identityStart), sub)
+          matched = perFile.values.sum
+          (base.copy(version = v + 1,
+            op = if (sets.isEmpty) "delete_mor" else "update_mor",
+            files = base.files.map(f => fid.get(f.path).fold(f)(i =>
+              f.copy(dv = s"$sub/_dv/__fid=$i",
+                dvRows = f.dvRows + perFile(f.path)))) ++ adds,
+            deltaOf = -1, cdfKind = "files", cdfPath = s"$sub/_cdf",
+            cdfRows = nCdf), sub)
         } finally unpinCheckpoint(hits)
       }
-      (ver, tagged, updated)
+      (ver, tagged, matched)
     } catch {
-      case none: NothingToUpdate => (none.version, 0, 0L)
+      case none: NothingMatched => (none.version, 0, 0L)
     }
   }
 
@@ -2290,7 +2174,7 @@ object TxnTable {
     * extracted bound, so candidate pruning keeps a superset and the
     * selectivity estimate only grows). None = no priceable conjunct at
     * all. Accepts resolved AND parsed-unresolved attribute shapes (the
-    * planner rule prices resolved conditions; [[updateMor]] re-prices
+    * planner rule prices resolved conditions; [[morDml]] re-prices
     * its predicate string). Logical names translate through the column
     * mapping before stats lookup. */
   private[sources] def morBounds(m: Manifest,
@@ -2470,7 +2354,7 @@ object TxnTable {
           .withColumn("_change_type", lit("update_postimage")))
         .unionByName(merged.join(tgtKeys, Seq(base.keyCol), "left_anti")
           .withColumn("_change_type", lit("insert")))
-      val nCdf = writeCdf(spark, root, sub, changes)
+      val nCdf = writeCdf(root, sub, changes)
       rewritten = adds.files.size; carriedN = carried.size
       (adds.copy(schemaDdl = base.schemaDdl,
         files = carried ++ adds.files, deltaOf = -1, txns = base.txns, identityCol = base.identityCol, identityStart = base.identityStart,
@@ -2530,15 +2414,9 @@ object TxnTable {
     require(vs.contains(keepFrom), s"keepFrom=$keepFrom not committed")
     // only a DELTA boundary needs the checkpoint rewrite; an already-
     // full boundary skips the in-place move entirely (no write at all)
-    if (readManifestRaw(root, keepFrom).deltaOf >= 0) {
-      val resolved = readManifest(root, keepFrom).copy(deltaOf = -1)
-      val tmp = Paths.get(logDir(root),
-        s".ckpt-${java.util.UUID.randomUUID().toString.take(8)}")
-      Files.writeString(tmp, toJson(resolved))
-      Files.move(tmp, logFile(root, keepFrom),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
+    if (readManifestRaw(root, keepFrom).deltaOf >= 0)
+      replaceAtomically(logFile(root, keepFrom),
+        toJson(readManifest(root, keepFrom).copy(deltaOf = -1)))
     val dropped = vs.filter(_ < keepFrom)
     dropped.foreach(v => Files.delete(logFile(root, v)))
     dropped.size

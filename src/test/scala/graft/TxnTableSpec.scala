@@ -922,5 +922,16 @@ class TxnTableSpec extends SparkSpec {
     val writer = Seq(Paths.get("src/main/scala/graft/sources/TxnFileWriter.scala").toString)
     assert(filesWith("new TxnParquetBuilder" + "(") == writer)
     assert(filesWith("ParquetWriteSupport" + ".setSchema") == writer)
+    // change files and DV sidecars go through it too: no txn source
+    // file hands a frame to Spark's DataFrameWriter
+    val txnFiles = Files.list(Paths.get("src/main/scala/graft/sources"))
+      .iterator().asScala.map(_.getFileName.toString)
+      .filter(n => (n.startsWith("Txn") && n.endsWith(".scala")) ||
+        n == "MorDml.scala").toSeq
+    assert(txnFiles.contains("TxnTable.scala") && txnFiles.contains("MorDml.scala"))
+    Seq(".write" + ".parquet(", ".write" + ".partitionBy(").foreach { needle =>
+      assert(filesWith(needle).map(Paths.get(_).getFileName.toString)
+        .filter(txnFiles.contains).isEmpty, s"$needle in a txn file")
+    }
   }
 }

@@ -130,15 +130,12 @@ class RefsAndEvolutionSpec extends SparkSpec {
 
   test("local roots: a missing dir throws; a scheme root is refused") {
     val hconf = spark.sessionState.newHadoopConf()
-    // the footer fold reads only dirs the table wrote: a missing one is
-    // an error, never a silent 0
+    // a sidecar read covers only dirs the table wrote: a missing one is
+    // an error, never an empty vector
+    val noDv = TxnTable.FileEntry("data/v0-x/part.parquet", 10L, 0L, 9L,
+      dv = "data/dv-v1-missing/_dv/__fid=0", dvRows = 1L)
     intercept[IllegalArgumentException](
-      TxnTable.parquetRowCount("/no/such/dir/for/graft/cdf", hconf))
-    val d = graft.Fs.scratch("graft_prc_spec")
-    graft.Fs.deleteRecursively(d)
-    spark.range(123).repartition(2).write.parquet(d)
-    assert(TxnTable.parquetRowCount(d, hconf) == 123L)
-    graft.Fs.deleteRecursively(d)
+      TxnTable.readDvPositions("/no/such/dir/for/graft", noDv, hconf))
     // a root with a URI scheme fails before anything is written under it
     val local = graft.Fs.scratch("graft_scheme_spec")
     graft.Fs.deleteRecursively(local)

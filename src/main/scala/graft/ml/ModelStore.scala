@@ -60,7 +60,10 @@ object ModelStore {
     f"${scala.util.hashing.MurmurHash3.stringHash(key)}%08x"
   }
 
-  private val StorePrefix = "graft_ml_models_v1_"
+  // the version tags the fitting code: a store fitted by older code is
+  // never served, and the version-free stem lets gcStale reap it
+  private val StoreStem = "graft_ml_models_"
+  private val StorePrefix = s"${StoreStem}v2_"
   val AlsRank = 10
   val KmeansK = 3
 
@@ -76,7 +79,7 @@ object ModelStore {
     val fp = fingerprint(dir, Seq(AlsRank, KmeansK, 823))
     val store = s"/tmp/$StorePrefix$fp"
     if (!Files.exists(Paths.get(store))) {
-      graft.Fs.gcStale(StorePrefix)
+      graft.Fs.gcStale(StoreStem)
       val (train, _) = FixturePipelines.hashTrainTest(spark, dir)
       val cached = train.cache()
       val als = Recommend.fitAls(cached, rank = AlsRank)

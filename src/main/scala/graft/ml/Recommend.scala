@@ -57,9 +57,8 @@ object Recommend {
       .setMetricName("rmse").setLabelCol(ratingCol).setPredictionCol("prediction")
     // materialize the cache BEFORE the parallel fold fits fan out:
     // `parallelism` concurrent fits racing an unmaterialized cache
-    // duplicate the scan under storage locks (same failure mode as the
-    // concurrent KMeans fits — observed as 60s-vs-250s bench variance
-    // on this query)
+    // duplicate the scan under storage locks (observed as 60s-vs-250s
+    // bench variance on this query)
     val cached = train.cache()
     cached.count()
     // the concurrent fits share one JVM here: each ALS iteration is

@@ -932,6 +932,13 @@ object TxnTable {
     sys.error(s"$opName gave up after $maxRetries conflicts on $root")
   }
 
+  /** A manifest path resolved against its table root. Paths are
+    * root-relative (`data/...`) for files the table wrote itself, and
+    * ABSOLUTE for files a [[shallowClone]] references from its source
+    * table — zero-copy sharing, copy-on-write divergence. */
+  private[sources] def resolvePath(root: String, p: String): String =
+    if (p.startsWith("/")) p else s"$root/$p"
+
   /** Read an explicit file subset with a pinned schema, each file's
     * DELETION VECTOR applied (merge-on-read, see [[deleteMor]]): clean
     * files stream through the plain vectorized scan; dv-carrying files
@@ -943,13 +950,6 @@ object TxnTable {
     * empty subset yields the schema'd EMPTY frame rather than a
     * zero-path scan error (a pruning probe may legitimately match no
     * file). */
-  /** A manifest path resolved against its table root. Paths are
-    * root-relative (`data/...`) for files the table wrote itself, and
-    * ABSOLUTE for files a [[shallowClone]] references from its source
-    * table — zero-copy sharing, copy-on-write divergence. */
-  private[sources] def resolvePath(root: String, p: String): String =
-    if (p.startsWith("/")) p else s"$root/$p"
-
   private def readFiles(spark: SparkSession, root: String, schemaDdl: String,
       files: Seq[FileEntry]): DataFrame = {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(schemaDdl)
@@ -995,16 +995,6 @@ object TxnTable {
       .drop("__fpraw")
   }
 
-  /** One file's deletion-vector positions read DRIVER-SIDE straight
-    * from the tiny sidecar parquet — no Spark job, no Catalyst plan.
-    * r15 (guide §1.2, DriverProfile evidence): every MoR statement
-    * used to union N sidecar scans into one frame and run a job over
-    * it; with 16+ dv'd files that union dominated the statement's
-    * PLANNING time (qec: ~3 s/rep of physical planning). The positions
-    * were always collected (or broadcast) to the driver anyway, so a
-    * direct footer-to-page read changes the bound nothing — it only
-    * removes the per-statement plan + job. Shared with the SQL
-    * connector's DV-applying scan ([[TxnDvBatch]]). */
   /** Decoded deletion-vector positions keyed on the sidecar dir's
     * identity (r15 continuation, guide §1.2): sidecar dirs live under
     * attempt-unique `data/vNNNNNNNN-<uuid>` subtrees and are never
@@ -1021,6 +1011,16 @@ object TxnTable {
           : Boolean = size() > 48
     }
 
+  /** One file's deletion-vector positions read DRIVER-SIDE straight
+    * from the tiny sidecar parquet — no Spark job, no Catalyst plan.
+    * r15 (guide §1.2, DriverProfile evidence): every MoR statement
+    * used to union N sidecar scans into one frame and run a job over
+    * it; with 16+ dv'd files that union dominated the statement's
+    * PLANNING time (qec: ~3 s/rep of physical planning). The positions
+    * were always collected (or broadcast) to the driver anyway, so a
+    * direct footer-to-page read changes the bound nothing — it only
+    * removes the per-statement plan + job. Shared with the SQL
+    * connector's DV-applying scan ([[TxnDvBatch]]). */
   private[sources] def readDvPositions(root: String, f: FileEntry,
       hconf: org.apache.hadoop.conf.Configuration): Array[Long] = {
     val dir = resolvePath(root, f.dv)

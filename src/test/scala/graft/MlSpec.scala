@@ -45,13 +45,15 @@ class MlSpec extends SparkSpec {
     assert(p.length == 1 && math.abs(p.head.getDouble(0) - 4.0) < 1e-12)
   }
 
+  // well-separated 1-D clusters: SSE collapses at the true k
+  private lazy val feats = (0 until 30).map { i =>
+    val c = i % 3
+    (i, org.apache.spark.ml.linalg.Vectors.dense(c * 10.0 + (i % 5) * 0.1))
+  }.toDF("movieId", "features")
+  private lazy val train =
+    (0 until 30).map(i => (i % 4, i, 3.0f)).toDF("userId", "movieId", "rating")
+
   test("selectK flags the most-negative SSE drop as best (R-22/R-23)") {
-    // well-separated 1-D clusters: SSE collapses at the true k
-    val feats = (0 until 30).map { i =>
-      val c = i % 3
-      (i, org.apache.spark.ml.linalg.Vectors.dense(c * 10.0 + (i % 5) * 0.1))
-    }.toDF("movieId", "features")
-    val train = (0 until 30).map(i => (i % 4, i, 3.0f)).toDF("userId", "movieId", "rating")
     val sel = Clustering.selectK(spark, feats, train, ks = 2 to 5)
     val rows = sel.collect()
     assert(rows.map(_.getAs[Int]("k")).toSeq == Seq(2, 3, 4, 5))
@@ -61,6 +63,84 @@ class MlSpec extends SparkSpec {
     assert(bestRows.forall(_.getAs[Double]("sse_diff") == minDiff))
     // first row's diff is 0 by definition
     assert(rows.find(_.getAs[Int]("k") == 2).get.getAs[Double]("sse_diff") == 0.0)
+  }
+
+  private def relClose(a: Double, b: Double): Boolean =
+    a == b || math.abs(a - b) <= 1e-9 * math.abs(b)
+
+  // movies 0..59 over 6 distinct 0/1 vectors with uneven counts (one of
+  // 49: 49 · (1/49) != 1 in doubles, a center-rounding trap)
+  private lazy val repeatedVecs = {
+    val distinct = Seq(
+      Seq(1.0, 0.0, 0.0, 0.0), Seq(1.0, 1.0, 0.0, 0.0), Seq(0.0, 1.0, 1.0, 0.0),
+      Seq(0.0, 0.0, 1.0, 1.0), Seq(0.0, 0.0, 0.0, 1.0), Seq(1.0, 0.0, 1.0, 1.0))
+    val counts = Seq(49, 3, 2, 1, 4, 1)
+    distinct.zip(counts).flatMap { case (v, c) => Seq.fill(c)(v) }
+      .zipWithIndex.map { case (v, i) =>
+        (i, org.apache.spark.ml.linalg.Vectors.dense(v.toArray))
+      }.toDF("movieId", "features")
+  }
+
+  test("weighted driver-side fit: trainingCost is the per-row SSE; " +
+      "SSE is 0.0 exactly when k reaches the distinct-vector count") {
+    import org.apache.spark.ml.linalg.{Vector, Vectors}
+    val nDistinct = 6
+    (2 to nDistinct + 1).foreach { k =>
+      val model = Clustering.fit(repeatedVecs, k)
+      val centers = model.clusterCenters
+      val perRow = model.transform(repeatedVecs).select("features", "prediction")
+        .collect().map(r => Vectors.sqdist(r.getAs[Vector](0), centers(r.getInt(1))))
+        .sum
+      val sse = model.summary.trainingCost
+      assert(relClose(sse, perRow), s"k=$k: trainingCost $sse vs per-row $perRow")
+      if (k >= nDistinct) assert(sse == 0.0, s"k=$k: SSE $sse must be exactly 0")
+      else assert(sse > 0.0, s"k=$k: SSE must be positive below $nDistinct")
+      assert(model.getK == k)
+    }
+  }
+
+  test("selectK's one-pass train RMSE equals the cluster-average predictor's") {
+    def check(movies: org.apache.spark.sql.DataFrame,
+        rated: org.apache.spark.sql.DataFrame, ks: Seq[Int]): Unit = {
+      val sel = Clustering.selectK(spark, movies, rated, ks = ks).collect()
+      assert(sel.map(_.getAs[Int]("k")).toSeq == ks)
+      sel.foreach { row =>
+        val k = row.getAs[Int]("k")
+        val clusters = Clustering.fit(movies, k).transform(movies)
+          .select(col("movieId"), col("prediction").as("cluster"))
+        val old = Metrics.rmse(Clustering.clusterAvgPredictions(rated, rated, clusters))
+        val got = row.getAs[Double]("trainRmse")
+        assert(relClose(got, old), s"k=$k: one-pass $got vs rejoined $old")
+      }
+    }
+    // the MlSpec ratings over movies 10..13 (3 distinct vectors)
+    val fourMovies = Seq((10, Seq(1.0, 0.0)), (11, Seq(0.0, 1.0)),
+      (12, Seq(1.0, 1.0)), (13, Seq(1.0, 0.0)))
+      .map { case (m, v) => (m, org.apache.spark.ml.linalg.Vectors.dense(v.toArray)) }
+      .toDF("movieId", "features")
+    check(fourMovies, ratings, 2 to 4)
+    // half-star ratings (3.5, 4.5, ...) over the repeated-vector movies
+    val halfStars = for (u <- 1 to 12; m <- 0 until 60 if (u * 7 + m * 3) % 4 != 0)
+      yield (u, m, 1.0f + ((u * 31 + m * 17) % 9) * 0.5f)
+    check(repeatedVecs, halfStars.toDF("userId", "movieId", "rating"), 2 to 7)
+  }
+
+  test("job budget: selectK(2 to 10) + fit(bestK) runs at most 10 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftTestBridge.waitListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val k = Clustering.bestK(Clustering.selectK(spark, feats, train, ks = 2 to 10))
+      Clustering.fit(feats, k)
+      org.apache.spark.GraftTestBridge.waitListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    info(s"${jobs.get()} Spark jobs")
+    assert(jobs.get() <= 10, s"${jobs.get()} Spark jobs, budget 10")
   }
 
   test("typed SSE Aggregator matches the codegen squared_l2 sum (R-18)") {

@@ -1,6 +1,10 @@
 package graft
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
 /** Serializes `SparkEntry.oracleSql` as the driver-shaped
   * `oracle_sql.json`. Shared by [[Verify]] (end-of-run dump) and
   * OracleTypeLintSpec (which lints the declared output types in DuckDB
@@ -8,24 +12,12 @@ import java.nio.file.{Files, Path}
   * escaping.
   */
 object OracleJson {
-  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness.
-    */
-  def quote(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private val Json = new ObjectMapper()
 
-  def render(oracle: Map[String, String]): String =
-    oracle.map { case (k, v) => s"${quote(k)}: ${quote(v)}" }
-      .mkString("{", ",", "}")
-
+  /** One JSON object, entries in the map's iteration order. Jackson
+    * escapes every control character, so a tab or CR in an oracle's
+    * SQL cannot make a reader's `json.load` (tools/oracle_check.py)
+    * fail. */
   def dump(path: Path, oracle: Map[String, String] = SparkEntry.oracleSql): Unit =
-    Files.writeString(path, render(oracle))
+    Files.writeString(path, Json.writeValueAsString(oracle.asJava))
 }

@@ -2,6 +2,9 @@ package graft.ml
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.ml.recommendation.ALSModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -49,17 +52,6 @@ object ModelStore {
     model.clusterCenters.map(v =>
       java.util.Arrays.hashCode(v.toArray).toLong).sum
 
-  /** Input-file identity + params → store key (q7c fingerprint
-    * doctrine). lineitem feeds ALS, part feeds the KMeans features. */
-  private def fingerprint(dir: String, params: Seq[Any]): String = {
-    val inputs = Seq("lineitem.parquet", "part.parquet").map { f =>
-      val p = Paths.get(dir, f)
-      s"$f:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}"
-    }
-    val key = (Seq(dir) ++ params ++ inputs).mkString("|")
-    f"${scala.util.hashing.MurmurHash3.stringHash(key)}%08x"
-  }
-
   // the version tags the fitting code: a store fitted by older code is
   // never served, and the version-free stem lets gcStale reap it
   private val StoreStem = "graft_ml_models_"
@@ -76,7 +68,9 @@ object ModelStore {
     *   <store>/checksums.json
     */
   def ensure(spark: SparkSession, dir: String): String = {
-    val fp = fingerprint(dir, Seq(AlsRank, KmeansK, 823))
+    // lineitem feeds ALS, part feeds the KMeans features
+    val fp = graft.Fs.inputFingerprint(dir,
+      Seq("lineitem.parquet", "part.parquet"), Seq(AlsRank, KmeansK, 823))
     val store = s"/tmp/$StorePrefix$fp"
     if (!Files.exists(Paths.get(store))) {
       graft.Fs.gcStale(StoreStem)
@@ -88,11 +82,10 @@ object ModelStore {
       val tmp = s"$store.tmp_${java.util.UUID.randomUUID().toString.take(8)}"
       als.write.save(s"$tmp/als")
       km.write.save(s"$tmp/kmeans")
-      val cks =
-        s"""{"als_user":${factorChecksum(als.userFactors)},
-           |"als_item":${factorChecksum(als.itemFactors)},
-           |"kmeans":${centersChecksum(km)}}""".stripMargin
-      Files.writeString(Paths.get(s"$tmp/checksums.json"), cks)
+      writeChecksums(s"$tmp/checksums.json", Seq(
+        "als_user" -> factorChecksum(als.userFactors),
+        "als_item" -> factorChecksum(als.itemFactors),
+        "kmeans" -> centersChecksum(km)))
       cached.unpersist()
       try Files.move(Paths.get(tmp), Paths.get(store))
       catch { case _: java.nio.file.FileSystemException =>
@@ -108,9 +101,20 @@ object ModelStore {
   def loadKmeans(spark: SparkSession, dir: String): KMeansModel =
     KMeansModel.load(s"${ensure(spark, dir)}/kmeans")
 
+  private val Json = new ObjectMapper()
+
+  /** A store's save-time checksums as one flat JSON object — the
+    * format this store and [[graft.operators.AnnIndex]]'s share. */
+  private[graft] def writeChecksums(file: String, cks: Seq[(String, Long)]): Unit = {
+    val o = Json.createObjectNode()
+    cks.foreach { case (k, v) => o.put(k, v) }
+    Files.writeString(Paths.get(file), Json.writeValueAsString(o))
+  }
+  private[graft] def readChecksums(file: String): Map[String, Long] =
+    Json.readTree(Files.readString(Paths.get(file))).properties().asScala
+      .map(e => e.getKey -> e.getValue.longValue).toMap
+
   /** Save-time checksums recorded by [[ensure]]. */
   def storedChecksums(store: String): Map[String, Long] =
-    """"([a-z_]+)"\s*:\s*(-?\d+)""".r
-      .findAllMatchIn(Files.readString(Paths.get(s"$store/checksums.json")))
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
+    readChecksums(s"$store/checksums.json")
 }

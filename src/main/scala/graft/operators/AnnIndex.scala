@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import graft.Tables
 import graft.functions.VectorFunctions
+import graft.ml.ModelStore
 import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -70,11 +71,9 @@ object AnnIndex {
       val tmp = s"$store.tmp_${java.util.UUID.randomUUID().toString.take(8)}"
       model.write.save(s"$tmp/quantizer")
       assigned.write.partitionBy("cent_id").parquet(s"$tmp/lists")
-      val meta =
-        s"""{"assign":${assignChecksum(assigned)},
-           |"centers":${graft.ml.ModelStore.centersChecksum(model)}}"""
-          .stripMargin
-      Files.writeString(Paths.get(s"$tmp/meta.json"), meta)
+      ModelStore.writeChecksums(s"$tmp/meta.json", Seq(
+        "assign" -> assignChecksum(assigned),
+        "centers" -> ModelStore.centersChecksum(model)))
       try Files.move(Paths.get(tmp), Paths.get(store))
       catch { case _: java.nio.file.FileSystemException =>
         graft.Fs.deleteRecursively(tmp) // another JVM won the race
@@ -84,9 +83,7 @@ object AnnIndex {
   }
 
   private def storedChecksums(store: String): Map[String, Long] =
-    """"([a-z_]+)"\s*:\s*(-?\d+)""".r
-      .findAllMatchIn(Files.readString(Paths.get(s"$store/meta.json")))
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
+    ModelStore.readChecksums(s"$store/meta.json")
 
   /** The graded query: multi-probe top-k served entirely from the
     * LOADED index, folded with the persistence + recall contract. */
@@ -99,7 +96,7 @@ object AnnIndex {
     val nIndexed = lists.count()
     val stored = storedChecksums(store)
     val roundtripOk = assignChecksum(lists) == stored("assign") &&
-      graft.ml.ModelStore.centersChecksum(model) == stored("centers")
+      ModelStore.centersChecksum(model) == stored("centers")
     // probe-list selection by the quantizer's own metric (squared L2)
     // against driver-resident model state — the q63 shape; the query
     // row itself is a bounded 1-row probe
@@ -195,7 +192,7 @@ object AnnIndex {
     // no-rebuild + base-immutability facts: both halves of the store
     // still match their save-time checksums AFTER the update
     val quantizerUnchanged =
-      graft.ml.ModelStore.centersChecksum(model) == stored("centers")
+      ModelStore.centersChecksum(model) == stored("centers")
     val baseUnchanged = assignChecksum(base) == stored("assign")
     val maxBaseId = base.agg(max("vec_id")).head().getLong(0)
     val minDeltaId = spark.read.parquet(deltaDir)
@@ -281,11 +278,9 @@ object AnnIndex {
       // save-time checksum measured from the WRITTEN files (the qaj
       // write-fidelity doctrine: record what is on disk, not what was
       // in memory)
-      val meta =
-        s"""{"assign":${assignChecksum(spark.read.parquet(s"$tmp/lists"))},
-           |"centers":${graft.ml.ModelStore.centersChecksum(model)}}"""
-          .stripMargin
-      Files.writeString(Paths.get(s"$tmp/meta.json"), meta)
+      ModelStore.writeChecksums(s"$tmp/meta.json", Seq(
+        "assign" -> assignChecksum(spark.read.parquet(s"$tmp/lists")),
+        "centers" -> ModelStore.centersChecksum(model)))
       try Files.move(Paths.get(tmp), Paths.get(store))
       catch { case _: java.nio.file.FileSystemException =>
         graft.Fs.deleteRecursively(tmp) // another JVM won the race
@@ -309,7 +304,7 @@ object AnnIndex {
     import spark.implicits._
     Seq((nCompacted - nNew, nNew.toLong, nCompacted,
         loadedChecksum == expected && loadedChecksum == meta("assign"),
-        graft.ml.ModelStore.centersChecksum(loadedModel) ==
+        ModelStore.centersChecksum(loadedModel) ==
           baseMeta("centers"),
         top1.getLong(0) == idOffset &&
           math.abs(top1.getDouble(1) - 1.0) < 1e-12))

@@ -195,15 +195,6 @@ object Dedup {
         .repartition(numPartitions.getOrElse(spark.sparkContext.defaultParallelism)),
       numHashes, bands, bucketCap)
 
-  /** Core of q52 over any (doc_id, text) frame, so specs can plant a
-    * degenerate bucket and assert the cap bounds the candidate set.
-    * Caller controls partitioning: one parquet file would otherwise mean
-    * ONE task doing every signature; at 100 TB the input arrives
-    * pre-split, locally `minhashNearDupPairs` spreads the per-doc work
-    * across all cores. Signatures are computed in two projection steps
-    * (tokenize once, then fold) and the banded table is cached because
-    * the bucket-size table AND both self-join sides consume it — without
-    * the cache the whole signature pipeline runs three times. */
   /** The (doc_id, band, bucket) banded-signature table — the LSH index
     * row format. Factored out so the batch self-join (q52) and the
     * incremental probe (q8f) band with IDENTICAL arithmetic: an index
@@ -222,6 +213,15 @@ object Dedup {
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
   }
 
+  /** Core of q52 over any (doc_id, text) frame, so specs can plant a
+    * degenerate bucket and assert the cap bounds the candidate set.
+    * Caller controls partitioning: one parquet file would otherwise mean
+    * ONE task doing every signature; at 100 TB the input arrives
+    * pre-split, locally `minhashNearDupPairs` spreads the per-doc work
+    * across all cores. Signatures are computed in two projection steps
+    * (tokenize once, then fold) and the banded table is cached because
+    * the bucket-size table AND both self-join sides consume it — without
+    * the cache the whole signature pipeline runs three times. */
   def minhashNearDupPairsOf(docs: DataFrame, numHashes: Int = 16,
       bands: Int = 4, bucketCap: Long = 64L): DataFrame = {
     val banded = bandedSignatures(docs, numHashes, bands).cache()
@@ -265,20 +265,6 @@ object Dedup {
           (col("na") + col("nb") - col("shared"))).as("jac"))
   }
 
-  /** q52 graded form: the banded-MinHash candidate set folded into a
-    * deterministic RECALL + BOUNDEDNESS contract (the q62/q63 pattern —
-    * the candidate list itself is xxhash64-derived and engine-specific,
-    * so emitting pairs would be oracle-fragile; what an external engine
-    * CAN replay is the exact trigram-Jaccard truth and literal-true
-    * contract booleans that Spark computes for real). One row:
-    * `n_true_pairs`/`sum_true_ids` pin the exact truth set (count AND
-    * membership), `recall_ok` asserts the banded join found ≥ 80% of it
-    * (observed: 100% at sf0.01 and sf0.1 — 16 hashes / 4 bands at
-    * J ≥ 0.7 gives per-pair catch probability ≈ 1−(1−0.7⁴)⁴ ≈ 0.97),
-    * and `candidates_bounded` asserts the candidate set stayed LINEAR in
-    * the corpus (≤ `candFactor`·n_docs; observed 279 candidates for
-    * 5,000 docs) — the quadratic-blowup tripwire the bucket cap exists
-    * to keep true. */
   /** q4q: FUZZY DECONTAMINATION — q49 catches VERBATIM n-gram overlap
     * between train and eval; paraphrased or lightly-edited benchmark
     * leakage needs the near-dup machinery pointed ACROSS the split.
@@ -684,6 +670,20 @@ object Dedup {
            tot.total_dup_tokens, tot.corpus_dup_ppm, tot.n_docs_with_dup
     FROM rk CROSS JOIN tot WHERE rk.rank <= 12 ORDER BY rk.rank"""
 
+  /** q52 graded form: the banded-MinHash candidate set folded into a
+    * deterministic RECALL + BOUNDEDNESS contract (the q62/q63 pattern —
+    * the candidate list itself is xxhash64-derived and engine-specific,
+    * so emitting pairs would be oracle-fragile; what an external engine
+    * CAN replay is the exact trigram-Jaccard truth and literal-true
+    * contract booleans that Spark computes for real). One row:
+    * `n_true_pairs`/`sum_true_ids` pin the exact truth set (count AND
+    * membership), `recall_ok` asserts the banded join found ≥ 80% of it
+    * (observed: 100% at sf0.01 and sf0.1 — 16 hashes / 4 bands at
+    * J ≥ 0.7 gives per-pair catch probability ≈ 1−(1−0.7⁴)⁴ ≈ 0.97),
+    * and `candidates_bounded` asserts the candidate set stayed LINEAR in
+    * the corpus (≤ `candFactor`·n_docs; observed 279 candidates for
+    * 5,000 docs) — the quadratic-blowup tripwire the bucket cap exists
+    * to keep true. */
   def minhashPairsContract(spark: SparkSession, dir: String,
       jHi: Double = 0.7, minRecall: Double = 0.8,
       candFactor: Long = 4L): DataFrame = {

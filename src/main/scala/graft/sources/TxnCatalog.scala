@@ -358,7 +358,7 @@ class GraftTxnCatalog extends TableCatalog with SupportsNamespaces
     // absent = all long) — typed per-file bounds for non-Long pruning
     val statsTypes = props.get("stats_types")
       .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
-    val m = TxnTable.createEmpty(spark, root(ident), schema.toDDL,
+    TxnTable.createEmpty(spark, root(ident), schema.toDDL,
       need("key"), need("shards").toInt, need("layout_div").toLong, statsCols,
       statsTypes, identityCol, identityStart)
     props.get("check").filter(_.nonEmpty)
@@ -1808,7 +1808,6 @@ object GraftTxnCatalog {
       CREATE TABLE graft.sql_proc (k BIGINT, c BIGINT) USING graft_txn
       TBLPROPERTIES ('key'='k', 'shards'='16', 'layout_div'='${mxK + 1}')""")
     spark.sql("INSERT INTO graft.sql_proc SELECT k, c FROM docs_sqlproc")
-    val root = graft.Fs.scratch("graft_txn_catalog_wh") + "/sql_proc"
     val opt = spark.sql("CALL graft.system.optimize('sql_proc', 4)").head()
     spark.sql("CALL graft.system.delete_mor('sql_proc', 'c % 7 = 3')") // v3
     val purge = spark.sql("CALL graft.system.purge_deletes('sql_proc')").head()

@@ -256,7 +256,6 @@ object TxnStream {
     * fail loudly (`rewrite_refused`), the documented append-only
     * contract enforced in code. */
   def txnStreamRead(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.Fs.scratch("graft_txn_streamread")
     val ckpt = graft.Fs.scratch("graft_txn_streamread_ckpt")
     graft.Fs.deleteRecursively(ckpt)
     GraftTxnCatalog.register(spark)

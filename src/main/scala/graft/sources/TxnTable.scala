@@ -6,6 +6,7 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -69,14 +70,16 @@ object TxnTable {
     * manifest's declared [[Manifest.statsCols]] (parallel by index);
     * the full-range sentinels mark an all-null column in that file
     * ("prunes nothing", the round-9 qd6 doctrine extended to value
-    * columns). */
-  /** `dv`/`dvRows` (when set) attach a DELETION VECTOR to the file —
+    * columns).
+    *
+    * `dv`/`dvRows` (when set) attach a DELETION VECTOR to the file —
     * a tiny position sidecar listing the row indexes deleted from it
     * (merge-on-read, [[deleteMor]]): `nRows` stays the PHYSICAL row
     * count, live rows = `nRows - dvRows`, and min/max stats remain
     * sound for pruning (deletion only shrinks a file's true range —
-    * stale-wide bounds skip nothing they shouldn't). */
-  /** `bloom` carries one BLOOM FILTER per declared stats column
+    * stale-wide bounds skip nothing they shouldn't).
+    *
+    * `bloom` carries one BLOOM FILTER per declared stats column
     * (parallel to `vmin`/`vmax`, a base64-encoded [[BloomBits]]-bit
     * set — 64K bits, 3 hashes): the file-skipping fact min/max ranges
     * cannot express — a POINT probe on a scattered high-cardinality
@@ -84,8 +87,9 @@ object TxnTable {
     * holds the value). Manifest cost: up to ~10.9 KB of base64 per
     * stats column per file when saturated (BitSet.toByteArray trims
     * trailing zero words, so sparse filters serialize smaller); empty
-    * on pre-bloom files (skips nothing, never wrong). */
-  /** `vcnt`/`vsum` carry each stats column's per-file NON-NULL count
+    * on pre-bloom files (skips nothing, never wrong).
+    *
+    * `vcnt`/`vsum` carry each stats column's per-file NON-NULL count
     * and exact sum (folded exactly at write; a sum outside the Long
     * range stores the vcnt = -1 "unknown" sentinel) — the
     * facts that let `SUM(col)` / `COUNT(col)` answer METADATA-ONLY
@@ -111,8 +115,9 @@ object TxnTable {
     * never remove files, so resolution is pure concatenation; every
     * rewriting op (create/transact/optimize) and every
     * `checkpointEvery`-th append commits full, bounding the resolve
-    * chain the way Delta's `_last_checkpoint` does. */
-  /** `checkExpr` (when nonempty) is a SQL boolean every row of every
+    * chain the way Delta's `_last_checkpoint` does.
+    *
+    * `checkExpr` (when nonempty) is a SQL boolean every row of every
     * later commit must satisfy — the Delta CHECK-constraint/invariant
     * shape, enforced at WRITE time by every data write's
     * [[TxnFileWriter]] against the rows as WRITTEN (counted while the
@@ -133,11 +138,7 @@ object TxnTable {
     * distinct WRITERS, not commits, which is what keeps it manifest-
     * inline at 10⁶ commits.
     *
-    * All string fields are JSON-escaped on write and unescaped on
-    * parse ([[esc]]/[[unesc]]) — a checkExpr or schema DDL containing
-    * a double quote round-trips exactly instead of silently truncating
-    * (the round-9 prose constraint, now enforced by the codec). */
-  /** `renames` is the COLUMN MAPPING (the Delta column-mapping idea):
+    * `renames` is the COLUMN MAPPING (the Delta column-mapping idea):
     * (physical → logical) name pairs for columns renamed after their
     * files were written. `schemaDdl` stays the PHYSICAL schema (what
     * the parquet files carry — the file-read contract never changes);
@@ -149,15 +150,17 @@ object TxnTable {
     * old files still carry the bytes, so re-adding the name would
     * resurrect stale values — [[addColumn]] refuses tombstoned names.
     * A full-rewrite commit (transact/optimize) writes logical names
-    * physically and so NORMALIZES the mapping away. */
-  /** CHANGE DATA FEED facts (the Delta CDF idea): `cdfKind` classifies
+    * physically and so NORMALIZES the mapping away.
+    *
+    * CHANGE DATA FEED facts (the Delta CDF idea): `cdfKind` classifies
     * the commit's row-level delta for [[changeFeed]] — "adds" (an
     * append: its new files ARE the inserted rows), "files" (a DML
     * commit that wrote explicit change files at `cdfPath`, `cdfRows`
     * rows), "none" (provably no logical row change: optimize, purge,
     * metadata-only DDL), or "" (unknown — pre-CDF manifests and
-    * arbitrary rewrites; the feed refuses loudly rather than guesses). */
-  /** `statsTypes` (parallel to `statsCols`; empty = all "long") maps
+    * arbitrary rewrites; the feed refuses loudly rather than guesses).
+    *
+    * `statsTypes` (parallel to `statsCols`; empty = all "long") maps
     * each stats column into the manifest's single Long stat lane by an
     * ORDER-PRESERVING encode — the Iceberg typed-bounds idea on this
     * log without forking the codec per type:
@@ -308,185 +311,99 @@ object TxnTable {
   private def logFile(root: String, v: Int) =
     Paths.get(logDir(root), f"v$v%08d.json")
 
-  /** Minimal JSON string escape: backslash, double quote, and control
-    * chars — exactly the set whose absence the round-9 codec demanded
-    * as a prose contract. [[unesc]] inverts it, so ANY op / checkExpr /
-    * schema DDL round-trips bit-exactly (property-tested). */
-  private[graft] def esc(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '\\'           => b.append("\\\\")
-      case '"'            => b.append("\\\"")
-      case c if c < ' '   => b.append(f"\\u${c.toInt}%04x")
-      case c              => b.append(c)
-    }
-    b.toString
-  }
-  private[graft] def unesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) s.charAt(i + 1) match {
-        case '\\' => b.append('\\'); i += 2
-        case '"'  => b.append('"'); i += 2
-        case 'u'  =>
-          b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-          i += 6
-        case other => b.append(c).append(other); i += 2
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
-  // a JSON string literal under the escape above: any run of non-quote,
-  // non-backslash chars or backslash-escape pairs, to the closing quote
-  private val Str = """((?:[^"\\]|\\.)*)"""
-  private def longs(xs: Seq[Long]): String = xs.mkString("[", ",", "]")
-  private def txnJson(t: (String, Long)): String =
-    s"""{"app":"${esc(t._1)}","v":${t._2}}"""
+  private val Json = new ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
+  /** The manifest's JSON, fields in a fixed order. Strings go through
+    * Jackson's escaping, so any op / checkExpr / schema DDL round-trips
+    * exactly (property-tested). */
   private[graft] def toJson(m: Manifest): String = {
-    val fs = m.files.map(f =>
-      s"""{"path":"${esc(f.path)}","n_rows":${f.nRows},"min_k":${f.minK},""" +
-        s""""max_k":${f.maxK},"min_k2":${f.minK2},"max_k2":${f.maxK2},""" +
-        s""""bytes":${f.bytes},"vmin":${longs(f.vmin)},"vmax":${longs(f.vmax)},""" +
-        s""""dv":"${esc(f.dv)}","dv_rows":${f.dvRows},""" +
-        s""""bloom":[${f.bloom.map(b => s""""$b"""").mkString(",")}],""" +
-        s""""vcnt":${longs(f.vcnt)},"vsum":${longs(f.vsum)}}""")
-      .mkString("[", ",", "]")
-    s"""{"version":${m.version},"op":"${esc(m.op)}","key_col":"${esc(m.keyCol)}",""" +
-      s""""key_col2":"${esc(m.keyCol2)}","schema":"${esc(m.schemaDdl)}",""" +
-      s""""shards":${m.shards},"layout_div":${m.layoutDiv},""" +
-      s""""delta_of":${m.deltaOf},"commit_ms":${m.commitMs},""" +
-      s""""check":"${esc(m.checkExpr)}",""" +
-      s""""stats_cols":[${m.statsCols.map(c => s""""${esc(c)}"""").mkString(",")}],""" +
-      s""""stats_types":[${m.statsTypes.map(c => s""""${esc(c)}"""").mkString(",")}],""" +
-      s""""renames":[${m.renames.map(r =>
-        s"""{"p":"${esc(r._1)}","l":"${esc(r._2)}"}""").mkString(",")}],""" +
-      s""""dropped":[${m.dropped.map(c => s""""${esc(c)}"""").mkString(",")}],""" +
-      s""""features":[${m.features.map(c => s""""${esc(c)}"""").mkString(",")}],""" +
-      s""""cdf_kind":"${esc(m.cdfKind)}","cdf_path":"${esc(m.cdfPath)}",""" +
-      s""""cdf_rows":${m.cdfRows},"next_id":${m.nextId},""" +
-      s""""identity_col":"${esc(m.identityCol)}","identity_start":${m.identityStart},""" +
-      s""""txns":[${m.txns.map(txnJson).mkString(",")}],""" +
-      s""""files":$fs}"""
+    val out = new java.io.StringWriter
+    val g = Json.getFactory.createGenerator(out)
+    def str(k: String, v: String): Unit = g.writeStringField(k, v)
+    def num(k: String, v: Long): Unit = g.writeNumberField(k, v)
+    def arr[A](k: String, xs: Seq[A])(w: A => Unit): Unit = {
+      g.writeArrayFieldStart(k); xs.foreach(w); g.writeEndArray()
+    }
+    def obj(body: => Unit): Unit = {
+      g.writeStartObject(); body; g.writeEndObject()
+    }
+    obj {
+      num("version", m.version); str("op", m.op); str("key_col", m.keyCol)
+      str("key_col2", m.keyCol2); str("schema", m.schemaDdl)
+      num("shards", m.shards); num("layout_div", m.layoutDiv)
+      num("delta_of", m.deltaOf); num("commit_ms", m.commitMs)
+      str("check", m.checkExpr)
+      arr("stats_cols", m.statsCols)(g.writeString)
+      arr("stats_types", m.statsTypes)(g.writeString)
+      arr("renames", m.renames) { case (p, l) => obj { str("p", p); str("l", l) } }
+      arr("dropped", m.dropped)(g.writeString)
+      arr("features", m.features)(g.writeString)
+      str("cdf_kind", m.cdfKind); str("cdf_path", m.cdfPath)
+      num("cdf_rows", m.cdfRows); num("next_id", m.nextId)
+      str("identity_col", m.identityCol); num("identity_start", m.identityStart)
+      arr("txns", m.txns) { case (app, v) => obj { str("app", app); num("v", v) } }
+      arr("files", m.files) { f => obj {
+        str("path", f.path); num("n_rows", f.nRows)
+        num("min_k", f.minK); num("max_k", f.maxK)
+        num("min_k2", f.minK2); num("max_k2", f.maxK2); num("bytes", f.bytes)
+        arr("vmin", f.vmin)(g.writeNumber); arr("vmax", f.vmax)(g.writeNumber)
+        str("dv", f.dv); num("dv_rows", f.dvRows)
+        arr("bloom", f.bloom)(g.writeString)
+        arr("vcnt", f.vcnt)(g.writeNumber); arr("vsum", f.vsum)(g.writeNumber)
+      } }
+    }
+    g.close()
+    out.toString
   }
 
-  // the dv and bloom tails are optional so older manifests keep parsing
-  private val FileRe =
-    (s"""\\{"path":"$Str","n_rows":(\\d+),"min_k":(-?\\d+),"max_k":(-?\\d+),""" +
-      """"min_k2":(-?\d+),"max_k2":(-?\d+),"bytes":(\d+),""" +
-      """"vmin":\[([-0-9,]*)\],"vmax":\[([-0-9,]*)\]""" +
-      s"""(?:,"dv":"$Str","dv_rows":(\\d+))?""" +
-      """(?:,"bloom":\[([A-Za-z0-9+/=",]*)\])?""" +
-      """(?:,"vcnt":\[([-0-9,]*)\],"vsum":\[([-0-9,]*)\])?\}""").r
-  private val TxnRe = (s"""\\{"app":"$Str","v":(-?\\d+)\\}""").r
-  private def fieldStr(json: String, name: String): String =
-    unesc((s""""$name":"$Str"""").r.findFirstMatchIn(json)
-      .getOrElse(sys.error(s"manifest missing string $name")).group(1))
-  private def fieldNum(json: String, name: String): Long =
-    (s""""$name":(-?\\d+)""").r.findFirstMatchIn(json)
-      .getOrElse(sys.error(s"manifest missing number $name")).group(1).toLong
-  // optional variants for fields added after v1 of the format (escaped
-  // strings cannot spoof a bare "name":" sequence, so whole-json
-  // search is sound — the same invariant fieldStr relies on)
-  private def fieldStrOpt(json: String, name: String): Option[String] =
-    (s""""$name":"$Str"""").r.findFirstMatchIn(json)
-      .map(m => unesc(m.group(1)))
-  private def fieldNumOpt(json: String, name: String): Option[Long] =
-    (s""""$name":(-?\\d+)""").r.findFirstMatchIn(json)
-      .map(_.group(1).toLong)
-  private def parseLongs(s: String): Seq[Long] =
-    if (s.isEmpty) Nil else s.split(',').toSeq.map(_.toLong)
-
-  private val RenRe = (s"""\\{"p":"$Str","l":"$Str"\\}""").r
-
+  /** Reads a manifest back. A field of the first format revision is
+    * required: its absence, like any syntax error, means a torn or
+    * foreign manifest and throws. Every field added later (stats_types,
+    * renames/dropped, features, cdf_*, next_id, identity_*, and per
+    * file dv/dv_rows, bloom, vcnt/vsum) reads as its empty value when
+    * absent, which is what a manifest written before it meant. */
   private[graft] def parse(json: String): Manifest = {
-    // sections parse within their own spans so an escaped quote inside
-    // a checkExpr can never bleed a files-array entry into a txn entry
-    val txnSpan = json.substring(json.indexOf(""""txns":["""),
-      json.indexOf(""","files":["""))
-    val fileSpan = json.substring(json.indexOf(""","files":["""))
-    // renames/dropped are optional (absent in pre-mapping manifests),
-    // as is stats_types (absent before typed stats). EVERY section's
-    // span ends at the NEXT section actually present — adding a field
-    // between two sections must update the EARLIER section's
-    // end-marker (the round-10 span hazard, property-tested).
-    val hasMapping = json.contains(""""renames":[""")
-    val hasTypes = json.contains(""""stats_types":[""")
-    val afterStats =
-      if (hasMapping) json.indexOf(""""renames":[""")
-      else json.indexOf(""""txns":[""")
-    val statsEnd =
-      if (hasTypes) json.indexOf(""""stats_types":[""") else afterStats
-    def strArr(span: String): Seq[String] = {
-      val body = span.substring(span.indexOf('[') + 1, span.lastIndexOf(']'))
-      (s""""$Str"""").r.findAllMatchIn(body).map(m => unesc(m.group(1))).toSeq
+    val t = Json.readTree(json)
+    // a field of the first format revision must be present
+    def req(n: JsonNode, k: String): Option[JsonNode] =
+      Some(Option(n.get(k)).getOrElse(sys.error(s"manifest missing field $k")))
+    def opt(n: JsonNode, k: String): Option[JsonNode] = Option(n.get(k))
+    def text(v: JsonNode): String = {
+      require(v.isTextual, s"manifest: expected a string, got $v")
+      v.textValue
     }
-    val statsSpan = json.substring(json.indexOf(""""stats_cols":["""), statsEnd)
-    val statsCols = strArr(statsSpan)
-    val statsTypes =
-      if (!hasTypes) Nil
-      else strArr(json.substring(json.indexOf(""""stats_types":["""), afterStats))
-    val renames =
-      if (!hasMapping) Nil
-      else RenRe.findAllMatchIn(json.substring(
-          json.indexOf(""""renames":["""), json.indexOf(""""dropped":[""")))
-        .map(m => unesc(m.group(1)) -> unesc(m.group(2))).toSeq
-    val dropped =
-      if (!hasMapping) Nil
-      else {
-        // the dropped array ends where the NEXT section starts —
-        // features when the manifest carries the feature list, txns in
-        // the interim codec revision without one
-        val fi = json.indexOf(""""features":[""")
-        val end = if (fi >= 0) fi else json.indexOf(""""txns":[""")
-        val span = json.substring(json.indexOf(""""dropped":["""), end)
-        val body = span.substring(span.indexOf('[') + 1, span.lastIndexOf(']'))
-        (s""""$Str"""").r.findAllMatchIn(body).map(m => unesc(m.group(1))).toSeq
+    def long(v: JsonNode): Long = {
+      require(v.isIntegralNumber && v.canConvertToLong,
+        s"manifest: expected a long, got $v")
+      v.longValue
+    }
+    def str(v: Option[JsonNode]): String = v.fold("")(text)
+    def num(v: Option[JsonNode]): Long = v.fold(0L)(long)
+    def arr[A](v: Option[JsonNode])(f: JsonNode => A): Seq[A] =
+      v.fold(Seq.empty[A]) { a =>
+        require(a.isArray, s"manifest: expected an array, got $a")
+        a.asScala.map(f).toSeq
       }
-    Manifest(
-      fieldNum(json, "version").toInt, fieldStr(json, "op"),
-      fieldStr(json, "key_col"), fieldStr(json, "schema"),
-      fieldNum(json, "shards").toInt, fieldNum(json, "layout_div"),
-      FileRe.findAllMatchIn(fileSpan).map(m => FileEntry(
-        unesc(m.group(1)), m.group(2).toLong, m.group(3).toLong,
-        m.group(4).toLong, m.group(5).toLong, m.group(6).toLong,
-        m.group(7).toLong, parseLongs(m.group(8)), parseLongs(m.group(9)),
-        Option(m.group(10)).map(unesc).getOrElse(""),
-        Option(m.group(11)).map(_.toLong).getOrElse(0L),
-        Option(m.group(12)).filter(_.nonEmpty)
-          .map(_.split(',').toSeq.map(_.stripPrefix("\"").stripSuffix("\"")))
-          .getOrElse(Nil),
-        parseLongs(Option(m.group(13)).getOrElse("")),
-        parseLongs(Option(m.group(14)).getOrElse(""))))
-        .toSeq,
-      fieldNum(json, "delta_of").toInt,
-      fieldStr(json, "key_col2"),
-      fieldNum(json, "commit_ms"),
-      fieldStr(json, "check"),
-      statsCols,
-      TxnRe.findAllMatchIn(txnSpan)
-        .map(m => unesc(m.group(1)) -> m.group(2).toLong).toSeq,
-      renames, dropped,
-      fieldStrOpt(json, "cdf_kind").getOrElse(""),
-      fieldStrOpt(json, "cdf_path").getOrElse(""),
-      fieldNumOpt(json, "cdf_rows").getOrElse(0L),
-      nextId = fieldNumOpt(json, "next_id").getOrElse(0L),
-      statsTypes = statsTypes,
-      identityCol = fieldStrOpt(json, "identity_col").getOrElse(""),
-      identityStart = fieldNumOpt(json, "identity_start").getOrElse(0L),
-      features = {
-        val fi = json.indexOf(""""features":[""")
-        if (fi < 0) Nil
-        else {
-          val span = json.substring(fi, json.indexOf(""""cdf_kind":""""))
-          val body = span.substring(span.indexOf('[') + 1,
-            span.lastIndexOf(']'))
-          (s""""$Str"""").r.findAllMatchIn(body)
-            .map(m => unesc(m.group(1))).toSeq
-        }
-      })
+    Manifest(num(req(t, "version")).toInt, str(req(t, "op")),
+      str(req(t, "key_col")), str(req(t, "schema")),
+      num(req(t, "shards")).toInt, num(req(t, "layout_div")),
+      arr(req(t, "files"))(f => FileEntry(str(req(f, "path")),
+        num(req(f, "n_rows")), num(req(f, "min_k")), num(req(f, "max_k")),
+        num(req(f, "min_k2")), num(req(f, "max_k2")), num(req(f, "bytes")),
+        arr(req(f, "vmin"))(long), arr(req(f, "vmax"))(long),
+        str(opt(f, "dv")), num(opt(f, "dv_rows")), arr(opt(f, "bloom"))(text),
+        arr(opt(f, "vcnt"))(long), arr(opt(f, "vsum"))(long))),
+      num(req(t, "delta_of")).toInt, str(req(t, "key_col2")),
+      num(req(t, "commit_ms")), str(req(t, "check")),
+      arr(req(t, "stats_cols"))(text),
+      arr(req(t, "txns"))(x => str(req(x, "app")) -> num(req(x, "v"))),
+      arr(opt(t, "renames"))(r => str(req(r, "p")) -> str(req(r, "l"))),
+      arr(opt(t, "dropped"))(text),
+      str(opt(t, "cdf_kind")), str(opt(t, "cdf_path")), num(opt(t, "cdf_rows")),
+      arr(opt(t, "features"))(text), num(opt(t, "next_id")),
+      arr(opt(t, "stats_types"))(text),
+      str(opt(t, "identity_col")), num(opt(t, "identity_start")))
   }
 
   /** Versions whose manifests exist in the log, ascending — contiguous

@@ -508,6 +508,110 @@ class TxnTableSpec extends SparkSpec {
     }
   }
 
+  // Frozen bytes of the manifest codec's output for a manifest with
+  // every field set: quotes, backslashes and non-ASCII in strings, a
+  // deletion vector, blooms, vcnt/vsum, mapping, typed stats, identity,
+  // txns and an external file. Written before the codec moved to
+  // Jackson; the writer must keep producing them byte for byte.
+  private val goldenManifest = TxnTable.Manifest(7, "merge \"q\" \\ café", "k",
+    "k BIGINT,v BIGINT,name STRING,ts TIMESTAMP", 4, 250L,
+    Seq(
+      TxnTable.FileEntry("data/v7-ab/__shard=0/part-0.parquet", 10L, -3L, 9L,
+        -2L, 7L, 4096L, Seq(1L, -5L, 6L), Seq(3L, 8L, 99L),
+        dv = "data/dv-v7-cd/__fid=0", dvRows = 2L,
+        bloom = Seq("AAECq/8=", "", "QUJD"), vcnt = Seq(10L, 9L, 10L),
+        vsum = Seq(40L, -1L, 500L)),
+      TxnTable.FileEntry("/ext/naïve/part-1.parquet", 5L, 10L, 20L,
+        bytes = 2048L)),
+    deltaOf = 6, keyCol2 = "v", commitMs = 1760000000123L,
+    checkExpr = "v >= 0 AND name <> '\"x\\\\y\"' AND name <> 'ü€'",
+    statsCols = Seq("v", "name", "ts"), txns = Seq("app-1" -> 4L, "ström" -> 9L),
+    renames = Seq("amount" -> "cents", "n\"q" -> "l\\b"),
+    dropped = Seq("note", "old\\col"),
+    cdfKind = "files", cdfPath = "data/v7-ab/_cdf", cdfRows = 3L,
+    features = Seq("bloom-filters", "change-data-feed", "column-mapping",
+      "deletion-vectors", "external-files", "identity-columns", "typed-stats"),
+    nextId = 42L, statsTypes = Seq("long", "string", "timestamp"),
+    identityCol = "id", identityStart = 100L)
+  private val goldenJson =
+    """{"version":7""" +
+      ""","op":"merge \"q\" \\ café","key_col":"k","key""" +
+      """_col2":"v","schema":"k BIGINT,v BIGINT,name STRING""" +
+      """,ts TIMESTAMP","shards":4,"layout_div":250,"delta_of":6""" +
+      ""","commit_ms":1760000000123""" +
+      ""","check":"v >= 0 AND name <> '\"x\\\\y\"' AND name <>""" +
+      """ 'ü€'","stats_cols":["v","name","ts"]""" +
+      ""","stats_types":["long","string","timestamp"]""" +
+      ""","renames":[{"p":"amount","l":"cents"},{"p":"n\"q","l":"l\\b"}]""" +
+      ""","dropped":["note","old\\col"]""" +
+      ""","features":["bloom-filters","change-data-feed","column""" +
+      """-mapping","deletion-vectors","external-files","identity""" +
+      """-columns","typed-stats"]""" +
+      ""","cdf_kind":"files","cdf_path":"data/v7-ab/_cdf","cdf_rows":3""" +
+      ""","next_id":42,"identity_col":"id","identity_start":100""" +
+      ""","txns":[{"app":"app-1","v":4},{"app":"ström","v":9}]""" +
+      ""","files":[{"path":"data/v7-ab/__shard=0/part-0.parquet","n""" +
+      """_rows":10,"min_k":-3,"max_k":9,"min_k2":-2,"max_k2":7""" +
+      ""","bytes":4096,"vmin":[1,-5,6],"vmax":[3,8,99]""" +
+      ""","dv":"data/dv-v7-cd/__fid=0","dv_rows":2""" +
+      ""","bloom":["AAECq/8=","","QUJD"],"vcnt":[10,9,10],"vsum":[40,-1""" +
+      """,500]},{"path":"/ext/naïve/part-1.parquet","n_rows":5,"min_k":10""" +
+      ""","max_k":20,"min_k2":-9223372036854775808""" +
+      ""","max_k2":9223372036854775807,"bytes":2048,"vmin":[],"vmax":[]""" +
+      ""","dv":"","dv_rows":0,"bloom":[],"vcnt":[],"vsum":[]}]}"""
+
+  test("manifest codec writes the frozen golden bytes and parses them back") {
+    assert(TxnTable.toJson(goldenManifest) == goldenJson)
+    assert(TxnTable.parse(goldenJson) == goldenManifest)
+  }
+
+  test("manifest codec reads control characters in the six-character escape form") {
+    // the pre-Jackson writer escaped every control character, tab and
+    // newline included, as a backslash, `u` and four hex digits
+    val old =
+      "{\"version\":1,\"op\":\"op\\u0009with\\u0009tabs\"" +
+        ",\"key_col\":\"k\",\"key_col2\":\"\",\"schema\":\"k BIGINT\"" +
+        ",\"shards\":1,\"layout_div\":1,\"delta_of\":-1,\"commit_ms\":3" +
+        ",\"check\":\"a\\u000ab\\u0009c\",\"stats_cols\":[]" +
+        ",\"stats_types\":[],\"renames\":[],\"dropped\":[]" +
+        ",\"features\":[],\"cdf_kind\":\"\",\"cdf_path\":\"\"" +
+        ",\"cdf_rows\":0,\"next_id\":0,\"identity_col\":\"\"" +
+        ",\"identity_start\":0,\"txns\":[],\"files\":[]}"
+    assert(TxnTable.parse(old) == TxnTable.Manifest(1, "op\twith\ttabs", "k",
+      "k BIGINT", 1, 1L, Nil, commitMs = 3L, checkExpr = "a\nb\tc"))
+  }
+
+  test("a torn or incomplete manifest is refused, never read short; unknown file fields are ignored") {
+    val m = TxnTable.Manifest(1, "append", "k", "k BIGINT", 2, 10L,
+      (0 until 3).map(i => TxnTable.FileEntry(s"data/v1-aa/p$i.parquet", 5L,
+        i * 10L, i * 10L + 9L, bytes = 100L)))
+    val json = TxnTable.toJson(m)
+    (0 until json.length).foreach { n =>
+      val torn = scala.util.Try(TxnTable.parse(json.take(n)))
+      assert(torn.isFailure,
+        s"a $n-char prefix parsed to ${torn.map(_.files.size)} files")
+    }
+    // so is one with bytes after its closing brace
+    assert(scala.util.Try(TxnTable.parse(json + json)).isFailure)
+    // and one missing a field of the first format revision
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    Seq("version", "op", "key_col", "key_col2", "schema", "shards",
+      "layout_div", "delta_of", "commit_ms", "check", "stats_cols", "txns",
+      "files").foreach { k =>
+      val t = mapper.readTree(json)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      t.remove(k)
+      assert(scala.util.Try(TxnTable.parse(mapper.writeValueAsString(t))).isFailure,
+        s"parsed without $k")
+    }
+    // a file entry carrying a field this reader does not know keeps
+    // its file
+    val extended = json.replace("\"vsum\":[]},{\"path\":\"data/v1-aa/p2",
+      "\"vsum\":[],\"tag\":\"x\"},{\"path\":\"data/v1-aa/p2")
+    assert(extended != json)
+    assert(TxnTable.parse(extended) == m)
+  }
+
   test("string stat encode: order-preserving under truncation, SQL twin agrees") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed

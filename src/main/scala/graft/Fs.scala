@@ -72,6 +72,19 @@ object Fs {
     fs.listStatus(p).toSeq.map(_.getPath.getName).filter(_.endsWith(suffix))
   }
 
+  /** Stage a lost streaming ack: delete checkpoint `ckptDir`'s highest
+    * `commits/N`, so the next run re-delivers batch N. */
+  def dropLastCommitAck(ckptDir: String): Unit = {
+    val commits = new java.io.File(s"$ckptDir/commits").listFiles()
+      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt)
+    require(commits.nonEmpty && commits.last.delete(),
+      "could not stage the lost-ack crash window")
+    // the local ChecksumFileSystem keeps a .N.crc sidecar; left behind,
+    // the re-commit's atomic create trips over it and misreports a
+    // concurrent writer
+    new java.io.File(s"$ckptDir/commits/.${commits.last.getName}.crc").delete()
+  }
+
   /** Recursive delete that VERIFIES the target is gone. Every caller
     * uses this as a precondition — clearing a sink/checkpoint dir before
     * a streaming run whose results are read back from it — so a silently

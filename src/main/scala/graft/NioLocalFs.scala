@@ -5,7 +5,6 @@ import java.nio.file.attribute.PosixFilePermission
 import java.nio.file.{Files, NoSuchFileException}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.local.RawLocalFs
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 

@@ -480,12 +480,13 @@ object SparkEntry {
     "q74_sse_parity"        -> (FixturePipelines.sseParity _),
   )
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for seeded-stochastic /
-    * engine-specific-hash queries → driver records rows-only checks. */
   /** The TVF-surface queries (qam/qan/qao) are the SQL-text twins of
     * q40/q50/q61 — same operator, same output contract — so they share
-    * those oracles verbatim: one semantics, two entry points. */
+    * those oracles verbatim: one semantics, two entry points.
+    *
+    * For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. Omitted for seeded-stochastic /
+    * engine-specific-hash queries → rows-only checks. */
   def oracleSql: Map[String, String] = oracleBase ++ Map(
     "qam_tvf_token_stats" -> oracleBase("q40_token_stats"),
     "qan_tvf_exact_dedup" -> oracleBase("q50_dedup_exact_key"),

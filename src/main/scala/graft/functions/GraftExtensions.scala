@@ -48,16 +48,6 @@ object GraftExtensions {
       spark.experimental.extraStrategies = cur :+ graft.plans.AsofJoinStrategy
   }
 
-  /** qaf: a SQL TABLE-VALUED FUNCTION — the fourth extension seam
-    * (after scalar functions, the optimizer rule, and the planner
-    * strategy): `injectTableFunction` maps `graft_synth(lo, hi)` in a
-    * SQL FROM clause to a LOGICAL PLAN the function builder
-    * constructs — a `Range` with the qa6 connector's deterministic
-    * Lehmer projection on top, so the TVF is the SQL-text twin of the
-    * DSv2 source and shares its oracle arithmetic. Bounds must be
-    * foldable literals (evaluated at plan construction); the plan is
-    * a plain Range + Project, so it splits, prunes, and codegens like
-    * any native scan. */
   /** Shared literal-argument plumbing for the operator TVFs below: a
     * TVF builder runs at ANALYSIS time on the driver, so it may consult
     * the active session and return the operator's own logical plan —
@@ -81,6 +71,16 @@ object GraftExtensions {
       build(SparkSession.active, args).queryExecution.logical
     }
 
+  /** qaf: a SQL TABLE-VALUED FUNCTION — the fourth extension seam
+    * (after scalar functions, the optimizer rule, and the planner
+    * strategy): `injectTableFunction` maps `graft_synth(lo, hi)` in a
+    * SQL FROM clause to a LOGICAL PLAN the function builder
+    * constructs — a `Range` with the qa6 connector's deterministic
+    * Lehmer projection on top, so the TVF is the SQL-text twin of the
+    * DSv2 source and shares its oracle arithmetic. Bounds must be
+    * foldable literals (evaluated at plan construction); the plan is
+    * a plain Range + Project, so it splits, prunes, and codegens like
+    * any native scan. */
   val tableFunctions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => LogicalPlan)] = Seq(
     // flagship operators as SQL TVFs (round-7 verdict item 7): the

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
-/** Native Catalyst expressions for document-hash sketches.
+/* Native Catalyst expressions for document-hash sketches.
   *
   * SimHash was first written as a `aggregate`/`zip_with` higher-order
   * chain with a 64-slot array accumulator; HOFs don't participate in

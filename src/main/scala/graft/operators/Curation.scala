@@ -441,18 +441,6 @@ object Curation {
     SELECT custkey, CAST(rk AS INTEGER) AS rk, partkey, trial
     FROM r WHERE rk <= 5 ORDER BY custkey, rk"""
 
-  /** q4h: FREQUENT TOKEN PAIRS — co-occurrence mining (the Apriori/
-    * market-basket 2-itemset pass) over the documents table: tokens
-    * distinct-ed per document, paired within the document (canonical
-    * a < b order), support-counted, thresholded.
-    *
-    * Scale shape: the pair fan-out is Σ(tokens-per-doc choose 2), which
-    * a length cap per document bounds (the classic Apriori guard; here
-    * the fixture's docs are short). At 100 TB the 2-stage refinement is
-    * to first count 1-item support and keep only frequent tokens before
-    * pairing (downward closure) — that is one extra aggregate + semi
-    * join in this same plan shape. The tokenizer is the shared
-    * `[^a-z]+` split so the DuckDB oracle tokenizes identically. */
   /** The q4h/q4o candidate pipeline, defined ONCE (the affineLinkEdges
     * rule: two graded queries built on "the same pairs" must share the
     * definition or they silently drift): per-doc DISTINCT alpha tokens
@@ -471,6 +459,18 @@ object Curation {
       .agg(count(lit(1)).as("support"))
       .where(col("support") >= minSupport)
 
+  /** q4h: FREQUENT TOKEN PAIRS — co-occurrence mining (the Apriori/
+    * market-basket 2-itemset pass) over the documents table: tokens
+    * distinct-ed per document, paired within the document (canonical
+    * a < b order), support-counted, thresholded.
+    *
+    * Scale shape: the pair fan-out is Σ(tokens-per-doc choose 2), which
+    * a length cap per document bounds (the classic Apriori guard; here
+    * the fixture's docs are short). At 100 TB the 2-stage refinement is
+    * to first count 1-item support and keep only frequent tokens before
+    * pairing (downward closure) — that is one extra aggregate + semi
+    * join in this same plan shape. The tokenizer is the shared
+    * `[^a-z]+` split so the DuckDB oracle tokenizes identically. */
   def frequentPairs(spark: SparkSession, dir: String,
       minSupport: Long = 50L): DataFrame =
     pairSupports(docDistinctTokens(spark, dir), minSupport)

@@ -1286,24 +1286,6 @@ object Dedup {
       .orderBy("a", "b")
   }
 
-  /** q8a: DEDUP RETENTION CURVE — the threshold-tuning table every
-    * near-dup pipeline produces before committing to a cutoff: for a
-    * sweep of Jaccard thresholds, how many pairs qualify, how many
-    * documents the drop-the-higher-id rule removes, and what fraction
-    * of the corpus (docs and char mass) survives. One pair table is
-    * computed ONCE — the q4k shared-gram machinery with the same
-    * document-frequency cap, scored as full Jaccard over the capped
-    * gram space (stop-gram removal before scoring is itself standard) —
-    * then the 5-threshold sweep is a replicate-and-aggregate over that
-    * ≤|pairs| table: the sweep costs 5× a tiny frame, never 5× the
-    * corpus scan. jacc_ppm is exact integer arithmetic
-    * (shared·1e6 div (|A|+|B|−shared)), so qualification at each
-    * threshold replays bit-for-bit; thresholds with zero qualifying
-    * pairs still emit their row (left joins from the threshold spine),
-    * which is what makes the curve a curve. The default sweep is
-    * fixture-calibrated to straddle the planted near-dup mass
-    * (~0.96–0.99 Jaccard): 3404 / 25 / 18 / 11 / 0 pairs at sf0.01 —
-    * the too-loose end, the knee, and a provably-empty too-strict row. */
   /** Shared-gram exact-Jaccard pair table (a, b, jacc_ppm) over the
     * df-capped gram space — the q4k candidate machinery scored as full
     * Jaccard in exact integer ppm. Cached: feeds q8a's 5 threshold
@@ -1331,6 +1313,24 @@ object Dedup {
       .cache()
   }
 
+  /** q8a: DEDUP RETENTION CURVE — the threshold-tuning table every
+    * near-dup pipeline produces before committing to a cutoff: for a
+    * sweep of Jaccard thresholds, how many pairs qualify, how many
+    * documents the drop-the-higher-id rule removes, and what fraction
+    * of the corpus (docs and char mass) survives. One pair table is
+    * computed ONCE — the q4k shared-gram machinery with the same
+    * document-frequency cap, scored as full Jaccard over the capped
+    * gram space (stop-gram removal before scoring is itself standard) —
+    * then the 5-threshold sweep is a replicate-and-aggregate over that
+    * ≤|pairs| table: the sweep costs 5× a tiny frame, never 5× the
+    * corpus scan. jacc_ppm is exact integer arithmetic
+    * (shared·1e6 div (|A|+|B|−shared)), so qualification at each
+    * threshold replays bit-for-bit; thresholds with zero qualifying
+    * pairs still emit their row (left joins from the threshold spine),
+    * which is what makes the curve a curve. The default sweep is
+    * fixture-calibrated to straddle the planted near-dup mass
+    * (~0.96–0.99 Jaccard): 3404 / 25 / 18 / 11 / 0 pairs at sf0.01 —
+    * the too-loose end, the knee, and a provably-empty too-strict row. */
   def retentionCurve(spark: SparkSession, dir: String,
       n: Int = 3, dfCap: Long = 64L,
       thresholds: Seq[Long] = Seq(10000L, 100000L, 970000L, 980000L, 990000L))

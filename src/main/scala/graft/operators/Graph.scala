@@ -52,13 +52,6 @@ object Graph {
     ranks
   }
 
-  /** q5b: PageRank on the graded surface. The link graph is synthesized
-    * arithmetically from doc ids (3 out-edges per document via affine
-    * maps mod |V| — multipliers coprime to the fixture sizes, so
-    * in-degree is uniform too), which keeps the operator real — the
-    * joins, degree normalization, and damping are exactly a web-graph
-    * run — while letting the DuckDB oracle rebuild the same graph and
-    * replay all 3 unrolled iterations to the same doubles. */
   /** The deterministic 3-out-edge affine link graph shared by
     * q5b/q5f/q5g — ONE definition so the three operators and their
     * arithmetic-replaying oracles can never drift apart. `srcDocs` is
@@ -71,6 +64,13 @@ object Graph {
         pmod(col("doc_id") * 17 + 3, lit(n)),
         pmod(col("doc_id") * 13 + 11, lit(n)))).as("dst"))
 
+  /** q5b: PageRank on the graded surface. The link graph is synthesized
+    * arithmetically from doc ids (3 out-edges per document via affine
+    * maps mod |V| — multipliers coprime to the fixture sizes, so
+    * in-degree is uniform too), which keeps the operator real — the
+    * joins, degree normalization, and damping are exactly a web-graph
+    * run — while letting the DuckDB oracle rebuild the same graph and
+    * replay all 3 unrolled iterations to the same doubles. */
   def linkPageRank(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
     val n = docs.count()

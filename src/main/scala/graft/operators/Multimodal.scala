@@ -4,6 +4,23 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+/** A decoded-media feature row. `byte_sum` is the sum of decoded
+  * gray-channel samples — a content fingerprint proving the raster was
+  * actually read.
+  *
+  * Top-level (not nested in the object): Janino cannot compile
+  * generated serializer code that calls accessor methods on a nested
+  * `Multimodal$MediaRow`-style class ("no applicable method found for
+  * zero actual parameters"), which silently dropped the whole encode /
+  * decode projection to interpreted mode. Top-level case classes keep
+  * the blob pipeline inside codegen. */
+case class MediaFeatures(
+    doc_id: Long, mime: String, n_bytes: Int,
+    byte_sum: Long, width: Int, height: Int)
+
+private[operators] case class MediaRow(
+    doc_id: Long, blob: Array[Byte], mime: String, n_bytes: Int, camera_id: Int)
+
 /** Multimodal-column operators (SURVEY.md §2.3 "Multimodal columns"):
   * image payloads are opaque `binary` columns with a typed metadata
   * struct alongside, decoded by a REAL codec.
@@ -25,23 +42,6 @@ import org.apache.spark.sql.functions._
   * to libjpeg/ffmpeg needs) and stay narrow transforms — no shuffle
   * until the final reporting aggregate.
   */
-/** A decoded-media feature row. `byte_sum` is the sum of decoded
-  * gray-channel samples — a content fingerprint proving the raster was
-  * actually read.
-  *
-  * Top-level (not nested in the object): Janino cannot compile
-  * generated serializer code that calls accessor methods on a nested
-  * `Multimodal$MediaRow`-style class ("no applicable method found for
-  * zero actual parameters"), which silently dropped the whole encode /
-  * decode projection to interpreted mode. Top-level case classes keep
-  * the blob pipeline inside codegen. */
-case class MediaFeatures(
-    doc_id: Long, mime: String, n_bytes: Int,
-    byte_sum: Long, width: Int, height: Int)
-
-private[operators] case class MediaRow(
-    doc_id: Long, blob: Array[Byte], mime: String, n_bytes: Int, camera_id: Int)
-
 object Multimodal {
 
   /** Deterministic blob dimensions: pure functions of doc_id so an

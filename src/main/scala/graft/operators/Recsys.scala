@@ -25,14 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Recsys {
 
-  /** q7a: ITEM-ITEM CF NEIGHBORS over the order history — "customers
-    * who bought X also bought" from `orders ⋈ lineitem` baskets
-    * (user = o_custkey, item = l_partkey, presence not quantity —
-    * the implicit-feedback reading). Per item: the top-`k` most
-    * cosine-similar other items with co-occurrence support ≥
-    * `minCooc`. cosine²(a,b) = cooc²/(n_a·n_b) rides the graded row
-    * as an exact integer ppm; ordering is (cos2_ppm desc, cooc desc,
-    * neighbor id) — a total order, so row_number is deterministic. */
   /** Distinct (user, item) pairs from the order history, with the
     * deterministic basket cap (q4k df-cap doctrine): keep the `cap`
     * LOWEST item ids per user — a rule both engines replay exactly,
@@ -53,6 +45,14 @@ object Recsys {
       .where(col("rk") <= cap).drop("rk")
   }
 
+  /** q7a: ITEM-ITEM CF NEIGHBORS over the order history — "customers
+    * who bought X also bought" from `orders ⋈ lineitem` baskets
+    * (user = o_custkey, item = l_partkey, presence not quantity —
+    * the implicit-feedback reading). Per item: the top-`k` most
+    * cosine-similar other items with co-occurrence support ≥
+    * `minCooc`. cosine²(a,b) = cooc²/(n_a·n_b) rides the graded row
+    * as an exact integer ppm; ordering is (cos2_ppm desc, cooc desc,
+    * neighbor id) — a total order, so row_number is deterministic. */
   def itemItemCF(spark: SparkSession, dir: String, cap: Int = 128,
       minCooc: Long = 2L, k: Int = 5): DataFrame = {
     val capped = cappedBasket(spark, dir, cap)
@@ -96,22 +96,6 @@ object Recsys {
         expr("(cooc * cooc * 1000000) div (n_item * n_nbr)"))
   }
 
-  /** q7b: HIT-RATE@10 EVALUATION of the q7a recommender under a
-    * TEMPORAL split — the offline metric a production recommender is
-    * actually graded by (and the honest split: train strictly before
-    * `cut`, score on what each user buys after, no leakage by
-    * construction). Neighbor lists (top-5 per item, q7a arithmetic)
-    * are fit on TRAIN baskets only; each user's candidates are the
-    * neighbors of their train items minus the train items themselves,
-    * scored by the SUM of integer cos2_ppm contributions across their
-    * train items (the standard item-kNN scorer, exact integers so the
-    * per-user top-10 is a deterministic total order); a hit is a
-    * recommended item the user really bought in the test period.
-    *
-    * One summary row: users evaluated (≥1 train and ≥1 test item),
-    * recommendations issued, hits, users with ≥1 hit, and the ppm
-    * rates — integer div, replayable. Every stage is the q7a cost
-    * shape plus two bounded joins; nothing new at scale. */
   /** Cross-JVM materialization key for the shared rec list: the input
     * files' identity (size + mtime — the driver REGENERATES the fixture
     * parquet between rounds, so path alone is stale) plus every
@@ -201,6 +185,22 @@ object Recsys {
     (train, test, popStored, recs)
   }
 
+  /** q7b: HIT-RATE@10 EVALUATION of the q7a recommender under a
+    * TEMPORAL split — the offline metric a production recommender is
+    * actually graded by (and the honest split: train strictly before
+    * `cut`, score on what each user buys after, no leakage by
+    * construction). Neighbor lists (top-5 per item, q7a arithmetic)
+    * are fit on TRAIN baskets only; each user's candidates are the
+    * neighbors of their train items minus the train items themselves,
+    * scored by the SUM of integer cos2_ppm contributions across their
+    * train items (the standard item-kNN scorer, exact integers so the
+    * per-user top-10 is a deterministic total order); a hit is a
+    * recommended item the user really bought in the test period.
+    *
+    * One summary row: users evaluated (≥1 train and ≥1 test item),
+    * recommendations made, hits, users with ≥1 hit, and the ppm
+    * rates — integer div, replayable. Every stage is the q7a cost
+    * shape plus two bounded joins; nothing new at scale. */
   def cfHitRate(spark: SparkSession, dir: String, cap: Int = 128,
       minCooc: Long = 2L, kNbr: Int = 5, kRec: Int = 10,
       cut: String = "1997-01-01"): DataFrame = {

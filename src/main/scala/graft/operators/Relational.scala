@@ -805,14 +805,6 @@ object Relational {
         max("k").as("max_k"))
       .orderBy("event_type")
 
-  /** Skew-resistant equi join via key salting: the fact side tags each
-    * row with a random-free deterministic salt (hash-derived, so the
-    * oracle can replay it) and the dimension side is exploded once per
-    * salt value, turning one hot shuffle partition per heavy key into
-    * `saltFactor` cooler ones. Result set is IDENTICAL to the unsalted
-    * join (asserted in RelationalSpec); AQE's skew-join handles the
-    * same problem adaptively — this is the explicit form for when the
-    * skew is known ahead of time. */
   /** q1b: multi-moment statistical aggregates — correlation, sample
     * covariance, sample stddev/variance per group, the profiling
     * surface every feature-engineering pass runs. All are single-pass
@@ -963,6 +955,14 @@ object Relational {
       .orderBy("s_nationkey")
   }
 
+  /** Skew-resistant equi join via key salting: the fact side tags each
+    * row with a random-free deterministic salt (hash-derived, so the
+    * oracle can replay it) and the dimension side is exploded once per
+    * salt value, turning one hot shuffle partition per heavy key into
+    * `saltFactor` cooler ones. Result set is IDENTICAL to the unsalted
+    * join (asserted in RelationalSpec); AQE's skew-join handles the
+    * same problem adaptively — this is the explicit form for when the
+    * skew is known ahead of time. */
   def joinSkewSalted(spark: SparkSession, dir: String, saltFactor: Int = 8): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .withColumn("salt", pmod(xxhash64(col("l_orderkey"), col("l_linenumber")), lit(saltFactor)))

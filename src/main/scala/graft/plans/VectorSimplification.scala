@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.{CosineSimilarity, SquaredL2Distance}
+import graft.functions.SquaredL2Distance
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, LogicalPlan, UpdateTable}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 
 /** qex: MERGE-ON-READ SQL DML — the planner choice the round-12
@@ -67,22 +66,6 @@ object MorDmlRouter {
     if (sets.contains(None)) None else Some(sets.flatten)
   }
 
-  /** The table root for a 2-part `graft.<t>` reference — a real table
-    * or a `<t>__<branch>` branch table, the catalog's own derivation;
-    * None when the name resolves to neither (the delegate's path then
-    * produces the standard error). */
-  private def rootOf(name: String): Option[String] = {
-    val wh = SparkSession.active.conf
-      .getOption("spark.sql.catalog.graft.warehouse").orNull
-    if (wh == null || name.contains("/") || name.contains("..")) return None
-    val direct = s"$wh/$name"
-    if (new java.io.File(s"$direct/_log").isDirectory) return Some(direct)
-    val i = name.lastIndexOf("__")
-    if (i <= 0) return None
-    val bRoot = s"$wh/${name.substring(0, i)}/_refs/${name.substring(i + 2)}"
-    if (new java.io.File(s"$bRoot/_log").isDirectory) Some(bRoot) else None
-  }
-
   /** Parse-time routing: price a graft-table UPDATE from its manifest
     * and reroute the narrow ones to the merge-on-read command. Returns
     * None to keep the delegate's plan (the copy-on-write path). */
@@ -92,7 +75,10 @@ object MorDmlRouter {
         if cat.equalsIgnoreCase("graft") && enabled && !hasSubquery(cond) =>
       try {
         for {
-          root <- rootOf(name)
+          // a table or a `<t>__<branch>` branch table; a name that is
+          // neither keeps the delegate's plan and its standard error
+          wh <- sessionConf.getOption("spark.sql.catalog.graft.warehouse")
+          root <- TxnLog.tableRoot(wh, name)
           sets <- plainSets(assignments) if sets.nonEmpty
           m = TxnTable.readManifest(root, TxnTable.latestVersion(root))
           sel <- TxnTable.morSelectivity(m, cond) if sel <= maxSelectivity

@@ -223,15 +223,7 @@ object SynthStream {
     val batchesRun1 = executed.get()
     // the crash window: batch N executed, its sink txn committed, but
     // the engine's commits/N ack lost — recovery must re-deliver N
-    val commits = new java.io.File(s"$ckptDir/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt)
-    require(commits.nonEmpty && new java.io.File(
-      s"$ckptDir/commits/${commits.last.getName}").delete(),
-      "could not stage the lost-ack crash window")
-    // the local ChecksumFileSystem keeps a .N.crc sidecar; left behind,
-    // the re-commit's atomic create trips over it and misreports a
-    // concurrent writer
-    new java.io.File(s"$ckptDir/commits/.${commits.last.getName}.crc").delete()
+    graft.Fs.dropLastCommitAck(ckptDir)
     run()
     // negative control: second concurrent writer on one checkpoint root
     val liveStream = spark.readStream.format("graft.sources.SynthStream")

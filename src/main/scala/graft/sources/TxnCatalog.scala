@@ -72,7 +72,7 @@ class GraftTxnCatalog extends TableCatalog with SupportsNamespaces
   override def createView(info: ViewInfo): View = {
     // views and tables share the name space: a collision either way
     // would make `graft.<name>` ambiguous
-    require(!tableExists(info.ident),
+    require(tableRoot(info.ident).isEmpty,
       s"a table named ${info.ident.name} already exists")
     TxnViews.create(warehouse, info, replace = false)
     TxnViews.load(warehouse, info.ident.name)
@@ -82,7 +82,7 @@ class GraftTxnCatalog extends TableCatalog with SupportsNamespaces
   override def dropView(ident: Identifier): Boolean =
     TxnViews.drop(warehouse, ident.name)
   override def renameView(from: Identifier, to: Identifier): Unit = {
-    require(!tableExists(to), s"a table named ${to.name} already exists")
+    require(tableRoot(to).isEmpty, s"a table named ${to.name} already exists")
     TxnViews.rename(warehouse, from.name, to.name)
   }
 
@@ -207,50 +207,31 @@ class GraftTxnCatalog extends TableCatalog with SupportsNamespaces
   }
   override def name(): String = catalogName
 
+  /** The empty namespace is the only one ([[namespaceExists]]). */
+  private def dir(namespace: Array[String]): String =
+    if (namespace.isEmpty) warehouse
+    else throw new org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException(
+      namespace)
   private def root(ident: Identifier): String =
-    (warehouse +: (ident.namespace() :+ ident.name()).toSeq).mkString("/")
+    TxnLog.tableDir(dir(ident.namespace()), ident.name())
   private def spark: SparkSession = SparkSession.active
 
-  override def listTables(namespace: Array[String]): Array[Identifier] = {
-    val d = new java.io.File((warehouse +: namespace.toSeq).mkString("/"))
-    Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && new java.io.File(f, "_log").isDirectory)
-      .map(f => Identifier.of(namespace, f.getName))
-  }
+  override def listTables(namespace: Array[String]): Array[Identifier] =
+    TxnLog.tables(dir(namespace)).map(Identifier.of(namespace, _)).toArray
 
+  /** The root `ident` reads and writes: a table, or a branch addressed
+    * AS A TABLE (qev, `graft.<table>__<branch>`). */
+  private def tableRoot(ident: Identifier): Option[String] =
+    if (ident.namespace.isEmpty) TxnLog.tableRoot(warehouse, ident.name) else None
+
+  /** A real table of this name — not a branch addressed by name. */
   override def tableExists(ident: Identifier): Boolean =
-    new java.io.File(s"${root(ident)}/_log").isDirectory
-
-  /** A branch addressed AS A TABLE (qev): `graft.<table>__<branch>`
-    * resolves to the branch's own root — a full live table, so every
-    * SQL statement (INSERT, UPDATE, DELETE, MERGE, CALL) runs against
-    * the branch with main untouched: SQL-only write-audit-publish.
-    * Resolution is derived, never guessed: only when no real table of
-    * that name exists AND the base table has a cut branch of that
-    * name. */
-  private def branchTableRoot(ident: Identifier): Option[String] = {
-    val n = ident.name()
-    val i = n.lastIndexOf("__")
-    if (i <= 0 || tableExists(ident)) None
-    else {
-      val (base, br) = (n.substring(0, i), n.substring(i + 2))
-      val bRoot = s"${root(Identifier.of(ident.namespace(), base))}/_refs/$br"
-      if (new java.io.File(s"$bRoot/_log").isDirectory) Some(bRoot) else None
-    }
-  }
+    tableRoot(ident).exists(_ == root(ident))
 
   override def loadTable(ident: Identifier): Table = {
-    if (!tableExists(ident)) {
-      branchTableRoot(ident) match {
-        case Some(bRoot) =>
-          return new TxnSparkTable(bRoot, TxnTable.latestVersion(bRoot),
-            pinned = false)
-        case None =>
-          throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
-      }
-    }
-    new TxnSparkTable(root(ident), TxnTable.latestVersion(root(ident)),
-      pinned = false)
+    val r = tableRoot(ident).getOrElse(
+      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident))
+    new TxnSparkTable(r, TxnTable.latestVersion(r), pinned = false)
   }
 
   /** `VERSION AS OF n` — the SQL-text twin of [[TxnTable.readVersion]];
@@ -259,12 +240,10 @@ class GraftTxnCatalog extends TableCatalog with SupportsNamespaces
     * both pinned (writes through `VERSION AS OF` refuse as always;
     * branch writes go through the branch root's own commit protocol). */
   override def loadTable(ident: Identifier, version: String): Table = {
-    if (!tableExists(ident))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
-    if (version.forall(_.isDigit))
-      new TxnSparkTable(root(ident), version.toInt, pinned = true)
-    else TxnTable.resolveRef(root(ident), version) match {
-      case Left(v)             => new TxnSparkTable(root(ident), v, pinned = true)
+    val r = mainRoot(ident)
+    if (version.forall(_.isDigit)) new TxnSparkTable(r, version.toInt, pinned = true)
+    else TxnTable.resolveRef(r, version) match {
+      case Left(v)             => new TxnSparkTable(r, v, pinned = true)
       case Right((bRoot, bV))  => new TxnSparkTable(bRoot, bV, pinned = true)
     }
   }
@@ -272,11 +251,13 @@ class GraftTxnCatalog extends TableCatalog with SupportsNamespaces
   /** `TIMESTAMP AS OF t` — Spark hands MICROseconds; the log's stamps
     * are millis ([[TxnTable.versionAsOf]] binary search). */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
-    if (!tableExists(ident))
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
-    new TxnSparkTable(root(ident),
-      TxnTable.versionAsOf(root(ident), timestamp / 1000L), pinned = true)
+    val r = mainRoot(ident)
+    new TxnSparkTable(r, TxnTable.versionAsOf(r, timestamp / 1000L), pinned = true)
   }
+
+  private def mainRoot(ident: Identifier): String =
+    if (tableExists(ident)) root(ident)
+    else throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
 
   /** Identity columns arrive only through the `Column[]` CREATE
     * seam, so advertise that capability — the analyzer's
@@ -336,6 +317,7 @@ class GraftTxnCatalog extends TableCatalog with SupportsNamespaces
   private def createTableImpl(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: util.Map[String, String],
       identityCol: String, identityStart: Long): Table = {
+    val r = root(ident)
     if (tableExists(ident))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
     require(partitions.isEmpty,
@@ -358,13 +340,12 @@ class GraftTxnCatalog extends TableCatalog with SupportsNamespaces
     // absent = all long) — typed per-file bounds for non-Long pruning
     val statsTypes = props.get("stats_types")
       .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
-    TxnTable.createEmpty(spark, root(ident), schema.toDDL,
+    TxnTable.createEmpty(spark, r, schema.toDDL,
       need("key"), need("shards").toInt, need("layout_div").toLong, statsCols,
       statsTypes, identityCol, identityStart)
     props.get("check").filter(_.nonEmpty)
-      .foreach(c => TxnTable.setCheck(spark, root(ident), c))
-    new TxnSparkTable(root(ident), TxnTable.latestVersion(root(ident)),
-      pinned = false)
+      .foreach(c => TxnTable.setCheck(spark, r, c))
+    new TxnSparkTable(r, TxnTable.latestVersion(r), pinned = false)
   }
 
   /** SQL DDL onto log commits: `ALTER TABLE ... ADD COLUMNS (c T)` is
@@ -2789,7 +2770,7 @@ object GraftTxnCatalog {
     val root = graft.Fs.scratch("graft_txn_catalog_wh") + "/sql_bloom"
     val m = TxnTable.readManifest(root, TxnTable.latestVersion(root))
     val rangeKept = m.files.count { f =>
-      val (lo, hi) = TxnScanBuilder.fileRange(m, f, "h")
+      val (lo, hi) = m.statRange(f, "h")
       lo <= h0 && h0 <= hi
     }
     q.withColumn("n_files_total", lit(scan.filesTotal.toLong))
@@ -3358,7 +3339,7 @@ private[sources] class TxnScanBuilder(spark: SparkSession, root: String,
   // a date bound an epoch day, and the output type would lie)
   private def exactEverywhere(c: String): Boolean =
     m.statType(c) == "long" && m.files.forall { f =>
-      val (lo, hi) = TxnScanBuilder.fileRange(m, f, c)
+      val (lo, hi) = m.statRange(f, c)
       !(lo == Long.MinValue && hi == Long.MaxValue)
     }
   // SUM/COUNT(col) fold only from declared stats columns whose every
@@ -3471,7 +3452,7 @@ private[sources] class TxnScanBuilder(spark: SparkSession, root: String,
     if (aggFuncs.nonEmpty) return new TxnLocalAggScan(m, aggFuncs)
     val kept = m.files.filter { f =>
       bounds.forall { case (c, (lo, hi)) =>
-        val (mn, mx) = TxnScanBuilder.fileRange(m, f, c)
+        val (mn, mx) = m.statRange(f, c)
         !(hi < mn || lo > mx)
       } &&
         // point probes also consult the per-file blooms (the skipping
@@ -3487,19 +3468,6 @@ private[sources] class TxnScanBuilder(spark: SparkSession, root: String,
     onBuild(scan)
     scan
   }
-}
-
-private[sources] object TxnScanBuilder {
-  /** The per-file stat range for column `c`; full-range sentinels when
-    * the manifest has no stats for it (prunes nothing, folds nothing). */
-  def fileRange(m: Manifest, f: FileEntry, c: String): (Long, Long) =
-    if (c == m.keyCol) (f.minK, f.maxK)
-    else if (c == m.keyCol2) (f.minK2, f.maxK2)
-    else {
-      val i = m.statsCols.indexOf(c)
-      if (i >= 0 && f.vmin.length > i) (f.vmin(i), f.vmax(i))
-      else (Long.MinValue, Long.MaxValue)
-    }
 }
 
 /** qds: the metadata-only aggregate — a [[org.apache.spark.sql.connector.read.LocalScan]]
@@ -3533,10 +3501,10 @@ private[sources] class TxnLocalAggScan(m: Manifest,
       case ("count", _) => m.files.map(f => f.nRows - f.dvRows).sum
       case ("min", c) =>
         if (m.files.isEmpty) null
-        else Long.box(m.files.map(f => TxnScanBuilder.fileRange(m, f, c)._1).min)
+        else Long.box(m.files.map(f => m.statRange(f, c)._1).min)
       case ("max", c) =>
         if (m.files.isEmpty) null
-        else Long.box(m.files.map(f => TxnScanBuilder.fileRange(m, f, c)._2).max)
+        else Long.box(m.files.map(f => m.statRange(f, c)._2).max)
       case ("countcol", c) =>
         m.files.map(f => f.vcnt(idx(c))).sum
       case ("sum", c) =>
@@ -3691,7 +3659,7 @@ private[sources] class TxnScan(spark: SparkSession, root: String,
         colOpt.filter(_ => vals.length == p.children().length - 1)
           .foreach { c =>
             kept = kept.filter { f =>
-              val (mn, mx) = TxnScanBuilder.fileRange(m, f, c)
+              val (mn, mx) = m.statRange(f, c)
               val i = java.util.Arrays.binarySearch(vals, mn)
               val first = if (i >= 0) i else -i - 1
               first < vals.length && vals(first) <= mx
@@ -4220,7 +4188,7 @@ private[sources] class TxnStagedTable(ident: Identifier, root: String,
       s"(supported: ${TxnTable.StatTypes.mkString(",")})")
   private val checkExpr = props.getOrElse("check", "")
   private val op = if (targetVersion == 0) "ctas" else "rtas"
-  TxnTable.requireLocalRoot(root)
+  TxnLog.requireLocalRoot(root)
   TxnTable.requireBigintKeys(schema0, keyCol)
 
   @volatile private var staged: Option[(Manifest, String)] = None
@@ -4372,27 +4340,12 @@ private[sources] object TxnProcedures {
   def load(ident: org.apache.spark.sql.connector.catalog.Identifier,
       warehouse: String): Option[UnboundProcedure] = {
     if (!ident.namespace.sameElements(Namespace)) return None
+    // `<table>__<branch>` names resolve as in loadTable, so pre-publish
+    // branch upkeep (round-12 verdict item 5) never touches main
     def root(input: InternalRow): String = {
       val t = input.getUTF8String(0).toString
-      require(t.nonEmpty && !t.contains("/") && !t.contains(".."),
-        s"bad table name '$t'")
-      val r = s"$warehouse/$t"
-      if (new java.io.File(s"$r/_log").isDirectory) r
-      else {
-        // branch-addressable maintenance (round-12 verdict item 5):
-        // `CALL graft.system.compact('t__fix', ...)` resolves the same
-        // `<table>__<branch>` derivation the catalog's loadTable uses,
-        // so pre-publish branch upkeep (compact/optimize/delete_mor on
-        // the audit branch) runs against the branch's own sub-log and
-        // main never observes it
-        val i = t.lastIndexOf("__")
-        val bRoot =
-          if (i > 0) s"$warehouse/${t.substring(0, i)}/_refs/${t.substring(i + 2)}"
-          else ""
-        require(bRoot.nonEmpty && new java.io.File(s"$bRoot/_log").isDirectory,
-          s"no graft_txn table '$t' in this catalog")
-        bRoot
-      }
+      TxnLog.tableRoot(warehouse, t).getOrElse(
+        throw new IllegalArgumentException(s"no graft_txn table '$t' in this catalog"))
     }
     val tbl = in("table", StringType)
     ident.name match {
@@ -4475,23 +4428,9 @@ private[sources] object TxnProcedures {
           "graft.<name> (Spark 4.1 has no V2 CREATE VIEW statement yet)",
         Array(in("name", StringType), in("sql", StringType)),
         input => {
-          val (nm, sqlText) = (input.getUTF8String(0).toString,
-            input.getUTF8String(1).toString)
-          require(!new java.io.File(s"$warehouse/$nm/_log").isDirectory,
-            s"a table named $nm already exists")
-          // every reference fully qualified (the capture-context
-          // honesty rule), then analyze (never execute) the
-          // definition to pin its schema — cyclic references refuse
-          // here via the substitution rule's seen-set
-          TxnViews.validate(spark, nm, sqlText)
-          val schema = spark.sql(sqlText).schema
-          TxnViews.create(warehouse, new org.apache.spark.sql.connector
-            .catalog.ViewInfo(
-            org.apache.spark.sql.connector.catalog.Identifier.of(
-              Array.empty, nm),
-            sqlText, "graft", Array.empty, schema,
-            schema.fieldNames, Array.empty, Array.empty,
-            java.util.Map.of()), replace = false)
+          val nm = input.getUTF8String(0).toString
+          val schema = TxnViews.define(spark, warehouse, nm,
+            input.getUTF8String(1).toString, replace = false)
           (out("view" -> StringType, "n_cols" -> LongType),
             Seq(nm, schema.fields.length.toLong))
         }))
@@ -4685,7 +4624,7 @@ private[sources] class TxnShardBatch(root: String,
     keptNow: () => Seq[FileEntry],
     delegateBatch: () => Batch) extends Batch {
   import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+  import org.apache.spark.sql.execution.datasources.PartitionedFile
 
   override def planInputPartitions()
       : Array[org.apache.spark.sql.connector.read.InputPartition] =

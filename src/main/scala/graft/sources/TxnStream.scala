@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.sources.TxnTable.{FileEntry, Manifest}
+import graft.sources.TxnTable.FileEntry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}

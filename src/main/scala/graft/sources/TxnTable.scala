@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{FileAlreadyExistsException, Files, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -29,14 +29,14 @@ import org.apache.spark.sql.functions._
   * ([[prunedRead]] consults exactly these stats to open a strict
   * subset of files).
   *
-  * COMMIT = atomic put-if-absent of `_log/v{V}.json`: the manifest is
-  * fully written to a temp name, then `Files.createLink` (hard link —
-  * POSIX link(2) fails with EEXIST atomically) publishes it. Two
-  * writers racing to commit the same version: exactly one link
-  * succeeds; the loser re-reads the NEW latest snapshot, REBASES (its
-  * update batch is a function of the current snapshot, so re-applying
-  * is the rebase) and retries — textbook optimistic concurrency
-  * control, graded end-to-end by [[txnConcurrentMerge]] (qct).
+  * COMMIT = atomic put-if-absent of `_log/v{V}.json` through
+  * [[TxnLog]], the one owner of the log's on-disk layout (manifests,
+  * head pointer, branch and tag refs). Two writers racing to commit the
+  * same version: exactly one put succeeds; the loser re-reads the NEW
+  * latest snapshot, REBASES (its update batch is a function of the
+  * current snapshot, so re-applying is the rebase) and retries —
+  * textbook optimistic concurrency control, graded end-to-end by
+  * [[txnConcurrentMerge]] (qct).
   * Historical manifests are never rewritten, so `VERSION AS OF` is
   * just "read version V's file list" — graded by [[txnTimeTravel]]
   * (qcu) reading v0/v1/v2 back bit-identically AFTER later commits.
@@ -192,6 +192,18 @@ object TxnTable {
       val i = statsCols.indexOf(c)
       if (i >= 0 && statsTypes.length > i) statsTypes(i) else "long"
     }
+
+    /** File `f`'s stat range for PHYSICAL column `c` (key, second key or
+      * stats column); the full-range sentinels, which prune nothing,
+      * when `f` carries none for `c`. */
+    def statRange(f: FileEntry, c: String): (Long, Long) =
+      if (c == keyCol) (f.minK, f.maxK)
+      else if (c == keyCol2 && keyCol2.nonEmpty) (f.minK2, f.maxK2)
+      else {
+        val i = statsCols.indexOf(c)
+        if (i >= 0 && f.vmin.length > i) (f.vmin(i), f.vmax(i))
+        else (Long.MinValue, Long.MaxValue)
+      }
   }
 
   private[graft] val StatTypes = Set("long", "string", "date", "timestamp")
@@ -282,17 +294,6 @@ object TxnTable {
       (if (m.identityCol.nonEmpty) Seq("identity-columns")
        else Nil)).sorted
 
-  /** The one root contract: a table root is a plain local path. The
-    * log's put-if-absent link and head move are java.nio operations, so
-    * a root with a URI scheme (`file:`, `hdfs:`, `s3:`) would split the
-    * table — its log under a relative path, its data wherever Hadoop
-    * resolves the scheme. Checked on every log access and before any
-    * data write. */
-  private val UriScheme = "^[A-Za-z][A-Za-z0-9+.-]*:".r
-  private[sources] def requireLocalRoot(root: String): Unit =
-    require(UriScheme.findPrefixOf(root).isEmpty,
-      s"graft_txn table root must be a local path without a URI scheme: $root")
-
   /** The manifest's key stats are Longs: a key (or second clustering)
     * column must be BIGINT. Checked where a table is defined, before
     * anything is written, and on every write's schema. */
@@ -303,13 +304,6 @@ object TxnTable {
         require(f.dataType == org.apache.spark.sql.types.LongType,
           s"graft_txn key column $c must be BIGINT, got ${f.dataType.sql}"))
     }
-
-  private def logDir(root: String) = {
-    requireLocalRoot(root)
-    s"$root/_log"
-  }
-  private def logFile(root: String, v: Int) =
-    Paths.get(logDir(root), f"v$v%08d.json")
 
   private val Json = new ObjectMapper()
     .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
@@ -406,26 +400,9 @@ object TxnTable {
       str(opt(t, "identity_col")), num(opt(t, "identity_start")))
   }
 
-  /** Versions whose manifests exist in the log, ascending — contiguous
-    * from 0 until [[expireVersions]] drops a retention prefix.
-    * O(versions) listing of tiny JSON names — metadata scale; the HOT
-    * paths ([[commit]], [[latestVersion]], [[lastTxnVersion]],
-    * [[versionAsOf]]) never call it (round-9 verdict item 2). */
-  def versions(root: String): Seq[Int] = {
-    val d = Paths.get(logDir(root))
-    if (!Files.exists(d)) Nil
-    else {
-      val s = Files.list(d)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-          n.stripPrefix("v").stripSuffix(".json").toInt }
-        .toSeq.sorted
-      finally s.close()
-    }
-  }
-
-  private def headFile(root: String) = Paths.get(logDir(root), "_head")
+  /** Committed versions, ascending — contiguous from 0 until
+    * [[expireVersions]] drops a retention prefix. */
+  def versions(root: String): Seq[Int] = TxnLog.versions(root)
 
   /** Raw-manifest read counter — the graded evidence (qdi) that the
     * metadata cost of a commit/ingest batch is CONSTANT over the log's
@@ -433,27 +410,8 @@ object TxnTable {
     * operation to count its manifest I/O. */
   val manifestReads = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Highest committed version, or -1 for an empty log. The Delta
-    * `_last_checkpoint`-shaped HEAD POINTER makes this O(1): read the
-    * advisory head, then walk forward over at-most-the-lag existence
-    * probes (a writer can die between its link and its head update, so
-    * the pointer may trail by a commit — never lead, since it is
-    * written only AFTER a successful link). Falls back to the full
-    * listing when no head exists. */
-  def latestVersion(root: String): Int = {
-    val hf = headFile(root)
-    val start =
-      if (Files.exists(hf))
-        try Files.readString(hf).trim.toInt catch { case _: Exception => -1 }
-      else -1
-    if (start < 0 || !Files.exists(logFile(root, start)))
-      versions(root).lastOption.getOrElse(-1)
-    else {
-      var v = start
-      while (Files.exists(logFile(root, v + 1))) v += 1
-      v
-    }
-  }
+  /** Highest committed version, or -1 for an empty log. */
+  def latestVersion(root: String): Int = TxnLog.latest(root)
 
   /** The on-disk manifest: a delta's `files` are only its adds. The
     * protocol feature gate fires HERE — every read path funnels
@@ -461,7 +419,7 @@ object TxnTable {
     * be served partially understood. */
   def readManifestRaw(root: String, version: Int): Manifest = {
     manifestReads.incrementAndGet()
-    val m = parse(Files.readString(logFile(root, version)))
+    val m = parse(TxnLog.read(root, version))
     val unknown = m.features.filterNot(SupportedFeatures)
     require(unknown.isEmpty,
       s"$root v$version uses format features this engine does not " +
@@ -488,7 +446,7 @@ object TxnTable {
     try resolve(version)
     catch {
       case _: java.nio.file.NoSuchFileException
-          if Files.exists(logFile(root, version)) => resolve(version)
+          if TxnLog.exists(root, version) => resolve(version)
     }
   }
 
@@ -519,15 +477,10 @@ object TxnTable {
     if (m.deltaOf < 0) 1 else 1 + resolveDepth(root, m.deltaOf)
   }
 
-  /** ATOMIC put-if-absent commit: returns false (and cleans the temp)
-    * if `version` was already taken by a concurrent writer — the
-    * signal to rebase and retry. The manifest bytes are fully durable
-    * under the temp name before the link publishes them, so a reader
-    * never observes a torn manifest. */
+  /** ATOMIC put-if-absent commit ([[TxnLog.publish]]): returns false
+    * if `version` was already taken by a concurrent writer — the signal
+    * to rebase and retry. */
   def commit(root: String, version: Int, m: Manifest): Boolean = {
-    Files.createDirectories(Paths.get(logDir(root)))
-    val tmp = Paths.get(logDir(root),
-      s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
     // stamp the commit time for TIMESTAMP AS OF ([[versionAsOf]]); the
     // winner's stamp is the table's commit time by definition. Clamped
     // to the previous commit's stamp: serialization orders the WRITES,
@@ -540,38 +493,9 @@ object TxnTable {
       if (version == 0) 0L
       else try readManifestRaw(root, version - 1).commitMs
       catch { case _: java.nio.file.NoSuchFileException => 0L }
-    val stamped = m.copy(
+    TxnLog.publish(root, version, toJson(m.copy(
       commitMs = math.max(System.currentTimeMillis(), prevMs),
-      features = deriveFeatures(m))
-    Files.writeString(tmp, toJson(stamped))
-    val won =
-      try { Files.createLink(logFile(root, version), tmp); true }
-      catch { case _: FileAlreadyExistsException => false }
-      finally Files.deleteIfExists(tmp)
-    if (won) {
-      // advance the advisory head pointer (atomic move; a stale write
-      // racing a newer one can only trail — latestVersion's forward
-      // walk heals any lag, and a crash HERE leaves the previous head,
-      // which is the same trailing case)
-      try replaceAtomically(headFile(root), version.toString)
-      catch { case _: java.io.IOException => () }
-    }
-    won
-  }
-
-  /** Replace a small pointer file (head, tag, branch base, boundary
-    * checkpoint) through a temp sibling and an atomic move: a reader or
-    * a crash sees the old content or the new, never an empty or torn
-    * file. */
-  private def replaceAtomically(target: java.nio.file.Path,
-      content: String): Unit = {
-    val tmp = target.resolveSibling(
-      s".${target.getFileName}-${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.writeString(tmp, content)
-    try Files.move(tmp, target,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    finally Files.deleteIfExists(tmp)
+      features = deriveFeatures(m))))
   }
 
   /** Write `df` as version-`version` data files under an attempt-unique
@@ -595,7 +519,7 @@ object TxnTable {
       checkExpr: String = "", statsCols: Seq[String] = Nil,
       statsTypes: Seq[String] = Nil)
       : (Manifest, String) = {
-    requireLocalRoot(root)
+    TxnLog.requireLocalRoot(root)
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val sub = f"data/v$version%08d-$attempt"
     val out = s"$root/$sub"
@@ -1050,7 +974,7 @@ object TxnTable {
     * the manifest stats are selective for [[prunedRead]]. */
   def create(spark: SparkSession, root: String, df: DataFrame,
       keyCol: String, shards: Int): Manifest = {
-    requireLocalRoot(root)
+    TxnLog.requireLocalRoot(root)
     requireBigintKeys(df.schema, keyCol)
     graft.Fs.deleteRecursively(root)
     val mx = df.agg(max(col(keyCol))).head().getLong(0)
@@ -1087,7 +1011,7 @@ object TxnTable {
     * but the 2D pruning seam never silently degrades to sentinels). */
   def createZordered(spark: SparkSession, root: String, df: DataFrame,
       xCol: String, yCol: String, bits: Int, shards: Int): Manifest = {
-    requireLocalRoot(root)
+    TxnLog.requireLocalRoot(root)
     requireBigintKeys(df.schema, xCol, yCol)
     graft.Fs.deleteRecursively(root)
     val r = df.agg(max(col(xCol)), max(col(yCol))).head() // 1-row probe (qaq)
@@ -1135,7 +1059,7 @@ object TxnTable {
       statsCols: Seq[String] = Nil,
       statsTypes: Seq[String] = Nil,
       identityCol: String = "", identityStart: Long = 0L): Manifest = {
-    requireLocalRoot(root)
+    TxnLog.requireLocalRoot(root)
     requireBigintKeys(
       org.apache.spark.sql.types.StructType.fromDDL(schemaDdl), keyCol)
     graft.Fs.deleteRecursively(root)
@@ -1740,15 +1664,6 @@ object TxnTable {
   // Branches & tags — write-audit-publish (qet, round-11 item 8)
   // --------------------------------------------------------------
 
-  private def branchRoot(root: String, name: String): String = {
-    require(name.matches("[a-zA-Z0-9_\\-]+"), s"bad ref name '$name'")
-    s"$root/_refs/$name"
-  }
-  private def tagFile(root: String, name: String): java.io.File = {
-    require(name.matches("[a-zA-Z0-9_\\-]+"), s"bad ref name '$name'")
-    new java.io.File(s"$root/_refs/_tags/$name")
-  }
-
   /** CREATE BRANCH (the Iceberg write-audit-publish gesture): a named
     * ref cut from the CURRENT main head as an independent sub-log
     * under `root/_refs/<name>` — a [[shallowClone]] whose base main
@@ -1757,19 +1672,18 @@ object TxnTable {
     * identity) runs against it unchanged, and none of it is visible
     * from main. Returns the branch root. */
   def createBranch(root: String, name: String): String = {
-    val bRoot = branchRoot(root, name)
-    require(!new java.io.File(s"$bRoot/_log").isDirectory,
-      s"branch $name already exists on $root")
+    val bRoot = TxnLog.branchRoot(root, name)
+    require(!TxnLog.isTable(bRoot), s"branch $name already exists on $root")
     val base = latestVersion(root)
     shallowClone(root, bRoot)
-    replaceAtomically(Paths.get(s"$bRoot/_base"), base.toString)
+    TxnLog.writeBase(root, name, base)
     bRoot
   }
 
   /** The branch's recorded fork point on main. */
   def branchBase(root: String, name: String): Int =
-    java.nio.file.Files.readString(
-      new java.io.File(s"${branchRoot(root, name)}/_base").toPath).trim.toInt
+    TxnLog.readBase(root, name)
+      .getOrElse(sys.error(s"no branch named '$name' on $root"))
 
   /** The idempotence-ledger union for a publish: a writer's high-water
     * mark is the MAX it reached on either side of the fork, so a sink
@@ -1813,7 +1727,7 @@ object TxnTable {
     * next OPTIMIZE re-homes the bytes); an unpublished branch is just
     * a directory — [[dropBranch]] deletes it and main never knows. */
   def publishBranch(root: String, name: String): Int = {
-    val bRoot = branchRoot(root, name)
+    val bRoot = TxnLog.branchRoot(root, name)
     val base = branchBase(root, name)
     val mainHead = latestVersion(root)
     val baseM = readManifest(root, base)
@@ -1905,7 +1819,7 @@ object TxnTable {
     * manifests that referenced the branch paths, and the drop is then
     * legal. O(retained versions) metadata reads. */
   def dropBranch(root: String, name: String): Unit = {
-    val bRoot = branchRoot(root, name)
+    val bRoot = TxnLog.branchRoot(root, name)
     val prefix = s"$bRoot/"
     val referencedAt = versions(root).filter { v =>
       // resolve before comparing: a published manifest stores branch
@@ -1926,24 +1840,17 @@ object TxnTable {
   def setTag(root: String, name: String, version: Int): Unit = {
     require(versions(root).contains(version),
       s"cannot tag $root@v$version: no such committed version")
-    val f = tagFile(root, name)
-    f.getParentFile.mkdirs()
-    replaceAtomically(f.toPath, version.toString)
+    TxnLog.writeTag(root, name, version)
   }
 
   /** Resolve a ref name: a tag → its pinned main version (Left), a
     * branch → its root + head (Right). */
-  def resolveRef(root: String, name: String): Either[Int, (String, Int)] = {
-    val tf = tagFile(root, name)
-    if (tf.isFile)
-      Left(java.nio.file.Files.readString(tf.toPath).trim.toInt)
-    else {
-      val bRoot = branchRoot(root, name)
-      require(new java.io.File(s"$bRoot/_log").isDirectory,
-        s"no tag or branch named '$name' on $root")
+  def resolveRef(root: String, name: String): Either[Int, (String, Int)] =
+    TxnLog.readTag(root, name).map(Left(_)).getOrElse {
+      val bRoot = TxnLog.branchRoot(root, name)
+      require(TxnLog.isTable(bRoot), s"no tag or branch named '$name' on $root")
       Right((bRoot, latestVersion(bRoot)))
     }
-  }
 
   /** MERGE-ON-READ DELETE: the [[morDml]] commit with no new rows.
     * Returns (version, filesTagged, rowsDeleted) — (head, 0, 0) when
@@ -2011,7 +1918,7 @@ object TxnTable {
         val condExpr = spark.sessionState.sqlParser.parseExpression(pred)
         val candidates = morBounds(base, condExpr) match {
           case Some(bs) => base.files.filter(f => bs.forall { case (c, (lo, hi)) =>
-            val (mn, mx) = statRange(base, f, c); !(hi < mn || lo > mx) })
+            val (mn, mx) = base.statRange(f, c); !(hi < mn || lo > mx) })
           case None => base.files
         }
         // the predicate is written against LOGICAL names; the __fp/__idx
@@ -2146,18 +2053,6 @@ object TxnTable {
     if (bs.isEmpty) None else Some(bs)
   }
 
-  /** A file's stat range for a PHYSICAL column name (key, second key,
-    * or declared stats column; full-range when the file predates the
-    * declaration). */
-  private def statRange(m: Manifest, f: FileEntry, c: String): (Long, Long) =
-    if (c == m.keyCol) (f.minK, f.maxK)
-    else if (c == m.keyCol2 && m.keyCol2.nonEmpty) (f.minK2, f.maxK2)
-    else {
-      val i = m.statsCols.indexOf(c)
-      if (i >= 0 && f.vmin.length > i) (f.vmin(i), f.vmax(i))
-      else (Long.MinValue, Long.MaxValue)
-    }
-
   /** Manifest-only selectivity estimate for a conjunctive predicate:
     * per file, the tightest single-column overlap fraction of the
     * extracted bounds against the file's stat range (uniform-within-
@@ -2175,7 +2070,7 @@ object TxnTable {
       else {
         val est = m.files.zip(live).map { case (f, n) =>
           val frac = bs.map { case (c, (lo, hi)) =>
-            val (mn, mx) = statRange(m, f, c)
+            val (mn, mx) = m.statRange(f, c)
             if (hi < mn || lo > mx) 0.0
             else if (mn == Long.MinValue && mx == Long.MaxValue) 1.0
             else {
@@ -2332,10 +2227,10 @@ object TxnTable {
     // only a DELTA boundary needs the checkpoint rewrite; an already-
     // full boundary skips the in-place move entirely (no write at all)
     if (readManifestRaw(root, keepFrom).deltaOf >= 0)
-      replaceAtomically(logFile(root, keepFrom),
+      TxnLog.replace(root, keepFrom,
         toJson(readManifest(root, keepFrom).copy(deltaOf = -1)))
     val dropped = vs.filter(_ < keepFrom)
-    dropped.foreach(v => Files.delete(logFile(root, v)))
+    dropped.foreach(TxnLog.delete(root, _))
     dropped.size
   }
 
@@ -2525,15 +2420,6 @@ object TxnTable {
   // qcu: VERSION AS OF time travel, graded end-to-end
   // ------------------------------------------------------------------
 
-  /** qcu: TIME TRAVEL — three commits (create; the q2c-shaped merge:
-    * +10.00 on keys ≡ 0 mod 7 plus fresh inserts under −k−1 for keys ≡
-    * 0 mod 101; a delete of keys ≡ 0 mod 5), then ALL THREE versions
-    * read back AFTER the last commit and aggregated per version.
-    * Historical manifests are immutable and data files are never
-    * rewritten in place, so v0 and v1 must read back bit-identically —
-    * any in-place mutation, file reuse across versions, or manifest
-    * rewrite shifts a historical row and fails the hash. The oracle
-    * replays each version's state arithmetically from `orders`. */
   /** Stages the canonical 3-version history (create; merge with
     * updates + surrogate-key inserts; delete) shared by qcu, its
     * SQL-text twin qd7, the CDC diff qd3, and the timestamp-travel
@@ -2557,6 +2443,15 @@ object TxnTable {
     root
   }
 
+  /** qcu: TIME TRAVEL — three commits (create; the q2c-shaped merge:
+    * +10.00 on keys ≡ 0 mod 7 plus fresh inserts under −k−1 for keys ≡
+    * 0 mod 101; a delete of keys ≡ 0 mod 5), then ALL THREE versions
+    * read back AFTER the last commit and aggregated per version.
+    * Historical manifests are immutable and data files are never
+    * rewritten in place, so v0 and v1 must read back bit-identically —
+    * any in-place mutation, file reuse across versions, or manifest
+    * rewrite shifts a historical row and fails the hash. The oracle
+    * replays each version's state arithmetically from `orders`. */
   def txnTimeTravel(spark: SparkSession, dir: String): DataFrame = {
     val root = stageTimeTravelHistory(spark, dir, "graft_txn_timetravel")
     val perVersion = (0 to 2).map { v =>
@@ -2655,19 +2550,12 @@ object TxnTable {
   def prunedReadBy(spark: SparkSession, root: String, version: Int,
       colName: String, lo: Long, hi: Long): (DataFrame, Int, Int) = {
     val m = readManifest(root, version)
-    def range(f: FileEntry): (Long, Long) =
-      if (colName == m.keyCol) (f.minK, f.maxK)
-      else if (colName == m.keyCol2) (f.minK2, f.maxK2)
-      else {
-        val i = m.statsCols.indexOf(colName)
-        require(i >= 0, s"$colName carries no stats (key=${m.keyCol}, " +
-          s"key2=${m.keyCol2}, stats=${m.statsCols.mkString(",")})")
-        // a pre-stats file (statsCols declared later) prunes nothing
-        if (f.vmin.length > i) (f.vmin(i), f.vmax(i))
-        else (Long.MinValue, Long.MaxValue)
-      }
+    require(Seq(m.keyCol, m.keyCol2).contains(colName) ||
+      m.statsCols.contains(colName),
+      s"$colName carries no stats (key=${m.keyCol}, " +
+        s"key2=${m.keyCol2}, stats=${m.statsCols.mkString(",")})")
     val keep = m.files.filter { f =>
-      val (mn, mx) = range(f); !(hi < mn || lo > mx)
+      val (mn, mx) = m.statRange(f, colName); !(hi < mn || lo > mx)
     }
     (toLogical(m, readFiles(spark, root, m.schemaDdl, keep)),
       keep.size, m.files.size)
@@ -2689,10 +2577,7 @@ object TxnTable {
     val i = m.statsCols.indexOf(colName)
     require(i >= 0, s"$colName carries no stats (stats=${m.statsCols})")
     val rangeKept = m.files.filter { f =>
-      val (mn, mx) =
-        if (f.vmin.length > i) (f.vmin(i), f.vmax(i))
-        else (Long.MinValue, Long.MaxValue)
-      value >= mn && value <= mx
+      val (mn, mx) = m.statRange(f, colName); value >= mn && value <= mx
     }
     val kept = rangeKept.filter(f => bloomMightContain(f, i, value))
     (toLogical(m, readFiles(spark, root, m.schemaDdl, kept)),
@@ -3632,12 +3517,7 @@ object TxnTable {
     run()
     // the lost-ack crash window: the sink's txn committed, the engine's
     // ack lost — recovery must re-deliver, and the ledger must dedup
-    val commits = new java.io.File(s"$ckptDir/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt)
-    require(commits.nonEmpty && new java.io.File(
-      s"$ckptDir/commits/${commits.last.getName}").delete(),
-      "could not stage the lost-ack crash window")
-    new java.io.File(s"$ckptDir/commits/.${commits.last.getName}.crc").delete()
+    graft.Fs.dropLastCommitAck(ckptDir)
     run()
     val latest = latestVersion(root)
     readVersion(spark, root, latest)
@@ -4332,7 +4212,7 @@ object TxnTable {
     val hv = latestVersion(root)
     val future = readManifestRaw(root, hv).copy(version = hv + 1,
       op = "from_the_future", features = Seq("quantum-compression"))
-    Files.writeString(logFile(root, hv + 1), toJson(future))
+    TxnLog.putIfAbsent(root, hv + 1, toJson(future))
     val refused =
       try { readManifest(root, hv + 1); false }
       catch { case e: Exception =>
@@ -4341,7 +4221,7 @@ object TxnTable {
     val perManifest =
       try { readManifest(root, hv); true }
       catch { case _: Exception => false }
-    Files.delete(logFile(root, hv + 1))
+    TxnLog.delete(root, hv + 1)
     readVersion(spark, root, hv)
       .agg(count(lit(1)).as("n_rows"), sum("chars").as("chars_sum"))
       .withColumn("features_v0", lit(feats(0)))

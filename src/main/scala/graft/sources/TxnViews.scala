@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.StructType
 object TxnViews {
 
   private def dir(warehouse: String, name: String): java.io.File = {
-    require(name.matches("[a-zA-Z0-9_\\-]+"), s"bad view name '$name'")
+    require(TxnLog.isName(name), s"bad view name '$name'")
     new java.io.File(s"$warehouse/_views/$name")
   }
 
@@ -42,8 +42,9 @@ object TxnViews {
   private def read(f: java.io.File): String =
     java.nio.file.Files.readString(f.toPath)
 
+  /** False for a name no view can have: `graft.<bad name>` is not found. */
   def exists(warehouse: String, name: String): Boolean =
-    new java.io.File(dir(warehouse, name), "sql").isFile
+    TxnLog.isName(name) && new java.io.File(dir(warehouse, name), "sql").isFile
 
   def list(warehouse: String): Array[String] = {
     val d = new java.io.File(s"$warehouse/_views")
@@ -151,6 +152,23 @@ object TxnViews {
         "qualify every relation (e.g. graft.t); a bare name would " +
         "re-resolve in each reader's session context, not the " +
         "definition's")
+  }
+
+  /** Store view `name` as `sqlText` for both view DDL surfaces (`CREATE
+    * VIEW` and the `create_view` procedure): refused when a table or
+    * branch already answers to `graft.<name>`, then [[validate]]d, then
+    * analyzed (never executed) to pin its schema — cyclic references
+    * refuse there via the substitution rule's seen-set. Returns it. */
+  def define(spark: org.apache.spark.sql.SparkSession, warehouse: String,
+      name: String, sqlText: String, replace: Boolean): StructType = {
+    require(TxnLog.tableRoot(warehouse, name).isEmpty,
+      s"a table named $name already exists")
+    validate(spark, name, sqlText)
+    val schema = spark.sql(sqlText).schema
+    create(warehouse, new ViewInfo(Identifier.of(Array.empty, name), sqlText,
+      "graft", Array.empty, schema, schema.fieldNames, Array.empty,
+      Array.empty, java.util.Map.of()), replace)
+    schema
   }
 
   def alter(warehouse: String, name: String,
@@ -320,17 +338,8 @@ case class CreateGraftViewCommand(name: String, sqlText: String,
       : Seq[org.apache.spark.sql.Row] = {
     val wh = spark.conf.getOption("spark.sql.catalog.graft.warehouse")
       .getOrElse(sys.error("graft catalog is not configured"))
-    require(!new java.io.File(s"$wh/$name/_log").isDirectory,
-      s"a table named $name already exists")
-    if (TxnViews.exists(wh, name) && allowExisting) return Nil
-    TxnViews.validate(spark, name, sqlText)
-    val schema = spark.sql(sqlText).schema // analyze, never execute
-    TxnViews.create(wh, new org.apache.spark.sql.connector.catalog.ViewInfo(
-      org.apache.spark.sql.connector.catalog.Identifier.of(
-        Array.empty, name),
-      sqlText, "graft", Array.empty, schema,
-      schema.fieldNames, Array.empty, Array.empty,
-      java.util.Map.of()), replace = replace)
+    if (!(allowExisting && TxnViews.exists(wh, name)))
+      TxnViews.define(spark, wh, name, sqlText, replace)
     Nil
   }
 }

@@ -1987,24 +1987,6 @@ object Warehouse {
              AS BIGINT) AS n_langs
     FROM documents GROUP BY source ORDER BY source"""
 
-  /** qcb: SURROGATE-KEY ASSIGNMENT — the incremental-dimension-load
-    * step every warehouse runs: arrivals get DENSE keys continuing
-    * after the existing maximum, deterministically ordered by the
-    * natural key. The textbook Spark answer — `row_number() OVER
-    * (ORDER BY key)` — funnels ALL arrivals through ONE partition
-    * (an unpartitioned WindowExec), the classic 100 TB bottleneck.
-    * This operator uses the distributed dense-ID pattern instead:
-    * (1) range-bucket arrivals by natural key (fixed-width buckets —
-    * order-preserving by construction), (2) per-bucket local
-    * `row_number` (a partitionBy window — parallel), (3) per-bucket
-    * counts → prefix-sum offsets on the bucket frame (rows = #buckets,
-    * a bounded broadcast), (4) sk = max_existing + offset(bucket) +
-    * local_rank. No global sort, no single-partition fact window.
-    * SourcesSpec proves assignment is IDENTICAL under adversarial
-    * repartitioning and replays the closed form
-    * sk(k) = max_sk + |{new keys < k}| + 1, which is also what the
-    * oracle grades. Existing dim = suppliers with s_suppkey%4 != 0
-    * (sk = rank by key); arrivals = the %4 == 0 cohort. */
   /** Distributed dense rank-by-key over unique keys: fixed-width
     * range buckets (order-preserving), parallel per-bucket
     * `row_number`, prefix-sum bucket offsets. The offset frame has
@@ -2026,6 +2008,24 @@ object Warehouse {
       .select(col(key), (col("off") + col("lr")).as("rk"))
   }
 
+  /** qcb: SURROGATE-KEY ASSIGNMENT — the incremental-dimension-load
+    * step every warehouse runs: arrivals get DENSE keys continuing
+    * after the existing maximum, deterministically ordered by the
+    * natural key. The textbook Spark answer — `row_number() OVER
+    * (ORDER BY key)` — funnels ALL arrivals through ONE partition
+    * (an unpartitioned WindowExec), the classic 100 TB bottleneck.
+    * This operator uses the distributed dense-ID pattern instead:
+    * (1) range-bucket arrivals by natural key (fixed-width buckets —
+    * order-preserving by construction), (2) per-bucket local
+    * `row_number` (a partitionBy window — parallel), (3) per-bucket
+    * counts → prefix-sum offsets on the bucket frame (rows = #buckets,
+    * a bounded broadcast), (4) sk = max_existing + offset(bucket) +
+    * local_rank. No global sort, no single-partition fact window.
+    * SourcesSpec proves assignment is IDENTICAL under adversarial
+    * repartitioning and replays the closed form
+    * sk(k) = max_sk + |{new keys < k}| + 1, which is also what the
+    * oracle grades. Existing dim = suppliers with s_suppkey%4 != 0
+    * (sk = rank by key); arrivals = the %4 == 0 cohort. */
   def surrogateKeys(spark: SparkSession, dir: String): DataFrame = {
     val sup = Tables.supplier(spark, dir).select(col("s_suppkey"))
     // the pre-existing dimension: keys assigned by an earlier load of

@@ -24,10 +24,10 @@ import org.apache.spark.sql.functions._
   * delegate parses the statement, a graft-table `UPDATE ... WHERE ...`
   * is priced AGAINST THE MANIFEST ([[TxnTable.morSelectivity]] —
   * conjunct bounds interpolated over per-file stat ranges, zero I/O).
-  * A narrow predicate (estimated selectivity ≤
-  * `spark.graft.dml.mor.maxSelectivity`, default 2%) reroutes to
-  * [[TxnTable.updateMor]]: deletion vectors over the old images plus
-  * an append of the new ones, ONE commit, no data file rewritten.
+  * A narrow predicate (estimated selectivity ≤ 2%, `MaxSelectivity`)
+  * reroutes to [[TxnTable.updateMor]]: deletion vectors over the old
+  * images plus an append of the new ones, ONE commit, no data file
+  * rewritten.
   * Everything else — wide bands, unpriceable predicates (`c % 7 =
   * 0`), subqueries, non-column assignment targets — keeps the
   * copy-on-write path untouched. The choice is an OPTIMIZATION fork,
@@ -43,8 +43,8 @@ object MorDmlRouter {
 
   private def enabled: Boolean =
     sessionConf.get("spark.graft.dml.mor.enabled", "true").toBoolean
-  private def maxSelectivity: Double =
-    sessionConf.get("spark.graft.dml.mor.maxSelectivity", "0.02").toDouble
+  /** The widest estimated selectivity an UPDATE reroutes at. */
+  private val MaxSelectivity = 0.02
 
   private def hasSubquery(e: Expression): Boolean =
     e.exists(_.isInstanceOf[SubqueryExpression])
@@ -81,7 +81,7 @@ object MorDmlRouter {
           root <- TxnLog.tableRoot(wh, name)
           sets <- plainSets(assignments) if sets.nonEmpty
           m = TxnTable.readManifest(root, TxnTable.latestVersion(root))
-          sel <- TxnTable.morSelectivity(m, cond) if sel <= maxSelectivity
+          sel <- TxnTable.morSelectivity(m, cond) if sel <= MaxSelectivity
         } yield MorUpdateCommand(root, cond.sql, sets): LogicalPlan
       } catch {
         // pricing must never break a statement the delegate can plan

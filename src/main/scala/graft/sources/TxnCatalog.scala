@@ -3451,10 +3451,7 @@ private[sources] class TxnScanBuilder(spark: SparkSession, root: String,
   override def build(): Scan = {
     if (aggFuncs.nonEmpty) return new TxnLocalAggScan(m, aggFuncs)
     val kept = m.files.filter { f =>
-      bounds.forall { case (c, (lo, hi)) =>
-        val (mn, mx) = m.statRange(f, c)
-        !(hi < mn || lo > mx)
-      } &&
+      bounds.forall { case (c, (lo, hi)) => m.overlaps(f, c, lo, hi) } &&
         // point probes also consult the per-file blooms (the skipping
         // fact ranges cannot express on a scattered column); a file
         // without a bloom for the column never skips, and the residual
@@ -3683,17 +3680,8 @@ private[sources] class TxnScan(spark: SparkSession, root: String,
     val l2p = m.renames.map(_.swap).toMap
     val physRequired = StructType(required.fields.map(f =>
       f.copy(name = l2p.getOrElse(f.name, f.name))))
-    val paths = files.map(f =>
-      new org.apache.hadoop.fs.Path(TxnTable.resolvePath(root, f.path)))
-    val index = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-      spark, paths, Map.empty[String, String], Some(physRequired),
-      org.apache.spark.sql.execution.datasources.NoopCache,
-      Some(org.apache.spark.sql.execution.datasources.PartitionSpec.emptySpec),
-      None)
-    org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(
-      spark, ConfCache.sessionConfCopy(spark), index,
-      StructType.fromDDL(m.schemaDdl), physRequired,
-      new StructType(), filters, CaseInsensitiveStringMap.empty())
+    TxnTable.parquetScan(spark, root, files.map(_.path),
+      StructType.fromDDL(m.schemaDdl), physRequired, filters)
   }
   private def delegate = delegateOver(kept, pushed)
 
@@ -3756,8 +3744,6 @@ private[sources] class TxnDvBatch(spark: SparkSession, root: String,
     mkBatch: (Seq[FileEntry], Array[Filter]) => Batch,
     pushed: Array[Filter],
     sharded: Boolean = false) extends Batch {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.execution.datasources.PartitionedFile
 
   // loaded once per scan over the PLANNING-TIME dv'd set (runtime
   // filters only narrow `kept`, so this is always a superset).
@@ -3771,14 +3757,7 @@ private[sources] class TxnDvBatch(spark: SparkSession, root: String,
     dvd.map(f => f.path -> TxnTable.readDvPositions(root, f, hconf).sorted).toMap
   }
 
-  private def pf(f: FileEntry): PartitionedFile = {
-    val abs = new java.io.File(TxnTable.resolvePath(root, f.path))
-    val len = if (f.bytes > 0) f.bytes else abs.length()
-    PartitionedFile(InternalRow.empty,
-      org.apache.spark.paths.SparkPath.fromPath(
-        new org.apache.hadoop.fs.Path(abs.toURI)),
-      0L, len, Array.empty[String], 0L, len)
-  }
+  private def pf(f: FileEntry) = TxnTable.partitionedFile(root, f)
 
   override def planInputPartitions()
       : Array[org.apache.spark.sql.connector.read.InputPartition] = {
@@ -4191,6 +4170,10 @@ private[sources] class TxnStagedTable(ident: Identifier, root: String,
   TxnLog.requireLocalRoot(root)
   TxnTable.requireBigintKeys(schema0, keyCol)
 
+  // the table this CTAS/RTAS defines; the staged write fills its files
+  private val layout = Manifest(targetVersion, op, keyCol, schema0.toDDL,
+    shards, layoutDiv, Nil, checkExpr = checkExpr, statsCols = statsCols,
+    statsTypes = statsTypes)
   @volatile private var staged: Option[(Manifest, String)] = None
 
   // identifier-safe: the V1 write seam round-trips the table name
@@ -4209,21 +4192,19 @@ private[sources] class TxnStagedTable(ident: Identifier, root: String,
       override def build(): Write = new V1Write {
         override def toInsertableRelation: InsertableRelation =
           new InsertableRelation {
-            override def insert(data: DataFrame, ignored: Boolean): Unit =
-              staged = Some(TxnTable.writeSnapshot(data.sparkSession, root,
-                targetVersion, op, data, keyCol, shards, layoutDiv,
-                checkExpr = checkExpr, statsCols = statsCols,
-                statsTypes = statsTypes))
+            override def insert(data: DataFrame, ignored: Boolean): Unit = {
+              val (files, sub) = TxnTable.writeSnapshot(data.sparkSession,
+                root, targetVersion, data, layout)
+              staged = Some((layout.copy(schemaDdl = data.schema.toDDL,
+                files = files), sub))
+            }
           }
       }
     }
 
   override def commitStagedChanges(): Unit = {
-    val (m0, sub) = staged.getOrElse(
-      // REPLACE TABLE without AS SELECT: an empty staged snapshot
-      (Manifest(targetVersion, op, keyCol, schema0.toDDL, shards,
-        layoutDiv, Nil, checkExpr = checkExpr, statsCols = statsCols,
-        statsTypes = statsTypes), "data/__no_attempt__"))
+    // REPLACE TABLE without AS SELECT: an empty staged snapshot
+    val (m0, sub) = staged.getOrElse((layout, TxnTable.NoAttempt))
     val m =
       if (targetVersion == 0) m0.copy(cdfKind = "adds")
       else {
@@ -4232,8 +4213,8 @@ private[sources] class TxnStagedTable(ident: Identifier, root: String,
         // the row-level delta of an arbitrary replace is unknowable —
         // the change feed refuses this version rather than guesses
         val head = TxnTable.readManifestRaw(root, targetVersion - 1)
-        m0.copy(version = targetVersion, txns = head.txns,
-          nextId = head.nextId, cdfKind = "")
+        TxnTable.successor(m0.copy(version = head.version, txns = head.txns,
+          nextId = head.nextId), op, m0.files, cdfKind = "")
       }
     if (!TxnTable.commit(root, targetVersion, m)) {
       graft.Fs.deleteRecursively(s"$root/$sub")
@@ -4623,8 +4604,6 @@ private[sources] class GraftShardFunction(shards: Int, layoutDiv: Long)
 private[sources] class TxnShardBatch(root: String,
     keptNow: () => Seq[FileEntry],
     delegateBatch: () => Batch) extends Batch {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.execution.datasources.PartitionedFile
 
   override def planInputPartitions()
       : Array[org.apache.spark.sql.connector.read.InputPartition] =
@@ -4632,15 +4611,7 @@ private[sources] class TxnShardBatch(root: String,
       .getOrElse(sys.error("shard batch planned over unsharded files"))
       .toSeq.sortBy(_._1).zipWithIndex
       .map { case ((shard, files), idx) =>
-        val pfs = files.map { f =>
-          val abs = new java.io.File(TxnTable.resolvePath(root, f.path))
-          // bytes ride the manifest; mtime is irrelevant to the reader
-          val len = if (f.bytes > 0) f.bytes else abs.length()
-          PartitionedFile(InternalRow.empty,
-            org.apache.spark.paths.SparkPath.fromPath(
-              new org.apache.hadoop.fs.Path(abs.toURI)),
-            0L, len, Array.empty[String], 0L, len)
-        }.toArray
+        val pfs = files.map(TxnTable.partitionedFile(root, _)).toArray
         new TxnShardBatch.ShardFilePartition(idx, pfs, shard)
       }.toArray
 

@@ -129,17 +129,8 @@ private[sources] class TxnCdfMicroBatchStream(spark: SparkSession,
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  private def parquetScanOver(schema: StructType, paths: Seq[String]) = {
-    val index = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-      spark, paths.map(new org.apache.hadoop.fs.Path(_)),
-      Map.empty[String, String], Some(schema),
-      org.apache.spark.sql.execution.datasources.NoopCache,
-      Some(org.apache.spark.sql.execution.datasources.PartitionSpec.emptySpec),
-      None)
-    org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(
-      spark, ConfCache.sessionConfCopy(spark), index, schema, schema,
-      new StructType(), Array.empty, CaseInsensitiveStringMap.empty())
-  }
+  private def parquetScanOver(schema: StructType, paths: Seq[String]) =
+    TxnTable.parquetScan(spark, root, paths, schema, schema)
 
   import TxnCdfStream.CdfPartition
 
@@ -155,14 +146,12 @@ private[sources] class TxnCdfMicroBatchStream(spark: SparkSession,
           val before =
             if (v == 0) Set.empty[String]
             else TxnTable.readManifest(root, v - 1).files.map(_.path).toSet
-          val adds = m.files.filterNot(f => before.contains(f.path))
-            .map(f => TxnTable.resolvePath(root, f.path))
+          val adds = m.files.map(_.path).filterNot(before.contains)
           if (adds.isEmpty) Nil
           else parquetScanOver(dataSchema, adds).toBatch.planInputPartitions()
             .map(p => CdfPartition(p, insert = true, v.toLong)).toSeq
         case "files" =>
-          parquetScanOver(cdfFileSchema,
-            Seq(TxnTable.resolvePath(root, raw.cdfPath)))
+          parquetScanOver(cdfFileSchema, Seq(raw.cdfPath))
             .toBatch.planInputPartitions()
             .map(p => CdfPartition(p, insert = false, v.toLong)).toSeq
         case "none" => Nil

@@ -88,12 +88,9 @@ object TxnRowLevel {
         messages.toSeq.collect { case s: TxnFileWriter.FileStats => s })
       val carry = carriedPaths().toSet
       val files = base.files.filter(f => carry(f.path)) ++ rewritten
-      val m = base.copy(version = base.version + 1, op = op,
-        schemaDdl = base.schemaDdl, files = files, deltaOf = -1,
-        commitMs = 0L,
-        // an arbitrary SQL rewrite: the row-level delta is not recorded
-        // (the change feed refuses this version rather than guessing)
-        cdfKind = "", cdfPath = "", cdfRows = 0L)
+      // an arbitrary SQL rewrite: the row-level delta is not recorded
+      // (the change feed refuses this version rather than guessing)
+      val m = TxnTable.successor(base, op, files, cdfKind = "")
       if (!TxnTable.commit(root, base.version + 1, m)) {
         graft.Fs.deleteRecursively(s"$root/$sub")
         throw new java.util.ConcurrentModificationException(

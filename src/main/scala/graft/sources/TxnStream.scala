@@ -6,7 +6,6 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFacto
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** qdm: STREAMING READ FROM the transactional table — the consumer
   * half qde prototyped with a hand-held cursor, now as the real
@@ -77,17 +76,8 @@ private[sources] class TxnMicroBatchStream(spark: SparkSession, root: String,
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  private def parquetScanOver(files: Seq[FileEntry]) = {
-    val paths = files.map(f => new org.apache.hadoop.fs.Path(s"$root/${f.path}"))
-    val index = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-      spark, paths, Map.empty[String, String], Some(schema),
-      org.apache.spark.sql.execution.datasources.NoopCache,
-      Some(org.apache.spark.sql.execution.datasources.PartitionSpec.emptySpec),
-      None)
-    org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(
-      spark, ConfCache.sessionConfCopy(spark), index, schema, schema,
-      new StructType(), Array.empty, CaseInsensitiveStringMap.empty())
-  }
+  private def parquetScanOver(files: Seq[FileEntry]) =
+    TxnTable.parquetScan(spark, root, files.map(_.path), schema, schema)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val vFrom = start.asInstanceOf[TxnOffset].version

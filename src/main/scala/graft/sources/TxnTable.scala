@@ -149,8 +149,6 @@ object TxnTable {
     * `dropped` tombstones physical names removed by [[dropColumn]]:
     * old files still carry the bytes, so re-adding the name would
     * resurrect stale values — [[addColumn]] refuses tombstoned names.
-    * A full-rewrite commit (transact/optimize) writes logical names
-    * physically and so NORMALIZES the mapping away.
     *
     * CHANGE DATA FEED facts (the Delta CDF idea): `cdfKind` classifies
     * the commit's row-level delta for [[changeFeed]] — "adds" (an
@@ -204,6 +202,12 @@ object TxnTable {
         if (i >= 0 && f.vmin.length > i) (f.vmin(i), f.vmax(i))
         else (Long.MinValue, Long.MaxValue)
       }
+
+    /** Can file `f` hold a value of column `c` in [lo, hi]? */
+    def overlaps(f: FileEntry, c: String, lo: Long, hi: Long): Boolean = {
+      val (mn, mx) = statRange(f, c)
+      !(hi < mn || lo > mx)
+    }
   }
 
   private[graft] val StatTypes = Set("long", "string", "date", "timestamp")
@@ -500,25 +504,25 @@ object TxnTable {
 
   /** Write `df` as version-`version` data files under an attempt-unique
     * subdir (losers of a commit race delete ONLY their own attempt; the
-    * winner's files are never touched), re-sharded on the pinned layout,
-    * and return the manifest candidate AND the attempt subdir (needed for
-    * lost-race cleanup even when the snapshot wrote zero files). The
-    * files go through the one txn file writer ([[TxnFileWriter]]) in a
-    * single job: its tasks write each shard run's parquet file and fold
-    * the per-file stats and the CHECK count from the rows as written, so
-    * nothing is read back; a violating batch deletes its attempt dir and
-    * is rejected before any manifest references it. private[sources]:
+    * winner's files are never touched), re-sharded on `layout`'s key,
+    * shards and divisor (or `shardExprOverride`) with its second key,
+    * CHECK and stats declarations, and return the files AND the attempt
+    * subdir (needed for lost-race cleanup even when the snapshot wrote
+    * zero files). The files go through the one txn file writer
+    * ([[TxnFileWriter]]) in a single job: its tasks write each shard
+    * run's parquet file and fold the per-file stats and the CHECK count
+    * from the rows as written, so nothing is read back; a violating
+    * batch deletes its attempt dir and is rejected before any manifest
+    * references it. private[sources]:
     * [[GraftTxnCatalog]]'s STAGED CTAS/RTAS writes data through this
     * seam and publishes with [[commit]]'s CAS only at
     * `commitStagedChanges` — the two-phase shape StagingTableCatalog
     * demands. */
-  private[sources] def writeSnapshot(spark: SparkSession, root: String, version: Int,
-      op: String, df: DataFrame, keyCol: String, shards: Int,
-      layoutDiv: Long, keyCol2: String = "",
-      shardExprOverride: Option[org.apache.spark.sql.Column] = None,
-      checkExpr: String = "", statsCols: Seq[String] = Nil,
-      statsTypes: Seq[String] = Nil)
-      : (Manifest, String) = {
+  private[sources] def writeSnapshot(spark: SparkSession, root: String,
+      version: Int, df: DataFrame, layout: Manifest,
+      shardExprOverride: Option[org.apache.spark.sql.Column] = None)
+      : (Seq[FileEntry], String) = {
+    val (keyCol, shards) = (layout.keyCol, layout.shards)
     TxnLog.requireLocalRoot(root)
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val sub = f"data/v$version%08d-$attempt"
@@ -535,9 +539,9 @@ object TxnTable {
     // the full key domain, and `div` on decimals yields BIGINT exactly.
     val shardExpr = shardExprOverride.getOrElse(
       expr(s"greatest(0, least(${shards - 1}, " +
-        s"cast($keyCol as decimal(38,0)) * $shards div $layoutDiv))"))
-    val plan = TxnFileWriter.plan(spark, df.schema, keyCol, keyCol2,
-      checkExpr, statsCols, statsTypes)
+        s"cast($keyCol as decimal(38,0)) * $shards div ${layout.layoutDiv}))"))
+    val plan = TxnFileWriter.plan(spark, df.schema, keyCol, layout.keyCol2,
+      layout.checkExpr, layout.statsCols, layout.statsTypes)
     val enriched = df.select(df.columns.toIndexedSeq.map(col) :+
         shardExpr.cast("long").as("__shard"): _*)
       .repartition(shards, col("__shard"))
@@ -545,23 +549,19 @@ object TxnTable {
       // the rows are in key order
       .sortWithinPartitions(col("__shard"), col(keyCol))
     val recs = TxnFileWriter.write(enriched, out, plan, "__shard")
-    val files = TxnFileWriter.fileEntries(root, sub, checkExpr, recs)
+    val files = TxnFileWriter.fileEntries(root, sub, layout.checkExpr, recs)
     require(files.length <= shards,
       s"snapshot wrote ${files.length} files for $shards shards")
     require(files.forall(_.path.startsWith("data/")), s"bad rel paths under $root/")
-    (Manifest(version, op, keyCol, df.schema.toDDL, shards, layoutDiv, files,
-      keyCol2 = keyCol2, checkExpr = checkExpr, statsCols = statsCols,
-      statsTypes = statsTypes), sub)
+    (files, sub)
   }
 
   /** Add (or replace) the table's CHECK constraint AS A COMMIT: the
     * current data must already satisfy it (validated once here), and
     * every later write enforces it on its incoming batch. Dropping =
     * setting "". */
-  def setCheck(spark: SparkSession, root: String, checkExpr: String,
-      maxRetries: Int = 5): (Int, Int) =
-    retryCommit(root, "setCheck", maxRetries) { v =>
-      val base = readManifest(root, v)
+  def setCheck(spark: SparkSession, root: String, checkExpr: String): (Int, Int) =
+    retryCommit(root, "setCheck") { base =>
       if (checkExpr.nonEmpty) {
         // CHECK binds to PHYSICAL names at write time; a constraint
         // over a MAPPED column is ambiguous — refuse until a rewrite
@@ -571,15 +571,14 @@ object TxnTable {
             s"CHECK references renamed column $p→$l; rewrite the table " +
               "(optimize) to normalize the mapping first")
         }
-        val bad = readVersion(spark, root, v)
+        val bad = readVersion(spark, root, base.version)
           .where(!coalesce(expr(checkExpr), lit(true))).count()
         require(bad == 0,
           s"existing rows violate CHECK ($checkExpr): $bad row(s)")
       }
       // metadata-only commit: same files, new constraint
-      (base.copy(version = v + 1, op = "set_check", deltaOf = -1,
-        checkExpr = checkExpr, cdfKind = "none", cdfPath = "",
-        cdfRows = 0L), "data/__no_attempt__")
+      (successor(base, "set_check", base.files)
+        .copy(checkExpr = checkExpr), NoAttempt)
     }
 
   /** SCHEMA WIDEN as a METADATA-ONLY commit (the Delta ADD COLUMNS
@@ -592,9 +591,8 @@ object TxnTable {
     * semantics are qd2's: versions before the widen read back WITHOUT
     * the column. */
   def addColumn(spark: SparkSession, root: String, name: String,
-      sqlType: String, maxRetries: Int = 5): (Int, Int) =
-    retryCommit(root, "addColumn", maxRetries) { v =>
-      val base = readManifest(root, v)
+      sqlType: String): (Int, Int) =
+    retryCommit(root, "addColumn") { base =>
       val schema = org.apache.spark.sql.types.StructType.fromDDL(base.schemaDdl)
       require(!schema.fieldNames.contains(name) &&
         !base.renames.exists(_._2 == name),
@@ -606,9 +604,8 @@ object TxnTable {
           "files; rewrite the table (optimize) before reusing the name")
       val widened = schema.add(name,
         org.apache.spark.sql.types.DataType.fromDDL(sqlType), nullable = true)
-      (base.copy(version = v + 1, op = s"add_column_$name",
-        schemaDdl = widened.toDDL, deltaOf = -1, cdfKind = "none",
-        cdfPath = "", cdfRows = 0L), "data/__no_attempt__")
+      (successor(base, s"add_column_$name", base.files)
+        .copy(schemaDdl = widened.toDDL), NoAttempt)
     }
 
   /** TYPE WIDENING as a METADATA-ONLY commit (qeq) — the Delta
@@ -625,10 +622,9 @@ object TxnTable {
     * column may widen only within the integral long stat lane (its
     * recorded per-file bounds stay valid Long encodes). */
   def widenColumnType(spark: SparkSession, root: String, name: String,
-      newTypeDdl: String, maxRetries: Int = 5): (Int, Int) =
-    retryCommit(root, "widenColumn", maxRetries) { v =>
+      newTypeDdl: String): (Int, Int) =
+    retryCommit(root, "widenColumn") { base =>
       import org.apache.spark.sql.types._
-      val base = readManifest(root, v)
       val p2l = base.renames.toMap
       val schema = StructType.fromDDL(base.schemaDdl)
       val phys = schema.fieldNames
@@ -664,9 +660,8 @@ object TxnTable {
       }
       val widened = StructType(schema.fields.map(f =>
         if (f.name == phys) f.copy(dataType = to) else f))
-      (base.copy(version = v + 1, op = s"widen_${name}_${to.simpleString}",
-        schemaDdl = widened.toDDL, deltaOf = -1, cdfKind = "none",
-        cdfPath = "", cdfRows = 0L), "data/__no_attempt__")
+      (successor(base, s"widen_${name}_${to.simpleString}", base.files)
+        .copy(schemaDdl = widened.toDDL), NoAttempt)
     }
 
   /** Does `sqlExpr` mention `name` as a word? Textual and conservative
@@ -686,9 +681,8 @@ object TxnTable {
     * (optimize/transact) normalizes the mapping away, after which they
     * could be renamed under their new physical identity. */
   def renameColumn(spark: SparkSession, root: String, oldName: String,
-      newName: String, maxRetries: Int = 5): (Int, Int) =
-    retryCommit(root, "renameColumn", maxRetries) { v =>
-      val base = readManifest(root, v)
+      newName: String): (Int, Int) =
+    retryCommit(root, "renameColumn") { base =>
       val p2l = base.renames.toMap
       val schema = org.apache.spark.sql.types.StructType.fromDDL(base.schemaDdl)
       val phys = schema.fieldNames
@@ -713,9 +707,8 @@ object TxnTable {
           s"dropped name in $root")
       val renames2 = (base.renames.filterNot(_._1 == phys) :+
         (phys -> newName)).filterNot(r => r._1 == r._2).sortBy(_._1)
-      (base.copy(version = v + 1, op = s"rename_${oldName}_to_$newName",
-        renames = renames2, deltaOf = -1, cdfKind = "none", cdfPath = "",
-        cdfRows = 0L), "data/__no_attempt__")
+      (successor(base, s"rename_${oldName}_to_$newName", base.files)
+        .copy(renames = renames2), NoAttempt)
     }
 
   /** DROP COLUMN as a METADATA-ONLY commit: the pinned DDL narrows, the
@@ -723,10 +716,8 @@ object TxnTable {
     * the physical name is TOMBSTONED so [[addColumn]] cannot resurrect
     * the stale values. Time travel before the drop still reads the
     * column. Structural columns refuse as in [[renameColumn]]. */
-  def dropColumn(spark: SparkSession, root: String, name: String,
-      maxRetries: Int = 5): (Int, Int) =
-    retryCommit(root, "dropColumn", maxRetries) { v =>
-      val base = readManifest(root, v)
+  def dropColumn(spark: SparkSession, root: String, name: String): (Int, Int) =
+    retryCommit(root, "dropColumn") { base =>
       val p2l = base.renames.toMap
       val schema = org.apache.spark.sql.types.StructType.fromDDL(base.schemaDdl)
       val phys = schema.fieldNames
@@ -740,29 +731,61 @@ object TxnTable {
         s"cannot drop $name: the CHECK constraint references it")
       val narrowed = org.apache.spark.sql.types.StructType(
         schema.fields.filterNot(_.name == phys))
-      (base.copy(version = v + 1, op = s"drop_column_$name",
+      (successor(base, s"drop_column_$name", base.files).copy(
         schemaDdl = narrowed.toDDL,
         renames = base.renames.filterNot(_._1 == phys),
-        dropped = (base.dropped :+ phys).distinct.sorted,
-        deltaOf = -1, cdfKind = "none", cdfPath = "", cdfRows = 0L),
-        "data/__no_attempt__")
+        dropped = (base.dropped :+ phys).distinct.sorted), NoAttempt)
     }
 
+  /** The one successor rule, Delta's: a commit is the snapshot it read
+    * plus its actions. Every table fact of `base` (layout, schema,
+    * CHECK, stats declarations, column mapping, identity column, the
+    * idempotence ledger, the id watermark) carries into the next
+    * version, which this sets: its number, op, file list, delta shape
+    * and change-feed facts. A caller states only what its action
+    * changes on top. A full-rewrite commit (transact, optimize,
+    * reshard, optimizeZorder) writes logical names physically and so
+    * NORMALIZES the mapping away: [[fullRewrite]] states the written
+    * schema and clears `renames`/`dropped`. [[restore]] and
+    * [[publishBranch]] commit the successor of another snapshot
+    * re-stamped at the head's version. */
+  private[sources] def successor(base: Manifest, op: String,
+      files: Seq[FileEntry], deltaOf: Int = -1, cdfKind: String = "none",
+      cdfPath: String = "", cdfRows: Long = 0L): Manifest =
+    base.copy(version = base.version + 1, op = op, files = files,
+      deltaOf = deltaOf, cdfKind = cdfKind, cdfPath = cdfPath,
+      cdfRows = cdfRows)
+
+  /** The [[successor]] of an append: a DELTA manifest of just `adds`
+    * on top of `base`, except every `checkpointEvery`-th version, which
+    * commits the full file list so resolve chains stay bounded. */
+  private def addsSuccessor(base: Manifest, op: String,
+      adds: Seq[FileEntry], checkpointEvery: Int): Manifest =
+    if ((base.version + 1) % checkpointEvery == 0)
+      successor(base, op, base.files ++ adds, cdfKind = "adds")
+    else successor(base, op, adds, deltaOf = base.version, cdfKind = "adds")
+
+  /** The attempt dir of a commit that writes no file. */
+  private[sources] val NoAttempt = "data/__no_attempt__"
+
+  /** Commit conflicts a writer rebases over before it gives up. */
+  private val MaxRetries = 5
+
   /** Shared optimistic-concurrency skeleton for every post-create
-    * writer: `mkAttempt` reads the CURRENT head version and returns
-    * the manifest candidate + its attempt subdir; on a lost commit
-    * race the attempt dir is deleted and the builder re-invoked
+    * writer: `mkAttempt` gets the CURRENT head manifest (resolved) and
+    * returns the manifest candidate + its attempt subdir; on a lost
+    * commit race the attempt dir is deleted and the builder re-invoked
     * against the new head — re-deriving the update from the current
     * snapshot IS the rebase. Returns (committed version, conflicts). */
-  private def retryCommit(root: String, opName: String, maxRetries: Int,
+  private def retryCommit(root: String, opName: String,
       beforeCommit: () => Unit = () => (),
       cleanupOnLoss: Boolean = true)(
-      mkAttempt: Int => (Manifest, String)): (Int, Int) = {
+      mkAttempt: Manifest => (Manifest, String)): (Int, Int) = {
     var conflicts = 0
-    while (conflicts <= maxRetries) {
+    while (conflicts <= MaxRetries) {
       val v = latestVersion(root)
       require(v >= 0, s"$opName on uncreated table $root")
-      val (m, sub) = mkAttempt(v)
+      val (m, sub) = mkAttempt(readManifest(root, v))
       beforeCommit()
       if (commit(root, v + 1, m)) return (v + 1, conflicts)
       // an op that stages version-independent files (append) keeps its
@@ -770,7 +793,7 @@ object TxnTable {
       if (cleanupOnLoss) graft.Fs.deleteRecursively(s"$root/$sub")
       conflicts += 1
     }
-    sys.error(s"$opName gave up after $maxRetries conflicts on $root")
+    sys.error(s"$opName gave up after $MaxRetries conflicts on $root")
   }
 
   /** A manifest path resolved against its table root. Paths are
@@ -779,6 +802,40 @@ object TxnTable {
     * table — zero-copy sharing, copy-on-write divergence. */
   private[sources] def resolvePath(root: String, p: String): String =
     if (p.startsWith("/")) p else s"$root/$p"
+
+  /** Spark's vectorized parquet scan over the txn files (or change-file
+    * dirs) at manifest paths `paths`, resolved against `root`. The file
+    * index serves exactly those paths, with no partition discovery, so
+    * the `__shard` directory key never surfaces. */
+  private[sources] def parquetScan(spark: SparkSession, root: String,
+      paths: Seq[String], dataSchema: org.apache.spark.sql.types.StructType,
+      readSchema: org.apache.spark.sql.types.StructType,
+      filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+      : org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan = {
+    import org.apache.spark.sql.execution.datasources._
+    val index = new InMemoryFileIndex(spark,
+      paths.map(p => new org.apache.hadoop.fs.Path(resolvePath(root, p))),
+      Map.empty[String, String], Some(readSchema), NoopCache,
+      Some(PartitionSpec.emptySpec), None)
+    org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(
+      spark, ConfCache.sessionConfCopy(spark), index, dataSchema, readSchema,
+      new org.apache.spark.sql.types.StructType(), filters,
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+  }
+
+  /** Txn file `f` as one whole-file split. Its length is the manifest's
+    * `bytes` (the on-disk length for a file that predates them); mtime
+    * is irrelevant to the reader. */
+  private[sources] def partitionedFile(root: String, f: FileEntry)
+      : org.apache.spark.sql.execution.datasources.PartitionedFile = {
+    val abs = new java.io.File(resolvePath(root, f.path))
+    val len = if (f.bytes > 0) f.bytes else abs.length()
+    org.apache.spark.sql.execution.datasources.PartitionedFile(
+      org.apache.spark.sql.catalyst.InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromPath(
+        new org.apache.hadoop.fs.Path(abs.toURI)),
+      0L, len, Array.empty[String], 0L, len)
+  }
 
   /** Read an explicit file subset with a pinned schema, each file's
     * DELETION VECTOR applied (merge-on-read, see [[deleteMor]]): clean
@@ -978,8 +1035,9 @@ object TxnTable {
     requireBigintKeys(df.schema, keyCol)
     graft.Fs.deleteRecursively(root)
     val mx = df.agg(max(col(keyCol))).head().getLong(0)
-    val (m0, _) = writeSnapshot(spark, root, 0, "create", df, keyCol, shards, mx + 1)
-    val m = m0.copy(cdfKind = "adds")
+    val layout = Manifest(0, "create", keyCol, df.schema.toDDL, shards,
+      mx + 1, Nil, cdfKind = "adds")
+    val m = layout.copy(files = writeSnapshot(spark, root, 0, df, layout)._1)
     require(commit(root, 0, m), s"create raced on fresh root $root")
     m
   }
@@ -1020,9 +1078,10 @@ object TxnTable {
     val yq = s"($yCol * ${1L << bits} div ${mxY + 1})"
     val z = zInterleaveExpr(xq, yq, bits, "div")
     val shardE = expr(s"(($z) * $shards) div ${1L << (2 * bits)}")
-    val (m0, _) = writeSnapshot(spark, root, 0, "create_zorder", df, xCol,
-      shards, mxX + 1, keyCol2 = yCol, shardExprOverride = Some(shardE))
-    val m = m0.copy(cdfKind = "adds")
+    val layout = Manifest(0, "create_zorder", xCol, df.schema.toDDL, shards,
+      mxX + 1, Nil, keyCol2 = yCol, cdfKind = "adds")
+    val m = layout.copy(files =
+      writeSnapshot(spark, root, 0, df, layout, Some(shardE))._1)
     require(commit(root, 0, m), s"create raced on fresh root $root")
     m
   }
@@ -1034,8 +1093,8 @@ object TxnTable {
   def prunedRead2D(spark: SparkSession, root: String, version: Int,
       lo: Long, hi: Long, lo2: Long, hi2: Long): (DataFrame, Int, Int) = {
     val m = readManifest(root, version)
-    val keep = m.files.filter(f => !(hi < f.minK || lo > f.maxK) &&
-      !(hi2 < f.minK2 || lo2 > f.maxK2))
+    val keep = m.files.filter(f => m.overlaps(f, m.keyCol, lo, hi) &&
+      m.overlaps(f, m.keyCol2, lo2, hi2))
     (toLogical(m, readFiles(spark, root, m.schemaDdl, keep)),
       keep.size, m.files.size)
   }
@@ -1087,13 +1146,15 @@ object TxnTable {
       .collectFirst { case (a, tv) if a == appId => tv }
   }
 
-  private def bumpTxns(base: Seq[(String, Long)],
+  /** `base`'s idempotence ledger with `txn` folded in; throws
+    * [[TxnAlreadyCommitted]] when `base` already holds that txn. */
+  private def ledgerWith(base: Manifest,
       txn: Option[(String, Long)]): Seq[(String, Long)] = txn match {
-    case None => base
+    case None => base.txns
     case Some((a, tv)) =>
-      val prev = base.collectFirst { case (`a`, old) => old }
-        .getOrElse(Long.MinValue)
-      (base.filterNot(_._1 == a) :+ (a -> math.max(tv, prev))).sortBy(_._1)
+      if (base.txns.exists(t => t._1 == a && t._2 >= tv))
+        throw new TxnAlreadyCommitted(base.version)
+      (base.txns.filterNot(_._1 == a) :+ (a -> tv)).sortBy(_._1)
   }
 
   /** Control-flow signal: the txn this append carries already landed
@@ -1112,11 +1173,11 @@ object TxnTable {
     * link race or the ledger check — never lands twice. Returns
     * (version, conflicts, applied). */
   def appendTxn(spark: SparkSession, root: String, df: DataFrame,
-      appId: String, txnVersion: Long, checkpointEvery: Int = 4,
-      maxRetries: Int = 5): (Int, Int, Boolean) =
+      appId: String, txnVersion: Long,
+      checkpointEvery: Int = 4): (Int, Int, Boolean) =
     try {
       val (v, c) = append(spark, root, df, s"${appId}_$txnVersion",
-        checkpointEvery, maxRetries, txn = Some(appId -> txnVersion))
+        checkpointEvery, txn = Some(appId -> txnVersion))
       (v, c, true)
     } catch {
       case dup: TxnAlreadyCommitted => (dup.version, 0, false)
@@ -1152,26 +1213,12 @@ object TxnTable {
     * applied=false — the caller owns removing its duplicate files.
     * Returns (version, conflicts, applied). */
   def commitAdds(root: String, files: Seq[FileEntry], op: String,
-      txn: Option[(String, Long)] = None, checkpointEvery: Int = 4,
-      maxRetries: Int = 5): (Int, Int, Boolean) =
+      txn: Option[(String, Long)] = None,
+      checkpointEvery: Int = 4): (Int, Int, Boolean) =
     try {
-      val (v, c) = retryCommit(root, "commitAdds", maxRetries) { v =>
-        val base = readManifest(root, v)
-        txn.foreach { case (a, tv) =>
-          if (base.txns.exists(t => t._1 == a && t._2 >= tv))
-            throw new TxnAlreadyCommitted(v)
-        }
-        val ledger = bumpTxns(base.txns, txn)
-        val m =
-          if ((v + 1) % checkpointEvery == 0)
-            base.copy(version = v + 1, op = op,
-              files = base.files ++ files, deltaOf = -1, commitMs = 0L,
-              txns = ledger, cdfKind = "adds", cdfPath = "", cdfRows = 0L)
-          else
-            base.copy(version = v + 1, op = op, files = files, deltaOf = v,
-              commitMs = 0L, txns = ledger, cdfKind = "adds", cdfPath = "",
-              cdfRows = 0L)
-        (m, "data/__no_attempt__")
+      val (v, c) = retryCommit(root, "commitAdds") { base =>
+        (addsSuccessor(base, op, files, checkpointEvery)
+          .copy(txns = ledgerWith(base, txn)), NoAttempt)
       }
       (v, c, true)
     } catch { case dup: TxnAlreadyCommitted => (dup.version, 0, false) }
@@ -1186,8 +1233,7 @@ object TxnTable {
     * new version by re-writing the (small) batch only. Returns
     * (committed version, conflicts). */
   def append(spark: SparkSession, root: String, df: DataFrame, op: String,
-      checkpointEvery: Int = 4, maxRetries: Int = 5,
-      beforeCommit: () => Unit = () => (),
+      checkpointEvery: Int = 4, beforeCommit: () => Unit = () => (),
       txn: Option[(String, Long)] = None): (Int, Int) = {
     // CONTENTION-FREE RETRY (qe7): an append's files are
     // version-independent adds, so a lost commit race re-mints ONLY
@@ -1197,7 +1243,7 @@ object TxnTable {
     // at the new head; a concurrent DDL/optimize invalidates it and
     // the batch re-stages against the new facts. A duplicate-txn
     // detection on retry cleans the staged files before skipping.
-    var staged: Option[(Manifest, String, Manifest)] = None // adds, sub, base
+    var staged: Option[(Seq[FileEntry], String, Manifest)] = None // adds, sub, base
     def compatible(a: Manifest, b: Manifest): Boolean =
       a.schemaDdl == b.schemaDdl && a.checkExpr == b.checkExpr &&
         a.statsCols == b.statsCols && a.statsTypes == b.statsTypes &&
@@ -1209,16 +1255,10 @@ object TxnTable {
         graft.Fs.deleteRecursively(s"$root/$sub") }
       staged = None
     }
-    try retryCommit(root, "append", maxRetries, beforeCommit,
-      cleanupOnLoss = false) { v =>
-      val base = readManifest(root, v)
+    try retryCommit(root, "append", beforeCommit,
+      cleanupOnLoss = false) { base =>
       // the ledger dedup, under the CURRENT head (see [[appendTxn]])
-      txn.foreach { case (a, tv) =>
-        if (base.txns.exists(t => t._1 == a && t._2 >= tv)) {
-          dropStaged()
-          throw new TxnAlreadyCommitted(v)
-        }
-      }
+      val ledger = ledgerWith(base, txn)
       staged.filterNot(s => compatible(s._3, base)).foreach(_ => dropStaged())
       // batches arrive under LOGICAL names; files carry physical ones
       val phys = toPhysical(base, df)
@@ -1262,39 +1302,19 @@ object TxnTable {
         }
       }.toIndexedSeq: _*)
       val (adds, sub) = staged.map(s => (s._1, s._2)).getOrElse {
-        val w = writeSnapshot(spark, root, v + 1, op, batch,
-          base.keyCol, base.shards, base.layoutDiv, keyCol2 = base.keyCol2,
-          checkExpr = base.checkExpr, statsCols = base.statsCols, statsTypes = base.statsTypes)
+        val w = writeSnapshot(spark, root, base.version + 1, batch, base)
         staged = Some((w._1, w._2, base))
         w
       }
-      // always carry the table's pinned DDL (the batch df's own DDL can
-      // differ in nullability flags and would fork the read schema) and
-      // the full idempotence ledger (every raw manifest carries it)
-      val ledger = bumpTxns(base.txns, txn)
-      // version re-stamps explicitly: a reused staged attempt was
-      // built for an older target version
-      val m =
-        if ((v + 1) % checkpointEvery == 0)
-          adds.copy(version = v + 1, schemaDdl = base.schemaDdl,
-            files = base.files ++ adds.files, deltaOf = -1, txns = ledger,
-            renames = base.renames, dropped = base.dropped,
-            cdfKind = "adds", nextId = base.nextId,
-            identityCol = base.identityCol,
-            identityStart = base.identityStart)
-        else adds.copy(version = v + 1, schemaDdl = base.schemaDdl,
-          deltaOf = v, txns = ledger,
-          renames = base.renames, dropped = base.dropped, cdfKind = "adds",
-          nextId = base.nextId,
-          identityCol = base.identityCol,
-          identityStart = base.identityStart)
-      (m, sub)
+      // the manifest carries the table's pinned DDL, never the batch
+      // df's own (its nullability flags would fork the read schema)
+      (addsSuccessor(base, op, adds, checkpointEvery).copy(txns = ledger), sub)
     }
     catch {
       case e: Throwable =>
-        // terminal failure (or a duplicate-txn skip, already cleaned):
-        // never leak the staged attempt past this call
-        if (!e.isInstanceOf[TxnAlreadyCommitted]) dropStaged()
+        // terminal failure or a duplicate-txn skip: never leak the
+        // staged attempt past this call
+        dropStaged()
         throw e
     }
   }
@@ -1314,8 +1334,7 @@ object TxnTable {
     * (version, conflicts, firstId, n). */
   def appendWithIdentity(spark: SparkSession, root: String, df: DataFrame,
       idCol: String, op: String, checkpointEvery: Int = 4,
-      maxRetries: Int = 5, beforeCommit: () => Unit = () => (),
-      pinnedInput: Boolean = false)
+      beforeCommit: () => Unit = () => (), pinnedInput: Boolean = false)
       : (Int, Int, Long, Long) = {
     require(!df.columns.contains(idCol),
       s"identity column $idCol must not be present in the batch")
@@ -1337,8 +1356,7 @@ object TxnTable {
       var firstId = 0L
       var total = 0L
       val (ver, conflicts) = retryCommit(root, "appendWithIdentity",
-        maxRetries, beforeCommit) { v =>
-        val base = readManifest(root, v)
+        beforeCommit) { base =>
         val schema = org.apache.spark.sql.types.StructType.fromDDL(base.schemaDdl)
         require(schema.fieldNames.headOption.contains(idCol) ||
           schema.fieldNames.contains(idCol),
@@ -1359,6 +1377,7 @@ object TxnTable {
         val start = base.identityStart + base.nextId
         total = ordered.map(_._2).sum
         firstId = start
+        val watermark = base.nextId + total
         val withIds = rdd.mapPartitionsWithIndex { (i, it) =>
           var next = start + offs(i)
           it.map { row =>
@@ -1372,21 +1391,9 @@ object TxnTable {
           idField +: phys.schema.fields)
         val df2 = spark.createDataFrame(withIds, batchSchema)
           .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-        val (adds, sub) = writeSnapshot(spark, root, v + 1, op, df2,
-          base.keyCol, base.shards, base.layoutDiv, keyCol2 = base.keyCol2,
-          checkExpr = base.checkExpr, statsCols = base.statsCols, statsTypes = base.statsTypes)
-        val m =
-          if ((v + 1) % checkpointEvery == 0)
-            adds.copy(version = v + 1, schemaDdl = base.schemaDdl,
-              files = base.files ++ adds.files, deltaOf = -1,
-              txns = base.txns, identityCol = base.identityCol, identityStart = base.identityStart, renames = base.renames,
-              dropped = base.dropped, cdfKind = "adds",
-              nextId = base.nextId + total)
-          else adds.copy(version = v + 1, schemaDdl = base.schemaDdl,
-            deltaOf = v, txns = base.txns, identityCol = base.identityCol, identityStart = base.identityStart, renames = base.renames,
-            dropped = base.dropped, cdfKind = "adds",
-            nextId = base.nextId + total)
-        (m, sub)
+        val (adds, sub) = writeSnapshot(spark, root, base.version + 1, df2, base)
+        (addsSuccessor(base, op, adds, checkpointEvery)
+          .copy(nextId = watermark), sub)
       }
       (ver, conflicts, firstId, total)
     } finally unpinCheckpoint(pinned)
@@ -1423,16 +1430,24 @@ object TxnTable {
     * deleted before the retry. */
   def transact(spark: SparkSession, root: String, op: String,
       mkUpdate: DataFrame => DataFrame,
-      beforeCommit: () => Unit = () => (),
-      maxRetries: Int = 5): (Int, Int) =
-    retryCommit(root, "transact", maxRetries, beforeCommit) { v =>
-      val base = readManifest(root, v)
-      val next = mkUpdate(readVersion(spark, root, v))
-      val (m, sub) = writeSnapshot(spark, root, v + 1, op, next, base.keyCol,
-        base.shards, base.layoutDiv, keyCol2 = base.keyCol2,
-        checkExpr = base.checkExpr, statsCols = base.statsCols, statsTypes = base.statsTypes)
-      (m.copy(txns = base.txns, identityCol = base.identityCol, identityStart = base.identityStart, nextId = base.nextId), sub)
+      beforeCommit: () => Unit = () => ()): (Int, Int) =
+    retryCommit(root, "transact", beforeCommit) { base =>
+      fullRewrite(spark, root, base, op,
+        mkUpdate(readVersion(spark, root, base.version)), cdfKind = "")
     }
+
+  /** The [[successor]] of `layout`'s version that rewrites the whole
+    * table as `df` under `layout` (the head's, or the new layout a
+    * re-clustering commits), sharded by `shardExpr` when given. */
+  private def fullRewrite(spark: SparkSession, root: String, layout: Manifest,
+      op: String, df: DataFrame, cdfKind: String = "none",
+      shardExpr: Option[org.apache.spark.sql.Column] = None)
+      : (Manifest, String) = {
+    val (files, sub) =
+      writeSnapshot(spark, root, layout.version + 1, df, layout, shardExpr)
+    (successor(layout, op, files, cdfKind = cdfKind).copy(
+      schemaDdl = df.schema.toDDL, renames = Nil, dropped = Nil), sub)
+  }
 
   /** OPTIMIZE: rewrite the current snapshot at a new shard count AS A
     * COMMIT — data identical, fewer files, history intact (the old
@@ -1444,16 +1459,10 @@ object TxnTable {
     * compaction, never dropped (graded end-to-end by qd9). Returns
     * (committed version, conflicts). */
   def optimize(spark: SparkSession, root: String, newShards: Int,
-      beforeCommit: () => Unit = () => (),
-      maxRetries: Int = 5): (Int, Int) =
-    retryCommit(root, "optimize", maxRetries, beforeCommit) { v =>
-      val base = readManifest(root, v)
-      val (m, sub) = writeSnapshot(spark, root, v + 1, "optimize",
-        readVersion(spark, root, v), base.keyCol, newShards, base.layoutDiv,
-        keyCol2 = base.keyCol2, checkExpr = base.checkExpr,
-        statsCols = base.statsCols, statsTypes = base.statsTypes)
-      (m.copy(txns = base.txns, identityCol = base.identityCol, identityStart = base.identityStart, cdfKind = "none",
-        nextId = base.nextId), sub)
+      beforeCommit: () => Unit = () => ()): (Int, Int) =
+    retryCommit(root, "optimize", beforeCommit) { base =>
+      fullRewrite(spark, root, base.copy(shards = newShards), "optimize",
+        readVersion(spark, root, base.version))
     }
 
   /** LAYOUT EVOLUTION as a commit (qer) — the round-11 verdict's item
@@ -1470,20 +1479,14 @@ object TxnTable {
     * never asserted. History is ordinary: pre-reshard versions read
     * their own immutable files. */
   def reshard(spark: SparkSession, root: String, newShards: Int,
-      newLayoutDiv: Long, beforeCommit: () => Unit = () => (),
-      maxRetries: Int = 5): (Int, Int) = {
+      newLayoutDiv: Long, beforeCommit: () => Unit = () => ()): (Int, Int) = {
     require(newShards > 0 && newLayoutDiv > 0,
       s"reshard needs positive layout parameters, got " +
         s"($newShards, $newLayoutDiv)")
-    retryCommit(root, "reshard", maxRetries, beforeCommit) { v =>
-      val base = readManifest(root, v)
-      val (m, sub) = writeSnapshot(spark, root, v + 1, "reshard",
-        readVersion(spark, root, v), base.keyCol, newShards, newLayoutDiv,
-        keyCol2 = base.keyCol2, checkExpr = base.checkExpr,
-        statsCols = base.statsCols, statsTypes = base.statsTypes)
-      (m.copy(txns = base.txns, identityCol = base.identityCol,
-        identityStart = base.identityStart, cdfKind = "none",
-        nextId = base.nextId), sub)
+    retryCommit(root, "reshard", beforeCommit) { base =>
+      fullRewrite(spark, root,
+        base.copy(shards = newShards, layoutDiv = newLayoutDiv), "reshard",
+        readVersion(spark, root, base.version))
     }
   }
 
@@ -1499,11 +1502,10 @@ object TxnTable {
     * columns' stats through the manifest's `keyCol2`. Returns
     * (committed version, conflicts). */
   def optimizeZorder(spark: SparkSession, root: String, yCol: String,
-      bits: Int, newShards: Int, beforeCommit: () => Unit = () => (),
-      maxRetries: Int = 5): (Int, Int) =
-    retryCommit(root, "optimizeZorder", maxRetries, beforeCommit) { v =>
-      val base = readManifest(root, v)
-      val snap = readVersion(spark, root, v)
+      bits: Int, newShards: Int,
+      beforeCommit: () => Unit = () => ()): (Int, Int) =
+    retryCommit(root, "optimizeZorder", beforeCommit) { base =>
+      val snap = readVersion(spark, root, base.version)
       val r = snap.agg(min(col(base.keyCol)), max(col(base.keyCol)),
         min(col(yCol)), max(col(yCol))).head() // 1-row probe (qaq)
       require(!r.isNullAt(0) && r.getLong(0) >= 0 && r.getLong(2) >= 0,
@@ -1514,12 +1516,8 @@ object TxnTable {
       val yq = s"($yCol * ${1L << bits} div ${mxY + 1})"
       val z = zInterleaveExpr(xq, yq, bits, "div")
       val shardE = expr(s"(($z) * $newShards) div ${1L << (2 * bits)}")
-      val (m, sub) = writeSnapshot(spark, root, v + 1, "optimize_zorder",
-        snap, base.keyCol, newShards, base.layoutDiv, keyCol2 = yCol,
-        shardExprOverride = Some(shardE), checkExpr = base.checkExpr,
-        statsCols = base.statsCols, statsTypes = base.statsTypes)
-      (m.copy(txns = base.txns, identityCol = base.identityCol, identityStart = base.identityStart, cdfKind = "none",
-        nextId = base.nextId), sub)
+      fullRewrite(spark, root, base.copy(shards = newShards, keyCol2 = yCol),
+        "optimize_zorder", snap, shardExpr = Some(shardE))
     }
 
   /** SURGICAL copy-on-write delete: consult the manifest stats to find
@@ -1530,33 +1528,27 @@ object TxnTable {
     * table cost 0.1% of the table, where [[transact]]'s full-frame
     * rewrite (the right tool for whole-table updates) would cost all
     * of it. Returns (version, filesRewritten, filesCarried). */
-  def deleteRange(spark: SparkSession, root: String, lo: Long, hi: Long,
-      maxRetries: Int = 5): (Int, Int, Int) = {
+  def deleteRange(spark: SparkSession, root: String, lo: Long,
+      hi: Long): (Int, Int, Int) = {
     val head = readManifest(root, latestVersion(root))
-    if (head.files.forall(f => hi < f.minK || lo > f.maxK))
+    if (!head.files.exists(head.overlaps(_, head.keyCol, lo, hi)))
       return (head.version, 0, head.files.size) // stats-proven no-op
     var rewritten = 0; var carriedN = 0
-    val (ver, _) = retryCommit(root, "deleteRange", maxRetries) { v =>
-      val base = readManifest(root, v)
+    val (ver, _) = retryCommit(root, "deleteRange") { base =>
       val (touched, carried) =
-        base.files.partition(f => !(hi < f.minK || lo > f.maxK))
+        base.files.partition(base.overlaps(_, base.keyCol, lo, hi))
       val touchedRows = readFiles(spark, root, base.schemaDdl, touched)
       val remaining = touchedRows.where(!col(base.keyCol).between(lo, hi))
-      val (adds, sub) = writeSnapshot(spark, root, v + 1, "delete_range",
-        remaining, base.keyCol, base.shards, base.layoutDiv,
-        keyCol2 = base.keyCol2, checkExpr = base.checkExpr,
-        statsCols = base.statsCols, statsTypes = base.statsTypes)
+      val (adds, sub) =
+        writeSnapshot(spark, root, base.version + 1, remaining, base)
       // change data feed: the deleted rows, recorded AT WRITE TIME so
       // reading the feed later costs O(changes), never a snapshot diff
       val nCdf = writeCdf(root, sub,
         touchedRows.where(col(base.keyCol).between(lo, hi))
           .withColumn("_change_type", lit("delete")))
-      rewritten = adds.files.size; carriedN = carried.size
-      (adds.copy(schemaDdl = base.schemaDdl,
-        files = carried ++ adds.files, deltaOf = -1, txns = base.txns, identityCol = base.identityCol, identityStart = base.identityStart,
-        renames = base.renames, dropped = base.dropped,
-        cdfKind = "files", cdfPath = s"$sub/_cdf", cdfRows = nCdf,
-        nextId = base.nextId), sub)
+      rewritten = adds.size; carriedN = carried.size
+      (successor(base, "delete_range", carried ++ adds, cdfKind = "files",
+        cdfPath = s"$sub/_cdf", cdfRows = nCdf), sub)
     }
     (ver, rewritten, carriedN)
   }
@@ -1574,30 +1566,21 @@ object TxnTable {
     * tool). Fewer than TWO qualifying files is a proven no-op — no
     * version is minted. Returns (version, filesCompacted,
     * filesCarried). */
-  def compactSmall(spark: SparkSession, root: String, maxRows: Long,
-      maxRetries: Int = 5): (Int, Int, Int) = {
+  def compactSmall(spark: SparkSession, root: String,
+      maxRows: Long): (Int, Int, Int) = {
     val head = readManifest(root, latestVersion(root))
     if (head.files.count(f => f.nRows - f.dvRows <= maxRows) < 2)
       return (head.version, 0, head.files.size)
     var compacted = 0
     var carriedN = 0
-    val (ver, _) = retryCommit(root, "compactSmall", maxRetries) { v =>
-      val base = readManifest(root, v)
+    val (ver, _) = retryCommit(root, "compactSmall") { base =>
       val (small, big) =
         base.files.partition(f => f.nRows - f.dvRows <= maxRows)
       val live = readFiles(spark, root, base.schemaDdl, small)
-      val (adds, sub) = writeSnapshot(spark, root, v + 1, "compact_small",
-        live, base.keyCol, base.shards, base.layoutDiv,
-        keyCol2 = base.keyCol2, checkExpr = base.checkExpr,
-        statsCols = base.statsCols, statsTypes = base.statsTypes)
+      val (adds, sub) = writeSnapshot(spark, root, base.version + 1, live, base)
       compacted = small.size
       carriedN = big.size
-      (adds.copy(schemaDdl = base.schemaDdl, files = big ++ adds.files,
-        deltaOf = -1, txns = base.txns,
-        renames = base.renames, dropped = base.dropped,
-        cdfKind = "none", nextId = base.nextId,
-        identityCol = base.identityCol,
-        identityStart = base.identityStart), sub)
+      (successor(base, "compact_small", big ++ adds), sub)
     }
     (ver, compacted, carriedN)
   }
@@ -1615,20 +1598,18 @@ object TxnTable {
     * readable, the restore is itself an auditable commit, and vacuum
     * keeps every referenced file alive. O(1) metadata; loses a commit
     * race like any writer. Returns (newVersion, conflicts). */
-  def restore(spark: SparkSession, root: String, toVersion: Int,
-      maxRetries: Int = 5): (Int, Int) =
-    retryCommit(root, "restore", maxRetries) { v =>
-      require(toVersion <= v, s"cannot restore $root to future v$toVersion")
+  def restore(spark: SparkSession, root: String, toVersion: Int): (Int, Int) =
+    retryCommit(root, "restore") { head =>
+      require(toVersion <= head.version,
+        s"cannot restore $root to future v$toVersion")
       val target = readManifest(root, toVersion)
-      val head = readManifestRaw(root, v)
-      (target.copy(version = v + 1, op = s"restore_v$toVersion",
-        deltaOf = -1, txns = head.txns, cdfKind = "", cdfPath = "",
-        cdfRows = 0L,
-        // the id watermark is monotone like the ledger: rolled-back
-        // rows vanish but their ids stay burned, so a post-restore
-        // identity append can never collide with a later un-restore
+      // the target snapshot re-stamped at the head, with the head's
+      // ledger and id watermark — monotone like the ledger: rolled-back
+      // rows vanish but their ids stay burned, so a post-restore
+      // identity append can never collide with a later un-restore
+      (successor(target.copy(version = head.version, txns = head.txns,
         nextId = math.max(target.nextId, head.nextId)),
-        "data/__no_attempt__")
+        s"restore_v$toVersion", target.files, cdfKind = ""), NoAttempt)
     }
 
   /** SHALLOW CLONE (the Delta `CREATE TABLE ... SHALLOW CLONE`
@@ -1799,11 +1780,10 @@ object TxnTable {
     // as the source; its structural-equality require above guarantees
     // the two spellings agree there.
     val srcM = if (mainHead == base) bHead else mainM
-    val m = srcM.copy(version = mainHead + 1, op = s"publish_$name",
-      files = files, deltaOf = -1,
+    val m = successor(srcM.copy(version = mainHead,
       txns = mergeLedgers(mainLedger, bHead.txns),
-      nextId = math.max(mainM.nextId, bHead.nextId),
-      cdfKind = cdfKind, cdfPath = "", cdfRows = 0L)
+      nextId = math.max(mainM.nextId, bHead.nextId)),
+      s"publish_$name", files, cdfKind = cdfKind)
     require(commit(root, mainHead + 1, m),
       s"publish of branch $name raced with a concurrent main commit; " +
         "audit still holds — retry the publish")
@@ -1855,17 +1835,17 @@ object TxnTable {
   /** MERGE-ON-READ DELETE: the [[morDml]] commit with no new rows.
     * Returns (version, filesTagged, rowsDeleted) — (head, 0, 0) when
     * nothing matched. */
-  def deleteMor(spark: SparkSession, root: String, pred: String,
-      maxRetries: Int = 5): (Int, Int, Long) =
-    morDml(spark, root, pred, None, maxRetries)
+  def deleteMor(spark: SparkSession, root: String,
+      pred: String): (Int, Int, Long) =
+    morDml(spark, root, pred, None)
 
   /** MERGE-ON-READ UPDATE: the [[morDml]] commit whose new rows are
     * the matched rows with `sets` applied SIMULTANEOUSLY over the old
     * row (`SET a = b, b = a` swaps). Returns (version, filesTagged,
     * rowsUpdated) — (head, 0, 0) when nothing matched. */
   def updateMor(spark: SparkSession, root: String, pred: String,
-      sets: Seq[(String, String)], maxRetries: Int = 5): (Int, Int, Long) =
-    morDml(spark, root, pred, Some(sets), maxRetries)
+      sets: Seq[(String, String)]): (Int, Int, Long) =
+    morDml(spark, root, pred, Some(sets))
 
   /** Control-flow signal: a merge-on-read DML matched no live row — no
     * version is minted (a no-op commit would bloat the log). */
@@ -1901,13 +1881,12 @@ object TxnTable {
     * per-file counts collect on the driver bounded by the FILE count —
     * the bound the manifest itself lives under. */
   private def morDml(spark: SparkSession, root: String, pred: String,
-      sets: Option[Seq[(String, String)]], maxRetries: Int): (Int, Int, Long) = {
+      sets: Option[Seq[(String, String)]]): (Int, Int, Long) = {
     val opName = if (sets.isEmpty) "deleteMor" else "updateMor"
     var tagged = 0
     var matched = 0L
     try {
-      val (ver, _) = retryCommit(root, opName, maxRetries) { v =>
-        val base = readManifest(root, v)
+      val (ver, _) = retryCommit(root, opName) { base =>
         val logicalFields = logicalSchema(base).fields
         val setMap = sets.getOrElse(Nil).toMap
         val unknown = setMap.keySet -- logicalFields.map(_.name)
@@ -1917,8 +1896,8 @@ object TxnTable {
         // the predicate's extracted bounds (all files when unpriceable)
         val condExpr = spark.sessionState.sqlParser.parseExpression(pred)
         val candidates = morBounds(base, condExpr) match {
-          case Some(bs) => base.files.filter(f => bs.forall { case (c, (lo, hi)) =>
-            val (mn, mx) = base.statRange(f, c); !(hi < mn || lo > mx) })
+          case Some(bs) => base.files.filter(f =>
+            bs.forall { case (c, (lo, hi)) => base.overlaps(f, c, lo, hi) })
           case None => base.files
         }
         // the predicate is written against LOGICAL names; the __fp/__idx
@@ -1934,12 +1913,12 @@ object TxnTable {
         try {
           val perFile = hits.groupBy("__fp").agg(count(lit(1)))
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          if (perFile.isEmpty) throw new NothingMatched(v)
+          if (perFile.isEmpty) throw new NothingMatched(base.version)
           val pre = hits.drop("__fp", "__idx")
           val (sub, adds, changes) = sets match {
             case None =>
               val attempt = java.util.UUID.randomUUID().toString.take(8)
-              (f"data/dv-v${v + 1}%08d-$attempt", Nil,
+              (f"data/dv-v${base.version + 1}%08d-$attempt", Nil,
                 pre.withColumn("_change_type", lit("delete")))
             case Some(_) =>
               val post = pre.select(logicalFields.map { f =>
@@ -1947,12 +1926,9 @@ object TxnTable {
                   .map(e => expr(e).cast(f.dataType).as(f.name))
                   .getOrElse(col(f.name))
               }.toIndexedSeq: _*)
-              val (addsM, sub) = writeSnapshot(spark, root, v + 1,
-                "update_mor", toPhysical(base, post), base.keyCol,
-                base.shards, base.layoutDiv, keyCol2 = base.keyCol2,
-                checkExpr = base.checkExpr, statsCols = base.statsCols,
-                statsTypes = base.statsTypes)
-              (sub, addsM.files,
+              val (adds, sub) = writeSnapshot(spark, root, base.version + 1,
+                toPhysical(base, post), base)
+              (sub, adds,
                 pre.withColumn("_change_type", lit("update_preimage"))
                   .unionByName(post
                     .withColumn("_change_type", lit("update_postimage"))))
@@ -1976,13 +1952,11 @@ object TxnTable {
           val nCdf = writeCdf(root, sub, toPhysical(base, changes))
           tagged = touched.size
           matched = perFile.values.sum
-          (base.copy(version = v + 1,
-            op = if (sets.isEmpty) "delete_mor" else "update_mor",
-            files = base.files.map(f => fid.get(f.path).fold(f)(i =>
+          (successor(base, if (sets.isEmpty) "delete_mor" else "update_mor",
+            base.files.map(f => fid.get(f.path).fold(f)(i =>
               f.copy(dv = s"$sub/_dv/__fid=$i",
                 dvRows = f.dvRows + perFile(f.path)))) ++ adds,
-            deltaOf = -1, cdfKind = "files", cdfPath = s"$sub/_cdf",
-            cdfRows = nCdf), sub)
+            cdfKind = "files", cdfPath = s"$sub/_cdf", cdfRows = nCdf), sub)
         } finally unpinCheckpoint(hits)
       }
       (ver, tagged, matched)
@@ -2094,27 +2068,19 @@ object TxnTable {
     * SQL connector, whose scans read raw parquet). History intact:
     * pre-purge versions still read their files + vectors. Returns
     * (version, filesPurged, filesCarried). */
-  def purgeDeletes(spark: SparkSession, root: String, maxRetries: Int = 5)
-      : (Int, Int, Int) = {
+  def purgeDeletes(spark: SparkSession, root: String): (Int, Int, Int) = {
     val head = readManifest(root, latestVersion(root))
     if (head.files.forall(_.dvRows == 0))
       return (head.version, 0, head.files.size)
     var purged = 0
     var carriedN = 0
-    val (ver, _) = retryCommit(root, "purgeDeletes", maxRetries) { v =>
-      val base = readManifest(root, v)
+    val (ver, _) = retryCommit(root, "purgeDeletes") { base =>
       val (dvd, clean) = base.files.partition(_.dvRows > 0)
       val live = readFiles(spark, root, base.schemaDdl, dvd) // vectors applied
-      val (adds, sub) = writeSnapshot(spark, root, v + 1, "purge_deletes",
-        live, base.keyCol, base.shards, base.layoutDiv,
-        keyCol2 = base.keyCol2, checkExpr = base.checkExpr,
-        statsCols = base.statsCols, statsTypes = base.statsTypes)
+      val (adds, sub) = writeSnapshot(spark, root, base.version + 1, live, base)
       purged = dvd.size
       carriedN = clean.size
-      (adds.copy(schemaDdl = base.schemaDdl, files = clean ++ adds.files,
-        deltaOf = -1, txns = base.txns, identityCol = base.identityCol, identityStart = base.identityStart,
-        renames = base.renames, dropped = base.dropped,
-        cdfKind = "none", nextId = base.nextId), sub)
+      (successor(base, "purge_deletes", clean ++ adds), sub)
     }
     (ver, purged, carriedN)
   }
@@ -2127,8 +2093,8 @@ object TxnTable {
     * a narrow-band upsert on a 100 TB table costs the band, not the
     * table ([[transact]] remains the tool for scattered updates).
     * Returns (version, filesRewritten, filesCarried). */
-  def mergeRange(spark: SparkSession, root: String, source: DataFrame,
-      maxRetries: Int = 5): (Int, Int, Int) = {
+  def mergeRange(spark: SparkSession, root: String,
+      source: DataFrame): (Int, Int, Int) = {
     // the source's key span is retry-invariant: probe it once (and an
     // empty source is an upsert of nothing — a no-op, not a crash)
     val head = readManifest(root, latestVersion(root))
@@ -2139,10 +2105,9 @@ object TxnTable {
     if (b.isNullAt(0)) return (head.version, 0, head.files.size)
     val (sLo, sHi) = (b.getLong(0), b.getLong(1)) // 1-row probe (qaq)
     var rewritten = 0; var carriedN = 0
-    val (ver, _) = retryCommit(root, "mergeRange", maxRetries) { v =>
-      val base = readManifest(root, v)
+    val (ver, _) = retryCommit(root, "mergeRange") { base =>
       val (touched, carried) =
-        base.files.partition(f => !(sHi < f.minK || sLo > f.maxK))
+        base.files.partition(base.overlaps(_, base.keyCol, sLo, sHi))
       val target = readFiles(spark, root, base.schemaDdl, touched)
       val valueCols = org.apache.spark.sql.types.StructType
         .fromDDL(base.schemaDdl).fieldNames.filter(_ != base.keyCol)
@@ -2151,10 +2116,7 @@ object TxnTable {
         .select(col(base.keyCol) +:
           valueCols.map(c =>
             coalesce(col(s"s.$c"), col(s"t.$c")).as(c)).toIndexedSeq: _*)
-      val (adds, sub) = writeSnapshot(spark, root, v + 1, "merge_range",
-        merged, base.keyCol, base.shards, base.layoutDiv,
-        keyCol2 = base.keyCol2, checkExpr = base.checkExpr,
-        statsCols = base.statsCols, statsTypes = base.statsTypes)
+      val (adds, sub) = writeSnapshot(spark, root, base.version + 1, merged, base)
       // change data feed: matched keys record update pre/post images,
       // unmatched source keys record inserts — written at commit time
       val srcKeys = src.select(base.keyCol)
@@ -2167,12 +2129,9 @@ object TxnTable {
         .unionByName(merged.join(tgtKeys, Seq(base.keyCol), "left_anti")
           .withColumn("_change_type", lit("insert")))
       val nCdf = writeCdf(root, sub, changes)
-      rewritten = adds.files.size; carriedN = carried.size
-      (adds.copy(schemaDdl = base.schemaDdl,
-        files = carried ++ adds.files, deltaOf = -1, txns = base.txns, identityCol = base.identityCol, identityStart = base.identityStart,
-        renames = base.renames, dropped = base.dropped,
-        cdfKind = "files", cdfPath = s"$sub/_cdf", cdfRows = nCdf,
-        nextId = base.nextId), sub)
+      rewritten = adds.size; carriedN = carried.size
+      (successor(base, "merge_range", carried ++ adds, cdfKind = "files",
+        cdfPath = s"$sub/_cdf", cdfRows = nCdf), sub)
     }
     (ver, rewritten, carriedN)
   }
@@ -2532,7 +2491,7 @@ object TxnTable {
   def prunedRead(spark: SparkSession, root: String, version: Int,
       lo: Long, hi: Long): (DataFrame, Int, Int) = {
     val m = readManifest(root, version)
-    val keep = m.files.filter(f => !(hi < f.minK || lo > f.maxK))
+    val keep = m.files.filter(m.overlaps(_, m.keyCol, lo, hi))
     // through readFiles (round-9 advice fix): a probe range that prunes
     // EVERY file yields the schema'd empty frame, not a zero-path error
     (toLogical(m, readFiles(spark, root, m.schemaDdl, keep)),
@@ -2554,9 +2513,7 @@ object TxnTable {
       m.statsCols.contains(colName),
       s"$colName carries no stats (key=${m.keyCol}, " +
         s"key2=${m.keyCol2}, stats=${m.statsCols.mkString(",")})")
-    val keep = m.files.filter { f =>
-      val (mn, mx) = m.statRange(f, colName); !(hi < mn || lo > mx)
-    }
+    val keep = m.files.filter(m.overlaps(_, colName, lo, hi))
     (toLogical(m, readFiles(spark, root, m.schemaDdl, keep)),
       keep.size, m.files.size)
   }
@@ -2576,9 +2533,7 @@ object TxnTable {
     val m = readManifest(root, version)
     val i = m.statsCols.indexOf(colName)
     require(i >= 0, s"$colName carries no stats (stats=${m.statsCols})")
-    val rangeKept = m.files.filter { f =>
-      val (mn, mx) = m.statRange(f, colName); value >= mn && value <= mx
-    }
+    val rangeKept = m.files.filter(m.overlaps(_, colName, value, value))
     val kept = rangeKept.filter(f => bloomMightContain(f, i, value))
     (toLogical(m, readFiles(spark, root, m.schemaDdl, kept)),
       kept.size, rangeKept.size, m.files.size)

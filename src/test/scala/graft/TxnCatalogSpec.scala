@@ -234,6 +234,30 @@ class TxnCatalogSpec extends SparkSpec {
     assert(chain(e).exists(_.contains("REWRITE")), chain(e).mkString(" | "))
   }
 
+  test("readStream.table streams a shallow clone's source files and its own") {
+    Seq("spec_clone_src", "spec_clone_dst").foreach(t =>
+      sql(s"DROP TABLE IF EXISTS graft.$t"))
+    sql("""CREATE TABLE graft.spec_clone_src (k BIGINT, v BIGINT) USING graft_txn
+           TBLPROPERTIES ('key'='k','shards'='2','layout_div'='1000')""")
+    sql("INSERT INTO graft.spec_clone_src SELECT id, id FROM range(100)")
+    // the clone's v0 references the source's files by absolute path;
+    // its own append lands root-relative beside them
+    TxnTable.shallowClone(whRoot("spec_clone_src"), whRoot("spec_clone_dst"))
+    sql("INSERT INTO graft.spec_clone_dst SELECT id + 100, id FROM range(40)")
+    val ckpt = graft.Fs.scratch("graft_txnspec_clone_stream_ckpt")
+    graft.Fs.deleteRecursively(ckpt)
+    val got = new java.util.concurrent.atomic.AtomicLong(0)
+    val consume: (org.apache.spark.sql.DataFrame, Long) => Unit =
+      (df, _) => { got.addAndGet(df.agg(sum("k")).head().getLong(0)); () }
+    val q = spark.readStream.table("graft.spec_clone_dst").writeStream
+      .foreachBatch(consume)
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
+    assert(got.get() == (0L until 140L).sum)
+  }
+
   test("ALTER TABLE: ADD COLUMNS is metadata-only; SET/UNSET check; narrowing refused") {
     sql("DROP TABLE IF EXISTS graft.spec_alter")
     sql("""CREATE TABLE graft.spec_alter (k BIGINT, v BIGINT) USING graft_txn

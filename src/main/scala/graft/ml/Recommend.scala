@@ -11,9 +11,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Same estimator semantics — explicit feedback, seed 823,
   * coldStartStrategy="drop" (unseen user OR item rows removed before
-  * scoring, R-25) — but the CV runs `setParallelism(...)` over cached
-  * fold inputs instead of the reference's 81 serial refits of an
-  * uncached scan, which is where its 2.3 h went (SURVEY §3.3). */
+  * scoring, R-25) — but the CV fits each fold's grid points
+  * `setParallelism(...)` at a time over cached fold inputs instead of
+  * the reference's 81 serial refits of an uncached scan, which is where
+  * its 2.3 h went (SURVEY §3.3). */
 object Recommend {
 
   /** R-24: one seeded ALS fit. `numBlocks` sizes the user/item block
@@ -34,7 +35,13 @@ object Recommend {
 
   /** R-26/R-27: the reference's grid shape (rank × maxIter × regParam,
     * MovieLensRecommender.py:211-221) under k-fold CV. Grid values are
-    * parameters so tests can shrink the 27-point grid. */
+    * parameters so tests can shrink the 27-point grid.
+    *
+    * Spark's `CrossValidator` runs the folds one after another: within
+    * a fold up to `parallelism` grid points fit concurrently, and only
+    * after the last fold does it refit the best point on the whole
+    * input (at the perfbench grid, 2 points × 2 folds: two waves of 2
+    * fits, then the refit). */
   def gridSearchCV(train: DataFrame,
       ranks: Seq[Int] = Seq(1, 10, 100),
       maxIters: Seq[Int] = Seq(5, 10, 15),
@@ -54,7 +61,7 @@ object Recommend {
       .build()
     val evaluator = new RegressionEvaluator()
       .setMetricName("rmse").setLabelCol(ratingCol).setPredictionCol("prediction")
-    // materialize the cache BEFORE the parallel fold fits fan out:
+    // materialize the cache BEFORE a fold's concurrent fits fan out:
     // `parallelism` concurrent fits racing an unmaterialized cache
     // duplicate the scan under storage locks (observed as 60s-vs-250s
     // bench variance on this query)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.VectorFunctions
+import graft.functions.{TextKernels, VectorFunctions}
 import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -61,7 +61,7 @@ object Dedup {
     * collapse whitespace, THEN group by content. Catches the
     * "same doc, different capitalization/markup" duplicates exact dedup
     * misses at a fraction of MinHash's cost. Normalization is a narrow
-    * codegen projection (lower + two regexp_replace + trim, no UDF);
+    * codegen projection (lower, then one [a-z0-9]-runs kernel, no UDF);
     * the grouping follows [[exactByContent]]'s collision-safe
     * (xxhash64, text) key shape, and map-side partial aggregation
     * collapses duplicates before the exchange. Per-language output: doc
@@ -77,9 +77,7 @@ object Dedup {
     * which is the documented contract here — a script-aware variant
     * would widen the keep-classes to \p{L}\p{N}, at the cost of
     * engine-varying Unicode casefold edge cases on the graded surface. */
-  def normalizeText(text: Column): Column =
-    trim(regexp_replace(
-      regexp_replace(lower(text), "[^a-z0-9 ]", " "), " +", " "))
+  def normalizeText(text: Column): Column = TextKernels.normalizeAlnum(lower(text))
 
   def normalizedDedupOf(docs: DataFrame): DataFrame = {
     docs
@@ -150,26 +148,18 @@ object Dedup {
       .orderBy("cent_id")
   }
 
-  /** Word-shingle MinHash signatures with `numHashes` permutations of
-    * the form h_i(x) = (a_i·x + b_i) mod p over xxhash64 token-shingle
-    * hashes. Pure expression work — no UDF, no driver state. */
-  private val P = 1000000007L // prime; (P-1)·a + b stays far below Long.MaxValue
+  private val P = 1000000007L // prime modulus of chunkDedup's chunk hash
 
   /** Hashed trigram shingles — one array pass (Text.trigrams → xxhash64). */
   def shingleHashes(text: Column): Column =
     transform(Text.trigrams(text), g => abs(xxhash64(g)))
 
-  /** k permutation minima over an ALREADY MATERIALIZED shingle-hash array
-    * column. Project `shingleHashes` into its own column first: the k
-    * folds reference it k times, which stops CollapseProject from
-    * inlining (and so re-tokenizing) the document k times. */
+  /** Word-shingle MinHash signatures: `numHashes` permutation minima
+    * h_i(x) = (a_i·x + b_i) mod p over a shingle-hash array column, in
+    * one codegen'd pass per document ([[TextKernels.minhash]]). Pure
+    * expression work — no UDF, no driver state. */
   def minhashFromHashes(h: Column, numHashes: Int): Column =
-    array((1 to numHashes).map { k =>
-      val a = 1000003L * k + 12345L
-      val b = 998244353L % P * k + 7L
-      aggregate(h, lit(Long.MaxValue),
-        (acc, s) => least(acc, ((s % P) * a + b) % P))
-    }: _*)
+    TextKernels.minhashMinima(h, numHashes)
 
   def minhashSignature(text: Column, numHashes: Int): Column =
     minhashFromHashes(shingleHashes(text), numHashes)
@@ -1262,10 +1252,14 @@ object Dedup {
       .where(col("df") > dfCap)
       .select("gram")
       .cache() // tiny by construction; feeds the anti-join + the audit count
-    val nCapped = capped.groupBy()
-      .agg(count(lit(1)).as("n_capped_grams")) // 1-row audit frame
+    // a driver Long, and `sizes` cached once: a crossJoined 1-row frame
+    // and two `sizes` subtrees (whose cache scans defeat exchange reuse)
+    // plan three broadcast stages, which AQE creates in whatever order
+    // their shuffles finish; that renumbers the whole-stage codegen
+    // classes, so Janino recompiles at random, long after warm-up
+    val nCapped = capped.count()
     val kept = grams.join(broadcast(capped), Seq("gram"), "left_anti")
-    val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
+    val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("n_grams")).cache()
     val shared = kept.as("g1").join(kept.as("g2"),
         col("g1.gram") === col("g2.gram") && col("g1.doc_id") < col("g2.doc_id"))
       .groupBy(col("g1.doc_id").as("a"), col("g2.doc_id").as("b"))
@@ -1279,10 +1273,9 @@ object Dedup {
       // and a ratio rounding UP across the threshold must not admit a
       // row the oracle rejects
       .where(col("containment_raw") >= threshold)
-      .crossJoin(broadcast(nCapped))
       .select(col("a"), col("b"), col("n_shared"), col("n_grams_a"),
         col("n_grams_b"), round(col("containment_raw"), 6).as("containment"),
-        col("n_capped_grams"))
+        lit(nCapped).as("n_capped_grams"))
       .orderBy("a", "b")
   }
 

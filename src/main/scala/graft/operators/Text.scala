@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * shuffle except the final reporting aggregations — so they scale
   * linearly with input splits at 100 TB.
   *
-  * Everything is expressed with codegen'd built-ins and higher-order
-  * array functions (`transform`/`filter`/`aggregate`), never Scala UDFs,
-  * so whole-stage codegen spans the full pipeline.
+  * Everything is expressed with codegen'd built-ins, codegen'd kernels
+  * (`graft.functions`) and higher-order array functions
+  * (`transform`/`filter`/`aggregate`), never Scala UDFs.
   */
 object Text {
 
@@ -26,36 +26,20 @@ object Text {
   def tokensRegex(text: Column): Column =
     regexp_extract_all(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0))
 
-  /** Token trigrams as a SINGLE array pass: bigrams via zip_with(toks,
-    * toks[2..]), trigrams via zip_with(bigrams, toks[3..]), then slice to
-    * the n−2 full windows. Never `element_at(split(text), i)` inside a
-    * lambda — that re-splits the whole document per element and turns a
-    * linear scan into an O(n²·len) one (observed: a single sf0.01 task
-    * pinned for 10+ minutes). Docs shorter than 3 tokens fall back to one
-    * whole-text gram. */
+  /** Token trigrams: [[ngrams]] with n = 3, except that a doc shorter
+    * than 3 tokens falls back to one whole-text gram. */
   def trigrams(text: Column): Column = {
     val toks = tokens(text)
-    val n = size(toks)
-    val g2 = zip_with(toks, slice(toks, lit(2), greatest(n - 1, lit(0))),
-      (a, b) => concat_ws(" ", a, b))
-    val g3 = zip_with(g2, slice(toks, lit(3), greatest(n - 2, lit(0))),
-      (ab, c) => concat_ws(" ", ab, c))
-    when(n < 3, array(text)).otherwise(slice(g3, lit(1), greatest(n - 2, lit(1))))
+    when(size(toks) < 3, array(text)).otherwise(ngrams(toks, 3))
   }
 
-  /** Token n-grams (n ≥ 2) by the same zip_with chaining as [[trigrams]]:
-    * level k joins the running (k−1)-grams with the tokens shifted by
-    * k−1, so the whole construction is n−1 linear array passes — never a
-    * per-element `slice`, which would be O(len²) per document. Returns
-    * the len−n+1 full windows (empty array for shorter docs). */
+  /** Token n-grams (n ≥ 2): the len−n+1 full windows, each its tokens
+    * joined by single spaces (null tokens skipped, as `concat_ws` skips
+    * them), or [] for a shorter doc. One codegen'd window pass per
+    * document ([[graft.functions.TextKernels.ngrams]]). */
   def ngrams(toks: Column, n: Int): Column = {
     require(n >= 2, s"ngrams needs n >= 2, got $n")
-    val nTok = size(toks)
-    val joined = (2 to n).foldLeft(toks) { (acc, k) =>
-      zip_with(acc, slice(toks, lit(k), greatest(nTok - (k - 1), lit(0))),
-        (a, b) => concat_ws(" ", a, b))
-    }
-    slice(joined, lit(1), greatest(nTok - (n - 1), lit(0)))
+    graft.functions.TextKernels.tokenNGrams(toks, n)
   }
 
   /** One-pass run-length scan over a SORTED array: returns

@@ -813,10 +813,21 @@ object TxnTable {
       filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
       : org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan = {
     import org.apache.spark.sql.execution.datasources._
-    val index = new InMemoryFileIndex(spark,
-      paths.map(p => new org.apache.hadoop.fs.Path(resolvePath(root, p))),
+    val roots = paths.map(p => new org.apache.hadoop.fs.Path(resolvePath(root, p)))
+    val index = new InMemoryFileIndex(spark, roots,
       Map.empty[String, String], Some(readSchema), NoopCache,
       Some(PartitionSpec.emptySpec), None)
+    // the index drops a root path that is gone without an error, so a
+    // lost file would read as absent rows: match every path against the
+    // listing it already holds (a change-file dir by its files' parent);
+    // only an unlisted path, such as an empty change-file dir, costs a stat
+    val listed = index.allFiles().iterator
+      .flatMap(f => Iterator(f.getPath, f.getPath.getParent)).toSet
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val missing = roots.filterNot(p => listed(fs.makeQualified(p)) || fs.exists(p))
+    if (missing.nonEmpty) throw new java.io.FileNotFoundException(
+      s"graft_txn table $root lists ${missing.size} file(s) that do not exist: " +
+        missing.mkString(", "))
     org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(
       spark, ConfCache.sessionConfCopy(spark), index, dataSchema, readSchema,
       new org.apache.spark.sql.types.StructType(), filters,

@@ -126,21 +126,12 @@ class MlSpec extends SparkSpec {
   }
 
   test("job budget: selectK(2 to 10) + fit(bestK) runs at most 10 Spark jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.GraftTestBridge.waitListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
+    val jobs = jobsOf {
       val k = Clustering.bestK(Clustering.selectK(spark, feats, train, ks = 2 to 10))
       Clustering.fit(feats, k)
-      org.apache.spark.GraftTestBridge.waitListenerBus(sc)
-    } finally sc.removeSparkListener(listener)
-    info(s"${jobs.get()} Spark jobs")
-    assert(jobs.get() <= 10, s"${jobs.get()} Spark jobs, budget 10")
+    }
+    info(s"$jobs Spark jobs")
+    assert(jobs <= 10, s"$jobs Spark jobs, budget 10")
   }
 
   test("typed SSE Aggregator matches the codegen squared_l2 sum (R-18)") {

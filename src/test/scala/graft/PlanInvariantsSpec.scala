@@ -70,13 +70,12 @@ class PlanInvariantsSpec extends SparkSpec {
     "q6c_knn_join"         -> "broadcast(8-row query block)",
     "q6d_hamming_topk"     -> "broadcast(4-row packed query block)",
     "q2h_scd2_point_in_time" -> "1-row completeness audit",
-    "q4k_containment_dedup" -> "1-row capped-gram-count aggregate folded onto every graded row",
     "q52_minhash_pairs"     -> "1-row recall-contract probes (truth/found/candidate aggregates)",
     "q5f_pagerank_converged" -> "1-row dangling-mass aggregate redistributed each iteration",
     "q1l_data_profile_approx" -> "1-row exact-distinct contract arm broadcast onto the 1-row sketch arm",
     "q4o_pmi_pairs" -> "1-row corpus-size aggregate broadcast onto the pair table",
     "q4q_fuzzy_decontamination" -> "1-row recall-contract probes (q52 pattern, cross-split)",
-    "q5i_link_prediction" -> "1-row capped-center count folded onto every graded row (q4k pattern)",
+    "q5i_link_prediction" -> "1-row capped-center count folded onto every graded row",
     "q6g_rerank_topk" -> "broadcast(1-row query vector) + 1-row recall-contract probe (q61/q62 pattern)",
     "q4r_bm25_scoring" -> "1-row corpus-stats aggregate (sum_dl, n_docs) broadcast onto the postings",
     "q1v_kendall_tau" -> "broadcast(contingency table bounded by the value domain, <=|qty|x|disc| rows) + 1-row marginal aggregates",

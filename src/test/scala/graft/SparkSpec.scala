@@ -15,4 +15,21 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sfDir: String = SparkSpec.sfDir
+
+  /** Spark jobs started while `body` runs: the job-budget counter. */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftTestBridge.waitListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftTestBridge.waitListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
 }

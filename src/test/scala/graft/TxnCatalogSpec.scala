@@ -258,6 +258,34 @@ class TxnCatalogSpec extends SparkSpec {
     assert(got.get() == (0L until 140L).sum)
   }
 
+  test("a committed data file gone from disk fails a SQL scan and readStream.table") {
+    sql("DROP TABLE IF EXISTS graft.spec_lost_file")
+    sql("""CREATE TABLE graft.spec_lost_file (k BIGINT, v BIGINT) USING graft_txn
+           TBLPROPERTIES ('key'='k','shards'='2','layout_div'='1000')""")
+    sql("INSERT INTO graft.spec_lost_file SELECT id, id FROM range(100)")
+    sql("INSERT INTO graft.spec_lost_file SELECT id, id FROM range(100, 150)")
+    val root = whRoot("spec_lost_file")
+    val files = TxnTable.readManifest(root, TxnTable.latestVersion(root)).files
+    assert(files.size >= 2, "a file must survive the loss")
+    val lost = files.head.path
+    java.nio.file.Files.delete(java.nio.file.Paths.get(root, lost))
+    def refused(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(c => c.isInstanceOf[java.io.FileNotFoundException] &&
+          c.getMessage.contains(lost))
+    val scan = intercept[Exception](sql("SELECT sum(k) FROM graft.spec_lost_file").collect())
+    assert(refused(scan), scan)
+    val ckpt = graft.Fs.scratch("graft_txnspec_lost_file_ckpt")
+    graft.Fs.deleteRecursively(ckpt)
+    val q = spark.readStream.table("graft.spec_lost_file").writeStream
+      .format("noop")
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    val stream = try intercept[Exception](q.awaitTermination()) finally q.stop()
+    assert(refused(stream), stream)
+  }
+
   test("ALTER TABLE: ADD COLUMNS is metadata-only; SET/UNSET check; narrowing refused") {
     sql("DROP TABLE IF EXISTS graft.spec_alter")
     sql("""CREATE TABLE graft.spec_alter (k BIGINT, v BIGINT) USING graft_txn

@@ -98,9 +98,6 @@ object ModelStore {
   def loadAls(spark: SparkSession, dir: String): ALSModel =
     ALSModel.load(s"${ensure(spark, dir)}/als")
 
-  def loadKmeans(spark: SparkSession, dir: String): KMeansModel =
-    KMeansModel.load(s"${ensure(spark, dir)}/kmeans")
-
   private val Json = new ObjectMapper()
 
   /** A store's save-time checksums as one flat JSON object — the

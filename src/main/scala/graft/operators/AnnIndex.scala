@@ -110,7 +110,7 @@ object AnnIndex {
     }
     val ranked = model.clusterCenters.zipWithIndex
       .map { case (c, i) => i -> sqDist(c.toArray) }
-      .sortBy { case (i, d) => (d, i) }.map(_._1)
+      .sortBy { case (i, d) => (d, i) }.map(_._1).toIndexedSeq
     val query = lists.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q"))
     def probeTopK(lids: Seq[Int]): DataFrame = lists

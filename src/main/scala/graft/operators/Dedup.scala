@@ -233,26 +233,20 @@ object Dedup {
 
   /** Exact distinct-trigram Jaccard over every gram-sharing pair — the
     * ground truth both MinHash contracts verify against. The shared-gram
-    * join is the AUDIT arm (run at fixture scale to grade the
-    * approximate paths); production runs only the banded/LSH candidate
-    * generation, which is what the contracts certify. Downstream
-    * thresholds apply to the RAW ratio (integer-derived doubles —
-    * bit-identical in any engine). */
+    * join ([[overlapPairs]], uncapped) is the AUDIT arm (run at fixture
+    * scale to grade the approximate paths); production runs only the
+    * banded/LSH candidate generation, which is what the contracts
+    * certify. Downstream thresholds apply to the RAW ratio
+    * (integer-derived doubles — bit-identical in any engine). */
   def gramJaccardAllPairs(docs: DataFrame): DataFrame = {
     val grams = docs
       .select(col("doc_id"),
         explode(array_distinct(Text.trigrams(col("text")))).as("gram"))
       .cache()
-    val sizes = grams.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    grams.as("g1").join(grams.as("g2"),
-        col("g1.gram") === col("g2.gram") && col("g1.doc_id") < col("g2.doc_id"))
-      .groupBy(col("g1.doc_id").as("a"), col("g2.doc_id").as("b"))
-      .agg(count(lit(1)).as("shared"))
-      .join(sizes.select(col("doc_id").as("a"), col("n").as("na")), "a")
-      .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")), "b")
+    overlapPairs(grams, "doc_id", "gram", None)._1
       .select(col("a"), col("b"),
-        (col("shared").cast("double") /
-          (col("na") + col("nb") - col("shared"))).as("jac"))
+        (col("n_shared").cast("double") /
+          (col("n_a") + col("n_b") - col("n_shared"))).as("jac"))
   }
 
   /** q4q: FUZZY DECONTAMINATION — q49 catches VERBATIM n-gram overlap
@@ -1205,6 +1199,64 @@ object Dedup {
       .orderBy("doc_id")
   }
 
+  /** Pairs of ids that share a key — the one self-join plan under the
+    * shared-key pair family: the trigram-Jaccard truth
+    * ([[gramJaccardAllPairs]]), q4k containment, the capped-Jaccard pair
+    * table ([[jaccardPairs]]) and q7a item co-occurrence
+    * (`Recsys`). `postings` holds one row per distinct (`id`, `key`).
+    * The result has one row per unordered pair sharing at least one
+    * key: (a, b, n_shared, n_a, n_b) with a < b, where n_a / n_b count
+    * each side's postings after the cap. The Long is the number of
+    * capped keys (0 without a cap). Callers keep only their postings,
+    * score and threshold.
+    *
+    * DOCUMENT-FREQUENCY CAP (the 100 TB guard): a key held by d ids
+    * fans out into d·(d−1)/2 join pairs, so ONE ubiquitous key turns
+    * the join quadratic. Keys with df > `dfCap` leave BOTH the pair
+    * join and the sizes before pairing, which bounds every key's
+    * fan-out at dfCap²/2 pairs; the drop list is tiny by construction
+    * (≤ postings / dfCap keys), so the anti-join broadcasts.
+    *
+    * Plan rule: the cap list is counted into a driver Long, and `sizes`
+    * is cached once. A crossJoined 1-row count and two `sizes` subtrees
+    * (whose cache scans defeat exchange reuse) plan three broadcast
+    * stages, which AQE creates in whatever order their shuffles finish;
+    * that renumbers the whole-stage codegen classes, so Janino
+    * recompiles at random, long after warm-up. */
+  private[graft] def overlapPairs(postings: DataFrame, id: String, key: String,
+      dfCap: Option[Long]): (DataFrame, Long) = {
+    val (kept, nCapped) = dfCap match {
+      case Some(cap) =>
+        val capped = postings.groupBy(key).agg(count(lit(1)).as("df"))
+          .where(col("df") > cap).select(key)
+          .cache() // feeds the anti-join and the count
+        (postings.join(broadcast(capped), Seq(key), "left_anti"), capped.count())
+      case None => (postings, 0L)
+    }
+    val sizes = kept.groupBy(id).agg(count(lit(1)).as("n")).cache()
+    val pairs = kept.as("p").join(kept.as("q"),
+        col(s"p.$key") === col(s"q.$key") && col(s"p.$id") < col(s"q.$id"))
+      .groupBy(col(s"p.$id").as("a"), col(s"q.$id").as("b"))
+      .agg(count(lit(1)).as("n_shared"))
+      .join(sizes.select(col(id).as("a"), col("n").as("n_a")), "a")
+      .join(sizes.select(col(id).as("b"), col("n").as("n_b")), "b")
+      .select("a", "b", "n_shared", "n_a", "n_b")
+    (pairs, nCapped)
+  }
+
+  /** Distinct token n-grams per document, one (doc_id, gram) posting
+    * each — what q4k and the capped-Jaccard pair table pair on. Cached:
+    * the df table, both self-join sides and the sizes all read it (the
+    * q55 lesson: its 52.7 s outlier was exactly this recomputation). A
+    * narrow scan is spread first so the cache fill (the gram explode)
+    * runs at session parallelism, not one task. */
+  private def gramPostings(docs: DataFrame, n: Int): DataFrame =
+    Tables.spreadIfNarrow(docs)
+      .withColumn("toks", Text.tokens(col("text")))
+      .select(col("doc_id"),
+        explode(array_distinct(Text.ngrams(col("toks"), n))).as("gram"))
+      .cache()
+
   /** q4k: CONTAINMENT near-superset detection — the asymmetric cousin
     * of q55's symmetric Jaccard: containment(A,B) = |grams(A) ∩
     * grams(B)| / min(|grams(A)|, |grams(B)|) is high when one document
@@ -1213,21 +1265,12 @@ object Dedup {
     * dedup must catch that whole-doc Jaccard misses.
     *
     * Same scale shape as every near-dup op here: distinct n-grams per
-    * doc, candidate pairs ONLY through the shared-gram equi join
-    * (bucket-bounded, never n²), sizes joined back, threshold filter.
-    *
-    * DOCUMENT-FREQUENCY CAP (the 100 TB guard): a gram appearing in d
-    * documents fans out into d·(d−1)/2 join pairs, so ONE ubiquitous
-    * gram ("in the the", boilerplate headers) turns the bucket join
-    * quadratic on a real crawl corpus. Grams with df > `dfCap` are
-    * dropped from BOTH the pair join and the per-doc sizes before
-    * pairing — the standard stop-gram filter — which bounds every
-    * gram's fan-out at dfCap²/2 pairs. The drop list is tiny by
-    * construction (≤ total-gram-occurrences / dfCap entries), so the
-    * anti-join broadcasts. `n_capped_grams` is replicated onto every
-    * graded row so the cap's effect is part of the hash (0 on the
-    * fixture: max df is 25 at sf0.1 vs the cap of 64 — the guard is
-    * live but the fixture semantics are unchanged). */
+    * doc, candidate pairs ONLY through the df-capped shared-gram equi
+    * join ([[overlapPairs]]: bucket-bounded, never n²), threshold
+    * filter. `n_capped_grams` is replicated onto every graded row so
+    * the cap's effect is part of the hash (0 on the fixture: max df is
+    * 25 at sf0.1 vs the cap of 64 — the guard is live but the fixture
+    * semantics are unchanged). */
   def containmentPairs(spark: SparkSession, dir: String,
       n: Int = 3, threshold: Double = 0.2, dfCap: Long = 64L): DataFrame =
     containmentPairsOf(Tables.documents(spark, dir), n, threshold, dfCap)
@@ -1239,72 +1282,31 @@ object Dedup {
     * worth more than early eviction). */
   def containmentPairsOf(docs: DataFrame,
       n: Int = 3, threshold: Double = 0.2, dfCap: Long = 64L): DataFrame = {
-    // cached: consumed by the df table, both self-join sides AND the
-    // size table — the q55 lesson (its 52.7 s outlier was exactly this
-    // recomputation). Spread a narrow scan first so the cache FILL
-    // (the gram explode) runs at session parallelism, not one task.
-    val grams = graft.Tables.spreadIfNarrow(docs)
-      .withColumn("toks", Text.tokens(col("text")))
-      .select(col("doc_id"),
-        explode(array_distinct(Text.ngrams(col("toks"), n))).as("gram"))
-      .cache()
-    val capped = grams.groupBy("gram").agg(count(lit(1)).as("df"))
-      .where(col("df") > dfCap)
-      .select("gram")
-      .cache() // tiny by construction; feeds the anti-join + the audit count
-    // a driver Long, and `sizes` cached once: a crossJoined 1-row frame
-    // and two `sizes` subtrees (whose cache scans defeat exchange reuse)
-    // plan three broadcast stages, which AQE creates in whatever order
-    // their shuffles finish; that renumbers the whole-stage codegen
-    // classes, so Janino recompiles at random, long after warm-up
-    val nCapped = capped.count()
-    val kept = grams.join(broadcast(capped), Seq("gram"), "left_anti")
-    val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("n_grams")).cache()
-    val shared = kept.as("g1").join(kept.as("g2"),
-        col("g1.gram") === col("g2.gram") && col("g1.doc_id") < col("g2.doc_id"))
-      .groupBy(col("g1.doc_id").as("a"), col("g2.doc_id").as("b"))
-      .agg(count(lit(1)).as("n_shared"))
-    shared
-      .join(sizes.select(col("doc_id").as("a"), col("n_grams").as("n_grams_a")), "a")
-      .join(sizes.select(col("doc_id").as("b"), col("n_grams").as("n_grams_b")), "b")
+    val (pairs, nCapped) =
+      overlapPairs(gramPostings(docs, n), "doc_id", "gram", Some(dfCap))
+    pairs
       .withColumn("containment_raw",
-        col("n_shared").cast("double") / least(col("n_grams_a"), col("n_grams_b")))
+        col("n_shared").cast("double") / least(col("n_a"), col("n_b")))
       // threshold on the RAW ratio — the oracle filters before rounding,
       // and a ratio rounding UP across the threshold must not admit a
       // row the oracle rejects
       .where(col("containment_raw") >= threshold)
-      .select(col("a"), col("b"), col("n_shared"), col("n_grams_a"),
-        col("n_grams_b"), round(col("containment_raw"), 6).as("containment"),
+      .select(col("a"), col("b"), col("n_shared"), col("n_a").as("n_grams_a"),
+        col("n_b").as("n_grams_b"), round(col("containment_raw"), 6).as("containment"),
         lit(nCapped).as("n_capped_grams"))
       .orderBy("a", "b")
   }
 
   /** Shared-gram exact-Jaccard pair table (a, b, jacc_ppm) over the
-    * df-capped gram space — the q4k candidate machinery scored as full
-    * Jaccard in exact integer ppm. Cached: feeds q8a's 5 threshold
-    * aggregates / q8b's two rollups; tiny (|pairs with ≥1 shared
-    * gram|). */
-  private[graft] def jaccardPairs(docs: DataFrame, n: Int, dfCap: Long): DataFrame = {
-    val grams = docs
-      .withColumn("toks", Text.tokens(col("text")))
-      .select(col("doc_id"),
-        explode(array_distinct(Text.ngrams(col("toks"), n))).as("gram"))
+    * df-capped gram space — the q4k postings and [[overlapPairs]]
+    * scored as full Jaccard in exact integer ppm. Cached: feeds q8a's 5
+    * threshold aggregates / q8b's two rollups; tiny (|pairs with ≥1
+    * shared gram|). */
+  private[graft] def jaccardPairs(docs: DataFrame, n: Int, dfCap: Long): DataFrame =
+    overlapPairs(gramPostings(docs, n), "doc_id", "gram", Some(dfCap))._1
+      .select(col("a"), col("b"),
+        expr("(n_shared * 1000000) div (n_a + n_b - n_shared)").as("jacc_ppm"))
       .cache()
-    val capped = grams.groupBy("gram").agg(count(lit(1)).as("df"))
-      .where(col("df") > dfCap).select("gram")
-    val kept = grams.join(broadcast(capped), Seq("gram"), "left_anti")
-    val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-    kept.as("g1").join(kept.as("g2"),
-        col("g1.gram") === col("g2.gram") && col("g1.doc_id") < col("g2.doc_id"))
-      .groupBy(col("g1.doc_id").as("a"), col("g2.doc_id").as("b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .join(sizes.select(col("doc_id").as("a"), col("n_grams").as("n_grams_a")), "a")
-      .join(sizes.select(col("doc_id").as("b"), col("n_grams").as("n_grams_b")), "b")
-      .select(col("a"), col("b"), expr(
-        "(n_shared * 1000000) div (n_grams_a + n_grams_b - n_shared)")
-        .as("jacc_ppm"))
-      .cache()
-  }
 
   /** q8a: DEDUP RETENTION CURVE — the threshold-tuning table every
     * near-dup pipeline produces before committing to a cutoff: for a

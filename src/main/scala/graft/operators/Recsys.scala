@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * and it is bounded the q4k way — a deterministic per-user BASKET CAP
   * (keep the `cap` lowest item ids) bounds fan-out at C(cap, 2) per
   * user before any pair forms, so one crawl-everything user cannot
-  * detonate the shuffle. Item popularity is a ≤|items|-row aggregate
-  * that AQE broadcasts into the scoring join; the per-item top-k plans
+  * detonate the shuffle. Item popularity rides the pair join as its
+  * per-side sizes ([[Dedup.overlapPairs]]); the per-item top-k plans
   * as WindowGroupLimit (rank pushed into the shuffle, no full sort of
   * the pair list). Similarity is quantized to exact integers —
   * cos²·1e6 = cooc²·1e6 div (n_a·n_b) — so ranking and output replay
@@ -55,9 +55,7 @@ object Recsys {
     * neighbor id) — a total order, so row_number is deterministic. */
   def itemItemCF(spark: SparkSession, dir: String, cap: Int = 128,
       minCooc: Long = 2L, k: Int = 5): DataFrame = {
-    val capped = cappedBasket(spark, dir, cap)
-    val pop = capped.groupBy("item").agg(count(lit(1)).as("n_item"))
-    val scored = scoredNeighbors(capped, pop, minCooc)
+    val scored = scoredNeighbors(cappedBasket(spark, dir, cap), minCooc)
     scored
       .withColumn("rank", row_number().over(Window.partitionBy("item")
         .orderBy(col("cos2_ppm").desc, col("cooc").desc, col("nbr"))))
@@ -69,47 +67,27 @@ object Recsys {
 
   /** Scored symmetric neighbor candidates from capped baskets.
     *
-    * Pair generation is the u-key self-join: both sides carry the cap
-    * window's hash partitioning on u, so the join adds no exchange and
-    * each unordered pair of a basket is emitted once via item<item. The
-    * array-HOF alternative (collect_list per user + nested transform/
-    * flatten pair explosion) was measured SLOWER at sf0.1 — 16.9 s vs
-    * 7.9 s for the 13M-pair aggregate — nested struct allocation in
-    * the lambda beats no SMJ machinery; the dominant, irreducible cost
-    * is the ~C(basket,2)·|users|-row pair shuffle either way, which is
-    * exactly what the basket cap bounds at scale. */
-  private def scoredNeighbors(capped: DataFrame, pop: DataFrame,
-      minCooc: Long): DataFrame = {
-    val co = capped.as("a").join(capped.as("b"),
-        col("a.u") === col("b.u") && col("a.item") < col("b.item"))
-      .groupBy(col("a.item").as("ia"), col("b.item").as("ib"))
-      .agg(count(lit(1)).as("cooc"))
-      .where(col("cooc") >= minCooc)
-    // each unordered pair is stored once (ia < ib); both directions
-    // feed the per-item neighbor lists
-    val sym = co.select(col("ia").as("item"), col("ib").as("nbr"), col("cooc"))
-      .unionByName(co.select(col("ib").as("item"), col("ia").as("nbr"), col("cooc")))
-    sym
-      .join(pop, "item")
-      .join(pop.select(col("item").as("nbr"), col("n_item").as("n_nbr")), "nbr")
+    * Pair generation is [[Dedup.overlapPairs]] over (item, u) postings,
+    * uncapped (the basket cap bounds fan-out); its sizes are the items'
+    * popularity. Both join sides carry the cap window's hash
+    * partitioning on u, so the join adds no exchange. The array-HOF
+    * alternative (collect_list per user + nested transform/flatten pair
+    * explosion) was measured SLOWER at sf0.1 — 16.9 s vs 7.9 s for the
+    * 13M-pair aggregate — nested struct allocation in the lambda beats
+    * no SMJ machinery; the dominant, irreducible cost is the
+    * ~C(basket,2)·|users|-row pair shuffle either way, which is exactly
+    * what the basket cap bounds at scale. */
+  private def scoredNeighbors(capped: DataFrame, minCooc: Long): DataFrame = {
+    val co = Dedup.overlapPairs(capped, "item", "u", None)._1
+      .where(col("n_shared") >= minCooc)
+    // each unordered pair is stored once (a < b); both directions feed
+    // the per-item neighbor lists
+    def side(item: String, nbr: String): DataFrame = co.select(
+      col(item).as("item"), col(nbr).as("nbr"), col("n_shared").as("cooc"),
+      col(s"n_$item").as("n_item"), col(s"n_$nbr").as("n_nbr"))
+    side("a", "b").unionByName(side("b", "a"))
       .withColumn("cos2_ppm",
         expr("(cooc * cooc * 1000000) div (n_item * n_nbr)"))
-  }
-
-  /** Cross-JVM materialization key for the shared rec list: the input
-    * files' identity (size + mtime — the driver REGENERATES the fixture
-    * parquet between rounds, so path alone is stale) plus every
-    * parameter that shapes the list. A changed fixture or parameter
-    * changes the key, so a stale materialization can never be read. */
-  private def recsFingerprint(dir: String, cap: Int, minCooc: Long,
-      kNbr: Int, kRec: Int, cut: String): String = {
-    import java.nio.file.{Files, Paths}
-    val inputs = Seq("orders.parquet", "lineitem.parquet").map { f =>
-      val p = Paths.get(dir, f)
-      s"$f:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}"
-    }
-    val key = (Seq(dir, cap, minCooc, kNbr, kRec, cut) ++ inputs).mkString("|")
-    f"${scala.util.hashing.MurmurHash3.stringHash(key)}%08x"
   }
 
   /** The q7b recommendation pipeline up to the per-user top-k list —
@@ -133,7 +111,8 @@ object Recsys {
       o => o.where(col("o_orderdate") < lit(cut).cast("date")))
     val test = cappedBasket(spark, dir, cap,
       o => o.where(col("o_orderdate") >= lit(cut).cast("date")))
-    val fp = recsFingerprint(dir, cap, minCooc, kNbr, kRec, cut)
+    val fp = graft.Fs.inputFingerprint(dir,
+      Seq("orders.parquet", "lineitem.parquet"), Seq(cap, minCooc, kNbr, kRec, cut))
     // v2: carries the per-user rank so the ranking-aware eval (q7d)
     // reads positions from the SAME materialized list q7b/q7c grade
     val store = s"/tmp/graft_cf_recs_v2_$fp"
@@ -147,8 +126,7 @@ object Recsys {
       // deleted under it.
       graft.Fs.gcStale("graft_cf_recs_v1_", maxAgeMs = 0L) // pre-v2 stores: stale by schema
       graft.Fs.gcStale("graft_cf_recs_v2_")
-      val pop = train.groupBy("item").agg(count(lit(1)).as("n_item"))
-      val nbrs = scoredNeighbors(train, pop, minCooc)
+      val nbrs = scoredNeighbors(train, minCooc)
         .withColumn("rank", row_number().over(Window.partitionBy("item")
           .orderBy(col("cos2_ppm").desc, col("cooc").desc, col("nbr"))))
         .where(col("rank") <= kNbr)
@@ -171,7 +149,8 @@ object Recsys {
       // UUID temp and renamed into place atomically
       val tmp = s"$store.tmp_${java.util.UUID.randomUUID().toString.take(8)}"
       computed.write.parquet(s"$tmp/recs")
-      pop.write.parquet(s"$tmp/pop")
+      train.groupBy("item").agg(count(lit(1)).as("n_item"))
+        .write.parquet(s"$tmp/pop")
       try java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
         java.nio.file.Paths.get(store))
       catch { case _: java.nio.file.FileSystemException =>

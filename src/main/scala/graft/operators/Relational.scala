@@ -1629,7 +1629,7 @@ object Relational {
     val sorted = df.repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*)
     val schema = sorted.schema
-    val rdd = sorted.rdd.zipWithIndex.map { case (r, i) =>
+    val rdd = sorted.rdd.zipWithIndex().map { case (r, i) =>
       org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }
     df.sparkSession.createDataFrame(rdd, schema.add(out,
       org.apache.spark.sql.types.LongType, nullable = false))

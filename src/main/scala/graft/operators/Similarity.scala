@@ -163,7 +163,7 @@ object Similarity {
     }
     val ranked = model.clusterCenters.zipWithIndex
       .map { case (c, i) => i -> sqDist(qVec, c.toArray) }
-      .sortBy { case (i, d) => (d, i) }.map(_._1.toLong)
+      .sortBy { case (i, d) => (d, i) }.map(_._1.toLong).toIndexedSeq
     val query = assigned.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q"))
     val exactCached = bruteForceTopK(spark, dir, queryId, k).cache()

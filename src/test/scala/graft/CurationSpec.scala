@@ -103,6 +103,27 @@ class CurationSpec extends SparkSpec {
     assert(r.getAs[Long]("top10_share_ppm") <= 1000000L)
   }
 
+  test("cf rec store key: Fs.inputFingerprint keeps the old recsFingerprint key") {
+    // the key Recsys built by hand before it called Fs.inputFingerprint;
+    // an equal key keeps existing /tmp rec stores readable
+    def oldKey(dir: String, cap: Int, minCooc: Long, kNbr: Int, kRec: Int,
+        cut: String): String = {
+      import java.nio.file.{Files, Paths}
+      val inputs = Seq("orders.parquet", "lineitem.parquet").map { f =>
+        val p = Paths.get(dir, f)
+        s"$f:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}"
+      }
+      val key = (Seq(dir, cap, minCooc, kNbr, kRec, cut) ++ inputs).mkString("|")
+      f"${scala.util.hashing.MurmurHash3.stringHash(key)}%08x"
+    }
+    for ((cap, minCooc, kNbr, kRec, cut) <- Seq((128, 2L, 5, 10, "1997-01-01"),
+        (3, 7L, 1, 2, "1995-06-17"))) {
+      assert(Fs.inputFingerprint(sfDir, Seq("orders.parquet", "lineitem.parquet"),
+          Seq(cap, minCooc, kNbr, kRec, cut)) ==
+        oldKey(sfDir, cap, minCooc, kNbr, kRec, cut))
+    }
+  }
+
   test("weightedSample matches an independent scala replay of the hash gate") {
     val rows = Curation.weightedSample(spark, sfDir).collect()
     val docs = Tables.documents(spark, sfDir)

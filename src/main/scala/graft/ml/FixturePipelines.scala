@@ -192,10 +192,10 @@ object FixturePipelines {
       .withColumn("n_cold_dropped", lit(nTest) - col("n_scored"))
   }
 
-  /** Small grid-searched CV (R-26..R-28): 2×2×2 grid, 2 folds,
+  /** Small grid-searched CV (R-26..R-28): 2×1×2 grid, 2 folds,
     * parallelism 4 — the reference's 27×3 shape shrunk to keep verify
-    * latency sane; CvSpec runs the introspection contract. Parallelism
-    * is 4, not 8: the 8 fits share one local JVM, and 8 concurrent ALS
+    * latency sane; MlSpec runs the introspection contract. Parallelism
+    * is 4, not 8: the fits share one local JVM, and 8 concurrent ALS
     * fits oversubscribed it (alternating 48 s / 200 s bench runs —
     * round-3 verdict); 4 keeps the fan-out win without the thrash. */
   def alsCvGrid(spark: SparkSession, dir: String): DataFrame = {
@@ -277,9 +277,11 @@ object FixturePipelines {
              - (SELECT CAST(count(1) AS BIGINT) FROM sc) AS n_cold_dropped"""
 
   /** q73: the grid with its measured-stable argmin — ALS avg_rmse was
-    * bit-identical across local[4]/local[8]/local[32] (numBlocks pins
-    * the internal partitioning), so the winner (5, 10, 0.1) is a safe
-    * literal where the KMeans argmin was not. */
+    * bit-identical across local[4]/local[8]/local[32]: the fold fits'
+    * block count, which pins ALS's internal partitioning, is a function
+    * of the fold size (`Recommend.foldBlocks`), not of the host, so the
+    * winner (5, 10, 0.1) is a safe literal where the KMeans argmin was
+    * not. */
   def alsCvGridOracle: String = """
     SELECT t."rank", t."maxIter", t."regParam", t.is_best, t.avg_rmse_in_band
     FROM (VALUES

@@ -2,9 +2,13 @@ package graft.ml
 
 import graft.eval.Metrics
 import org.apache.spark.ml.evaluation.RegressionEvaluator
+import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
-import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel, ParamGridBuilder}
+import org.apache.spark.ml.tuning.ParamGridBuilder
+import org.apache.spark.mllib.util.MLUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** ALS collaborative filtering + grid-searched cross-validation
   * (reference: MovieLensRecommender.py:203-238).
@@ -12,16 +16,42 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Same estimator semantics — explicit feedback, seed 823,
   * coldStartStrategy="drop" (unseen user OR item rows removed before
   * scoring, R-25) — but the CV fits each fold's grid points
-  * `setParallelism(...)` at a time over cached fold inputs instead of
-  * the reference's 81 serial refits of an uncached scan, which is where
+  * `parallelism` at a time over cached fold inputs instead of the
+  * reference's 81 serial refits of an uncached scan, which is where
   * its 2.3 h went (SURVEY §3.3). */
 object Recommend {
+
+  /** The CV's outcome: the grid points and their average metric over
+    * the folds, index for index — the two members of Spark's
+    * `CrossValidatorModel` that callers read, without its refit model. */
+  final case class CvResult(getEstimatorParamMaps: Array[ParamMap],
+      avgMetrics: Array[Double])
+
+  /** Training-fold ratings per ALS user/item block in a CV fit. At the
+    * perfbench `paper_pipeline` shape (~93k ratings per fold fit, 4
+    * cores) 8 × 8 blocks spent as much time on per-block and per-task
+    * overhead (size estimation of cached blocks, task and shuffle
+    * serde, block building) as on the ALS math: 2 blocks cut
+    * `ml.als_cv` self time by ~2.7 s of ~10 s, 1 block measured the same
+    * as 2, and 4 fell between 2 and 8 (6 runs each). */
+  val RatingsPerBlock = 100000L
+
+  /** Block count of a CV fit over `foldRatings` training ratings:
+    * ceil(foldRatings / RatingsPerBlock) clamped to 1..8. A function of
+    * the input alone, never of the core count, so CV metrics stay
+    * bit-identical across hosts; fits above 700k ratings keep 8. */
+  private[graft] def foldBlocks(foldRatings: Long): Int =
+    math.min(8L, math.max(1L,
+      (foldRatings + RatingsPerBlock - 1) / RatingsPerBlock)).toInt
 
   /** R-24: one seeded ALS fit. `numBlocks` sizes the user/item block
     * grid: ~1 block per few hundred k ratings measured fastest locally
     * (8 blocks beat the default 10 and was 7× faster than 32 on 600k
     * ratings — too many blocks means tiny-task scheduling overhead); on
-    * a real cluster scale it with executor count. */
+    * a real cluster scale it with executor count. The refit keeps 8
+    * rather than `foldBlocks`: sizing it would cost one more count job,
+    * and refit time measured flat at 2, 4 and 8 blocks (1.54, 1.63,
+    * 1.68 s at the perfbench shape). */
   def fitAls(train: DataFrame, rank: Int = 10, maxIter: Int = 10,
       regParam: Double = 0.05, seed: Long = 823, numBlocks: Int = 8,
       userCol: String = "userId", itemCol: String = "movieId",
@@ -37,22 +67,32 @@ object Recommend {
     * MovieLensRecommender.py:211-221) under k-fold CV. Grid values are
     * parameters so tests can shrink the 27-point grid.
     *
-    * Spark's `CrossValidator` runs the folds one after another: within
-    * a fold up to `parallelism` grid points fit concurrently, and only
-    * after the last fold does it refit the best point on the whole
-    * input (at the perfbench grid, 2 points × 2 folds: two waves of 2
-    * fits, then the refit). */
+    * Spark's `CrossValidator` arithmetic without its final refit of the
+    * best point on the whole input, which no caller reads: the folds are
+    * `MLUtils.kFold(cached.rdd, numFolds, seed)`, as `CrossValidator`
+    * draws them; within a fold up to `parallelism` grid points fit
+    * concurrently over the cached fold frames and are scored by one
+    * RMSE evaluator; each point's metrics are summed in fold order and
+    * divided by `numFolds`. Every fit uses `foldBlocks` of the expected
+    * training-fold size. */
   def gridSearchCV(train: DataFrame,
       ranks: Seq[Int] = Seq(1, 10, 100),
       maxIters: Seq[Int] = Seq(5, 10, 15),
       regParams: Seq[Double] = Seq(0.001, 0.01, 0.05),
       numFolds: Int = 3, parallelism: Int = 4, seed: Long = 823,
-      numBlocks: Int = 8,
       userCol: String = "userId", itemCol: String = "movieId",
-      ratingCol: String = "rating"): CrossValidatorModel = {
+      ratingCol: String = "rating"): CvResult = {
+    require(numFolds >= 2, s"numFolds must be at least 2, got $numFolds")
+    // materialize the cache BEFORE a fold's concurrent fits fan out:
+    // `parallelism` concurrent fits racing an unmaterialized cache
+    // duplicate the scan under storage locks (observed as 60s-vs-250s
+    // bench variance on this query)
+    val cached = train.cache()
+    val n = cached.count()
+    val blocks = foldBlocks(n * (numFolds - 1) / numFolds)
     val als = new ALS()
       .setUserCol(userCol).setItemCol(itemCol).setRatingCol(ratingCol)
-      .setNumUserBlocks(numBlocks).setNumItemBlocks(numBlocks)
+      .setNumUserBlocks(blocks).setNumItemBlocks(blocks)
       .setSeed(seed).setImplicitPrefs(false).setColdStartStrategy("drop")
     val grid = new ParamGridBuilder()
       .addGrid(als.rank, ranks)
@@ -61,36 +101,37 @@ object Recommend {
       .build()
     val evaluator = new RegressionEvaluator()
       .setMetricName("rmse").setLabelCol(ratingCol).setPredictionCol("prediction")
-    // materialize the cache BEFORE a fold's concurrent fits fan out:
-    // `parallelism` concurrent fits racing an unmaterialized cache
-    // duplicate the scan under storage locks (observed as 60s-vs-250s
-    // bench variance on this query)
-    val cached = train.cache()
-    cached.count()
-    // the concurrent fits share one JVM here: each ALS iteration is
-    // numBlocks-partitioned internally, but every evaluation/split
+    val spark = cached.sparkSession
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism,
+      (r: Runnable) => { val t = new Thread(r); t.setDaemon(true); t })
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    // the concurrent fits share one JVM here: every evaluation/split
     // shuffle takes spark.sql.shuffle.partitions tasks — at the 32-task
     // session default, `parallelism` concurrent fits schedule hundreds
     // of mostly-empty tasks per stage, which is where the observed
     // 4× run-to-run bench variance lived. 16 keeps each fit parallel
     // while halving the churn; on a real cluster the fits spread across
     // executors and the session default applies.
-    graft.SessionConf.withShufflePartitions(cached.sparkSession, 16) {
-      new CrossValidator()
-        .setEstimator(als)
-        .setEstimatorParamMaps(grid)
-        .setEvaluator(evaluator)
-        .setNumFolds(numFolds)
-        .setParallelism(parallelism)
-        .setSeed(seed)
-        .fit(cached)
-    }
+    val foldMetrics =
+      try graft.SessionConf.withShufflePartitions(spark, 16) {
+        MLUtils.kFold(cached.rdd, numFolds, seed).map { case (tr, va) =>
+          val fold = spark.createDataFrame(tr, cached.schema).cache()
+          val heldOut = spark.createDataFrame(va, cached.schema).cache()
+          try {
+            val fits = grid.map { pm =>
+              Future(evaluator.evaluate(als.fit(fold, pm).transform(heldOut)))
+            }
+            fits.map(Await.result(_, Duration.Inf))
+          } finally { fold.unpersist(); heldOut.unpersist() }
+        }
+      } finally pool.shutdown()
+    CvResult(grid, foldMetrics.transpose.map(_.sum / numFolds))
   }
 
   /** R-28: CV introspection — the (rank, maxIter, regParam, avgRmse)
     * results table the reference assembles in pandas
     * (MovieLensRecommender.py:40-44), produced natively. */
-  def cvResults(spark: SparkSession, cv: CrossValidatorModel): DataFrame = {
+  def cvResults(spark: SparkSession, cv: CvResult): DataFrame = {
     import spark.implicits._
     cv.getEstimatorParamMaps.zip(cv.avgMetrics).map { case (pm, m) =>
       val get = (n: String) => pm.toSeq.find(_.param.name == n).map(_.value)

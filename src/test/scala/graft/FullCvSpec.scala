@@ -9,10 +9,11 @@ import graft.ml.{FixturePipelines, Recommend}
   * at sf0.01, twice, asserting the best-params argmin is stable across
   * runs. This is the proof the engine survives the reference's real
   * tuning workload (81 parallel fits, shared cached folds) without
-  * OOM/contention; the 8-fit grid in q73_als_cv_grid is the deliberate
-  * bench-latency variant of this same code path.
+  * OOM/contention; the 4-point × 2-fold grid in q73_als_cv_grid (8
+  * fits) is the deliberate bench-latency variant of this same code
+  * path.
   *
-  * Gated behind GRAFT_FULL_CV=1 (≈10 min of ALS fits) so the regular
+  * Gated behind GRAFT_FULL_CV=1 (≈3 min of ALS fits on 4 cores) so the regular
   * suite stays fast: run with
   *   GRAFT_FULL_CV=1 sbt "testOnly graft.FullCvSpec"
   */

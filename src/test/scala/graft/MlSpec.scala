@@ -159,6 +159,57 @@ class MlSpec extends SparkSpec {
     assert(res.map(_.getAs[Int]("rank")).toSet == Set(2, 4))
   }
 
+  test("gridSearchCV equals CrossValidator at the rule's block count: same grid points and avgMetrics") {
+    import org.apache.spark.ml.evaluation.RegressionEvaluator
+    import org.apache.spark.ml.recommendation.ALS
+    import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
+    val (ranks, iters, regs) = (Seq(2, 4), Seq(3, 5), Seq(0.05, 0.1))
+    val ours = Recommend.gridSearchCV(ratings, ranks, iters, regs,
+      numFolds = 2, parallelism = 2)
+    val blocks = Recommend.foldBlocks(ratings.count() / 2)
+    val als = new ALS().setUserCol("userId").setItemCol("movieId").setRatingCol("rating")
+      .setNumUserBlocks(blocks).setNumItemBlocks(blocks)
+      .setSeed(823).setImplicitPrefs(false).setColdStartStrategy("drop")
+    val grid = new ParamGridBuilder().addGrid(als.rank, ranks)
+      .addGrid(als.maxIter, iters).addGrid(als.regParam, regs).build()
+    val twin = SessionConf.withShufflePartitions(spark, 16) {
+      new CrossValidator().setEstimator(als).setEstimatorParamMaps(grid)
+        .setEvaluator(new RegressionEvaluator().setMetricName("rmse")
+          .setLabelCol("rating").setPredictionCol("prediction"))
+        .setNumFolds(2).setParallelism(2).setSeed(823).fit(ratings)
+    }
+    // ParamGridBuilder orders points by the Params' hash codes, which
+    // carry the estimator's random uid, so the two grids are matched by
+    // their (name -> value) maps
+    def byPoint(pms: Array[org.apache.spark.ml.param.ParamMap], ms: Array[Double]) =
+      pms.map(_.toSeq.map(p => p.param.name -> p.value).toMap).zip(ms).toMap
+    val a = byPoint(ours.getEstimatorParamMaps, ours.avgMetrics)
+    val b = byPoint(twin.getEstimatorParamMaps, twin.avgMetrics)
+    assert(a.size == 8 && a.keySet == b.keySet)
+    a.foreach { case (pt, m) =>
+      assert(!m.isNaN && math.abs(m - b(pt)) <= 1e-12, s"$pt: $m vs CrossValidator's ${b(pt)}")
+    }
+  }
+
+  test("fold block count: ceil(fold size / RatingsPerBlock) clamped to 1..8") {
+    assert(Recommend.foldBlocks(0L) == 1)
+    assert(Recommend.foldBlocks(100000L) == 1)
+    assert(Recommend.foldBlocks(100001L) == 2)
+    assert(Recommend.foldBlocks(700001L) == 8)
+    assert(Recommend.foldBlocks(10000000L) == 8)
+  }
+
+  test("job budget: a 2-point, 2-fold gridSearchCV runs no refit") {
+    val jobs = jobsOf {
+      Recommend.gridSearchCV(ratings, ranks = Seq(2, 4), maxIters = Seq(3),
+        regParams = Seq(0.1), numFolds = 2, parallelism = 2)
+    }
+    // measured 50–51 jobs (the count moves by one from run to run, as
+    // it does with CrossValidator's refit, which measured 55–56)
+    info(s"$jobs Spark jobs")
+    assert(jobs <= 52, s"$jobs Spark jobs, budget 52")
+  }
+
   test("qualityClassifier: label counts replay exactly and the AUC contract holds (q4w)") {
     val row = graft.ml.QualityFilter.qualityClassifier(spark, sfDir).head()
     // driver-side integer replay of the weak label over the fixture

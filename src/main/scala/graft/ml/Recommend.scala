@@ -33,13 +33,27 @@ object Recommend {
     * overhead (size estimation of cached blocks, task and shuffle
     * serde, block building) as on the ALS math: 2 blocks cut
     * `ml.als_cv` self time by ~2.7 s of ~10 s, 1 block measured the same
-    * as 2, and 4 fell between 2 and 8 (6 runs each). */
-  val RatingsPerBlock = 100000L
+    * as 2, and 4 fell between 2 and 8 (6 runs each). Where the rule
+    * moves off 1 block, a 3-fold CV of a 2-point grid (rank 10,
+    * maxIter 10, regParam 0.05/0.1) on the golden corpus's 0.7 train
+    * split, seconds per CV, warm runs:
+    *  - ~467k per fold fit (the reference shape), 5 blocks vs 8:
+    *    local[4] 10.4–10.6 vs 13.1–15.0, local[1] 23.0–24.1 vs
+    *    32.1–32.2; 2 blocks took 8.5–9.0 at local[4];
+    *  - ~201k per fold fit, 3 blocks vs 8: local[4] 5.3–5.7 vs 9.1–10.3,
+    *    local[1] 14.0–16.4 vs 28.8–28.9.
+    * Per-point CV RMSE moved by at most 0.0021 with the block count (ALS
+    * seeds its initial factors per block) and the argmin did not move.
+    * Fewer blocks were faster at every measured size, so this constant
+    * is on the side of more blocks than this host needs. */
+  private val RatingsPerBlock = 100000L
 
   /** Block count of a CV fit over `foldRatings` training ratings:
     * ceil(foldRatings / RatingsPerBlock) clamped to 1..8. A function of
     * the input alone, never of the core count, so CV metrics stay
-    * bit-identical across hosts; fits above 700k ratings keep 8. */
+    * bit-identical across hosts. The reference shape (~1M ratings, a
+    * 0.7 train split, 3 folds: ~467k per fold fit) gets 5 blocks; only
+    * fold fits above 700k ratings get 8. */
   private[graft] def foldBlocks(foldRatings: Long): Int =
     math.min(8L, math.max(1L,
       (foldRatings + RatingsPerBlock - 1) / RatingsPerBlock)).toInt

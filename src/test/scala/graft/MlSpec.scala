@@ -195,6 +195,7 @@ class MlSpec extends SparkSpec {
     assert(Recommend.foldBlocks(0L) == 1)
     assert(Recommend.foldBlocks(100000L) == 1)
     assert(Recommend.foldBlocks(100001L) == 2)
+    assert(Recommend.foldBlocks(466730L) == 5) // the reference shape's fold fit
     assert(Recommend.foldBlocks(700001L) == 8)
     assert(Recommend.foldBlocks(10000000L) == 8)
   }

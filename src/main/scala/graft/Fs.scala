@@ -1,7 +1,11 @@
 package graft
 
 /** Local-filesystem helpers for the staging/sink directories the
-  * streaming replays and warehouse round-trips use under /tmp. */
+  * streaming replays and warehouse round-trips use under /tmp, and the
+  * one cross-JVM result store ([[materialized]]) behind the qaj models
+  * (`ModelStore`), the qap/qcz ANN indexes (`AnnIndex`), the q7b–q7d
+  * rec lists (`Recsys`) and the q57/q59/q8d component labels
+  * (`Dedup`). */
 object Fs {
 
   /** Per-JVM scratch path: stable within a JVM (sinks are written then
@@ -21,31 +25,33 @@ object Fs {
   def scratch(name: String): String = s"/tmp/${name}_$jvmTag"
 
   /** Age-gated /tmp garbage collection for the cross-JVM staging and
-    * store directories (replay stagings, the q3y late split, the q7
-    * rec-list store): every fixture regeneration or fresh JVM mints a
-    * new UUID/fingerprint path and would otherwise strand the previous
-    * one forever. The 12 h gate is deliberately wider than a full
-    * round's ~6 h wall clock, so nothing a LIVE session (even a
-    * long-lived one, or a concurrent session on another fixture) still
-    * references can be deleted under it — only prior rounds' leftovers.
-    * Checks the DIRECTORY mtime (creation-time fresh), not the staged
-    * files' mtimes, which replay stagers deliberately backdate. */
-  def gcStale(prefix: String, maxAgeMs: Long = 12L * 3600 * 1000): Unit = {
-    val cutoff = System.currentTimeMillis() - maxAgeMs
+    * store directories: the replay and q3y late-split stagings
+    * (`Events`) and, through [[materialized]], each store's
+    * version-free stem `graft_<name>_v`, which also reaps stores of
+    * older versions and the `.tmp_` dirs of JVMs killed mid-build.
+    * Every fixture regeneration or fresh JVM mints a new
+    * UUID/fingerprint path and would otherwise strand the previous one
+    * forever. The 12 h gate is deliberately wider than a full
+    * bench-and-verify run's ~6 h wall clock, so nothing a LIVE session
+    * (even a long-lived one, or a concurrent session on another
+    * fixture) still references can be deleted under it — only earlier
+    * runs' leftovers. Checks the DIRECTORY mtime (creation-time fresh),
+    * not the staged files' mtimes, which replay stagers deliberately
+    * backdate. */
+  def gcStale(prefix: String): Unit = {
+    val cutoff = System.currentTimeMillis() - 12L * 3600 * 1000
     Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith(prefix) && f.lastModified() < cutoff)
       .foreach(f => try deleteRecursively(f.getPath)
         catch { case _: java.io.IOException => () })
   }
 
-  /** Input-file identity + parameters → 8-hex store key (the q7c
-    * materialization doctrine, shared by the rec-list store, the
-    * ModelStore and the component store): size + mtime of each input
-    * file — the driver REGENERATES fixtures between rounds, so a path
-    * alone is stale — plus every parameter that shapes the artifact. A
-    * changed fixture or parameter changes the key, so a stale
-    * materialization can never be read. */
-  def inputFingerprint(dir: String, files: Seq[String],
+  /** Input-file identity + parameters → 8-hex store key of
+    * [[materialized]]: size + mtime of each input file — a fixture can
+    * be regenerated in place, so a path alone is stale — plus every
+    * parameter that shapes the artifact. A changed fixture or parameter
+    * changes the key, so a stale materialization can never be read. */
+  private[graft] def inputFingerprint(dir: String, files: Seq[String],
       params: Seq[Any]): String = {
     import java.nio.file.{Files, Paths}
     val inputs = files.map { f =>
@@ -54,6 +60,36 @@ object Fs {
     }
     val key = (Seq(dir) ++ params ++ inputs).mkString("|")
     f"${scala.util.hashing.MurmurHash3.stringHash(key)}%08x"
+  }
+
+  /** A result materialized once for every JVM on this host: the store
+    * `/tmp/graft_<name>_v<version>_<inputFingerprint(dir, files,
+    * params)>`. An existing store is returned at once. Otherwise the
+    * stem `graft_<name>_v` is GC'd ([[gcStale]]; the `v` keeps the
+    * `ann_ivf` stem off the `ann_ivf_compact` stores), `build` writes the
+    * result into a fresh temp dir (which it creates), and the temp is
+    * renamed into place atomically, so a reader never sees a partial
+    * store. A build that throws leaves no temp behind. When two JVMs
+    * race one key, the loser's rename fails: it deletes its temp and
+    * returns the winner's store. Bump `version` when the build's code
+    * or layout changes; the stem GC reaps the older versions. */
+  private[graft] def materialized(name: String, version: Int, dir: String,
+      files: Seq[String], params: Seq[Any])(build: String => Unit): String = {
+    import java.nio.file.{Files, Paths}
+    val stem = s"graft_${name}_v"
+    val store = s"/tmp/$stem${version}_${inputFingerprint(dir, files, params)}"
+    if (Files.exists(Paths.get(store))) return store
+    gcStale(stem)
+    val tmp = s"$store.tmp_${java.util.UUID.randomUUID().toString.take(8)}"
+    def discardTmp(): Unit =
+      try deleteRecursively(tmp) catch { case _: java.io.IOException => () }
+    try build(tmp) catch { case e: Throwable => discardTmp(); throw e }
+    try Files.move(Paths.get(tmp), Paths.get(store))
+    catch { case e: java.io.IOException =>
+      discardTmp()
+      if (!Files.exists(Paths.get(store))) throw e // not a lost race
+    }
+    store
   }
 
   /** Filesystem-correct data-file listing for a table directory: goes

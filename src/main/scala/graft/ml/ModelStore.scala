@@ -16,12 +16,10 @@ import org.apache.spark.sql.functions._
   * serving invocation `MLReader.load`s the persisted factors instead of
   * paying the fit again (~6 s of every qa9 run was refit cost).
   *
-  * Same doctrine as the q7c materialized rec list: a fingerprint-keyed
-  * store under /tmp, keyed on the INPUT FILES' identity (size + mtime —
-  * the driver regenerates fixtures between rounds, so path alone is
-  * stale) plus every hyperparameter, written to a UUID temp dir and
-  * atomically renamed so concurrent JVMs race safely (the loser deletes
-  * its temp and reads the winner's). At 100 TB this is exactly a model
+  * The models live in a [[graft.Fs.materialized]] store, keyed on the
+  * INPUT FILES' identity (size + mtime — a fixture can be regenerated
+  * in place, so path alone is stale) plus every hyperparameter;
+  * concurrent JVMs race it safely. At 100 TB this is exactly a model
   * registry entry: the store path is the artifact, the fingerprint is
   * its data/param lineage.
   *
@@ -52,10 +50,6 @@ object ModelStore {
     model.clusterCenters.map(v =>
       java.util.Arrays.hashCode(v.toArray).toLong).sum
 
-  // the version tags the fitting code: a store fitted by older code is
-  // never served, and the version-free stem lets gcStale reap it
-  private val StoreStem = "graft_ml_models_"
-  private val StorePrefix = s"${StoreStem}v2_"
   val AlsRank = 10
   val KmeansK = 3
 
@@ -66,20 +60,18 @@ object ModelStore {
     *   <store>/als/       ALSModel.write   (q72's seeded fit)
     *   <store>/kmeans/    KMeansModel.write (q71's featurization, fixed k)
     *   <store>/checksums.json
-    */
-  def ensure(spark: SparkSession, dir: String): String = {
+    *
+    * The version tags the fitting code: a store fitted by older code is
+    * never served. */
+  def ensure(spark: SparkSession, dir: String): String =
     // lineitem feeds ALS, part feeds the KMeans features
-    val fp = graft.Fs.inputFingerprint(dir,
-      Seq("lineitem.parquet", "part.parquet"), Seq(AlsRank, KmeansK, 823))
-    val store = s"/tmp/$StorePrefix$fp"
-    if (!Files.exists(Paths.get(store))) {
-      graft.Fs.gcStale(StoreStem)
+    graft.Fs.materialized("ml_models", 2, dir,
+        Seq("lineitem.parquet", "part.parquet"), Seq(AlsRank, KmeansK, 823)) { tmp =>
       val (train, _) = FixturePipelines.hashTrainTest(spark, dir)
       val cached = train.cache()
       val als = Recommend.fitAls(cached, rank = AlsRank)
       val (movies, _) = FixturePipelines.featurizedMovies(spark, dir)
       val km = Clustering.fit(movies.cache(), KmeansK)
-      val tmp = s"$store.tmp_${java.util.UUID.randomUUID().toString.take(8)}"
       als.write.save(s"$tmp/als")
       km.write.save(s"$tmp/kmeans")
       writeChecksums(s"$tmp/checksums.json", Seq(
@@ -87,13 +79,7 @@ object ModelStore {
         "als_item" -> factorChecksum(als.itemFactors),
         "kmeans" -> centersChecksum(km)))
       cached.unpersist()
-      try Files.move(Paths.get(tmp), Paths.get(store))
-      catch { case _: java.nio.file.FileSystemException =>
-        graft.Fs.deleteRecursively(tmp) // another JVM won the race
-      }
     }
-    store
-  }
 
   def loadAls(spark: SparkSession, dir: String): ALSModel =
     ALSModel.load(s"${ensure(spark, dir)}/als")

@@ -4,7 +4,6 @@ import graft.eval.Metrics
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
-import org.apache.spark.ml.tuning.ParamGridBuilder
 import org.apache.spark.mllib.util.MLUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -88,7 +87,8 @@ object Recommend {
     * concurrently over the cached fold frames and are scored by one
     * RMSE evaluator; each point's metrics are summed in fold order and
     * divided by `numFolds`. Every fit uses `foldBlocks` of the expected
-    * training-fold size. */
+    * training-fold size. The grid points come in nested (rank, maxIter,
+    * regParam) order. */
   def gridSearchCV(train: DataFrame,
       ranks: Seq[Int] = Seq(1, 10, 100),
       maxIters: Seq[Int] = Seq(5, 10, 15),
@@ -108,11 +108,11 @@ object Recommend {
       .setUserCol(userCol).setItemCol(itemCol).setRatingCol(ratingCol)
       .setNumUserBlocks(blocks).setNumItemBlocks(blocks)
       .setSeed(seed).setImplicitPrefs(false).setColdStartStrategy("drop")
-    val grid = new ParamGridBuilder()
-      .addGrid(als.rank, ranks)
-      .addGrid(als.maxIter, maxIters)
-      .addGrid(als.regParam, regParams)
-      .build()
+    // nested (rank, maxIter, regParam) order, the same on every call:
+    // `ParamGridBuilder` orders its points by the Params' uid-bearing
+    // hash codes, which would make a tied argmin unreproducible
+    val grid = (for (r <- ranks; it <- maxIters; reg <- regParams)
+      yield ParamMap(als.rank -> r, als.maxIter -> it, als.regParam -> reg)).toArray
     val evaluator = new RegressionEvaluator()
       .setMetricName("rmse").setLabelCol(ratingCol).setPredictionCol("prediction")
     val spark = cached.sparkSession
@@ -144,7 +144,8 @@ object Recommend {
 
   /** R-28: CV introspection — the (rank, maxIter, regParam, avgRmse)
     * results table the reference assembles in pandas
-    * (MovieLensRecommender.py:40-44), produced natively. */
+    * (MovieLensRecommender.py:40-44), produced natively, best first;
+    * exact ties go to the smaller (rank, maxIter, regParam). */
   def cvResults(spark: SparkSession, cv: CvResult): DataFrame = {
     import spark.implicits._
     cv.getEstimatorParamMaps.zip(cv.avgMetrics).map { case (pm, m) =>
@@ -154,7 +155,7 @@ object Recommend {
         get("regParam").map(_.asInstanceOf[Double]).getOrElse(-1.0),
         m)
     }.toSeq.toDF("rank", "maxIter", "regParam", "avg_rmse")
-      .orderBy("avg_rmse")
+      .orderBy("avg_rmse", "rank", "maxIter", "regParam")
   }
 
   /** R-25 + R-19: score an eval split with cold-start rows dropped and

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
-
 import graft.Tables
 import graft.functions.VectorFunctions
 import graft.ml.ModelStore
@@ -15,9 +13,9 @@ import org.apache.spark.sql.functions._
   * a production similarity service builds the index in a batch job
   * (coarse quantizer fit + full assignment pass), persists it, and
   * every query path LOADS it — refitting per query is exactly the cost
-  * qa9 used to pay for ALS. The store (q7c/ModelStore doctrine:
-  * fingerprint-keyed, UUID temp + atomic rename, stale-store GC) holds
-  * the two halves a real IVF index ships:
+  * qa9 used to pay for ALS. The store (a [[graft.Fs.materialized]]
+  * store, like ModelStore's) holds the two halves a real IVF index
+  * ships:
   *
   *   <store>/quantizer/  the seeded KMeans coarse quantizer (MLWriter)
   *   <store>/lists/      the inverted lists — (vec_id, label,
@@ -39,7 +37,6 @@ import org.apache.spark.sql.functions._
   * persisted lists lost or duplicated vectors. */
 object AnnIndex {
 
-  private val StorePrefix = "graft_ann_ivf_v1_"
   val NLists = 4
   val Seed = 823L
 
@@ -51,12 +48,9 @@ object AnnIndex {
 
   /** Ensure the fingerprint-keyed index exists (fit + assign + save on
     * miss), return its path. */
-  def ensure(spark: SparkSession, dir: String): String = {
-    val fp = graft.Fs.inputFingerprint(dir,
-      Seq("embeddings.parquet"), Seq(NLists, Seed))
-    val store = s"/tmp/$StorePrefix$fp"
-    if (!Files.exists(Paths.get(store))) {
-      graft.Fs.gcStale(StorePrefix)
+  def ensure(spark: SparkSession, dir: String): String =
+    graft.Fs.materialized("ann_ivf", 1, dir,
+        Seq("embeddings.parquet"), Seq(NLists, Seed)) { tmp =>
       val emb = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("label"), col("embedding"),
           array_to_vector(col("embedding").cast("array<double>"))
@@ -68,19 +62,12 @@ object AnnIndex {
       val assigned = model.transform(emb)
         .select(col("vec_id"), col("label"), col("embedding"),
           col("cent_id"))
-      val tmp = s"$store.tmp_${java.util.UUID.randomUUID().toString.take(8)}"
       model.write.save(s"$tmp/quantizer")
       assigned.write.partitionBy("cent_id").parquet(s"$tmp/lists")
       ModelStore.writeChecksums(s"$tmp/meta.json", Seq(
         "assign" -> assignChecksum(assigned),
         "centers" -> ModelStore.centersChecksum(model)))
-      try Files.move(Paths.get(tmp), Paths.get(store))
-      catch { case _: java.nio.file.FileSystemException =>
-        graft.Fs.deleteRecursively(tmp) // another JVM won the race
-      }
     }
-    store
-  }
 
   private def storedChecksums(store: String): Map[String, Long] =
     ModelStore.readChecksums(s"$store/meta.json")
@@ -225,8 +212,6 @@ object AnnIndex {
            true AS twin_is_top1
     FROM t"""
 
-  private val CompactPrefix = "graft_ann_ivf_compact_v1_"
-
   /** qcz: OFFLINE COMPACTION of the LSM index — the merge qar's
     * scaladoc promises ("delta segments, merged offline") made real
     * and graded: base segment ∪ delta segment are rewritten into a
@@ -265,12 +250,8 @@ object AnnIndex {
         .select(col("vec_id"), col("label"), col("embedding"),
           col("cent_id"))
     }
-    val fp = graft.Fs.inputFingerprint(dir,
-      Seq("embeddings.parquet"), Seq(NLists, Seed, nNew, idOffset))
-    val store = s"/tmp/$CompactPrefix$fp"
-    if (!Files.exists(Paths.get(store))) {
-      graft.Fs.gcStale(CompactPrefix)
-      val tmp = s"$store.tmp_${java.util.UUID.randomUUID().toString.take(8)}"
+    val store = graft.Fs.materialized("ann_ivf_compact", 1, dir,
+        Seq("embeddings.parquet"), Seq(NLists, Seed, nNew, idOffset)) { tmp =>
       spark.read.parquet(s"$baseStore/lists").unionByName(mkDelta())
         .repartition(col("cent_id"))
         .write.partitionBy("cent_id").parquet(s"$tmp/lists")
@@ -281,10 +262,6 @@ object AnnIndex {
       ModelStore.writeChecksums(s"$tmp/meta.json", Seq(
         "assign" -> assignChecksum(spark.read.parquet(s"$tmp/lists")),
         "centers" -> ModelStore.centersChecksum(model)))
-      try Files.move(Paths.get(tmp), Paths.get(store))
-      catch { case _: java.nio.file.FileSystemException =>
-        graft.Fs.deleteRecursively(tmp) // another JVM won the race
-      }
     }
     // serve strictly from the LOADED compacted generation
     val loadedModel = KMeansModel.load(s"$store/quantizer")

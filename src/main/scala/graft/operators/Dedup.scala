@@ -950,8 +950,6 @@ object Dedup {
       numPartitions = numPartitions)
   }
 
-  private val CcStorePrefix = "graft_dup_cc_v1_"
-
   /** The DEFAULT-graph labeling (minCosine=0.25, nBits=8) is consumed
     * by THREE graded queries — q57 components, q59 canonical pick, q8d
     * size histogram — that sit in different bench cache groups, so each
@@ -959,27 +957,17 @@ object Dedup {
     * identical answer (~5-7 s each). The labeling is deterministic
     * (min-id representative — partitioning-independent) and exact longs,
     * so it round-trips parquet value-identically: materialize it ONCE
-    * under a fingerprint-keyed store (the q7c/ModelStore doctrine) and
-    * let every consumer read it. Non-default parameters (spec overrides,
-    * the skew spec's explicit partitioning) always compute live. */
+    * in a [[graft.Fs.materialized]] store and let every consumer read
+    * it. Non-default parameters (spec overrides, the skew spec's
+    * explicit partitioning) always compute live. */
   private def componentLabelsShared(spark: SparkSession, dir: String,
       minCosine: Double, nBits: Int,
       numPartitions: Option[Int]): DataFrame = {
     if (minCosine != 0.25 || nBits != 8 || numPartitions.nonEmpty)
       return componentLabels(spark, dir, minCosine, nBits, numPartitions)
-    import java.nio.file.{Files, Paths}
-    val fp = graft.Fs.inputFingerprint(dir,
-      Seq("embeddings.parquet"), Seq(minCosine, nBits))
-    val store = s"/tmp/$CcStorePrefix$fp"
-    if (!Files.exists(Paths.get(store))) {
-      graft.Fs.gcStale(CcStorePrefix)
-      val labels = componentLabels(spark, dir, minCosine, nBits, None)
-      val tmp = s"$store.tmp_${java.util.UUID.randomUUID().toString.take(8)}"
-      labels.write.parquet(tmp)
-      try Files.move(Paths.get(tmp), Paths.get(store))
-      catch { case _: java.nio.file.FileSystemException =>
-        graft.Fs.deleteRecursively(tmp) // another JVM won the race
-      }
+    val store = graft.Fs.materialized("dup_cc", 1, dir,
+        Seq("embeddings.parquet"), Seq(minCosine, nBits)) { tmp =>
+      componentLabels(spark, dir, minCosine, nBits, None).write.parquet(tmp)
     }
     spark.read.parquet(store)
   }

@@ -99,11 +99,10 @@ object Recsys {
     * deduplicated q7b/q7c within one JVM, but a standalone q7c run paid
     * the full pair pipeline again (8.0 s cold vs 1.4 warm). The list is
     * exact integers with a deterministic total order, so the parquet
-    * round-trip is value-identical to recomputation; writes go to a
-    * UUID temp dir with an atomic rename (concurrent JVMs race safely —
-    * the loser deletes its temp and reads the winner's). This is the
-    * same doctrine as a warehouse materialized view at 100 TB: the
-    * family's cost is additive, not multiplicative. */
+    * round-trip is value-identical to recomputation, and the
+    * [[graft.Fs.materialized]] store lets concurrent JVMs race safely.
+    * This is the same doctrine as a warehouse materialized view at
+    * 100 TB: the family's cost is additive, not multiplicative. */
   private def cfRecsPipeline(spark: SparkSession, dir: String, cap: Int,
       minCooc: Long, kNbr: Int, kRec: Int, cut: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
@@ -111,21 +110,11 @@ object Recsys {
       o => o.where(col("o_orderdate") < lit(cut).cast("date")))
     val test = cappedBasket(spark, dir, cap,
       o => o.where(col("o_orderdate") >= lit(cut).cast("date")))
-    val fp = graft.Fs.inputFingerprint(dir,
-      Seq("orders.parquet", "lineitem.parquet"), Seq(cap, minCooc, kNbr, kRec, cut))
     // v2: carries the per-user rank so the ranking-aware eval (q7d)
     // reads positions from the SAME materialized list q7b/q7c grade
-    val store = s"/tmp/graft_cf_recs_v2_$fp"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(store))) {
-      // GC stale stores before building a new one: every fixture
-      // regeneration changes the mtime-based fingerprint and would
-      // otherwise strand the previous store in /tmp forever (same for
-      // tmp_* dirs of JVMs killed mid-write). Age-gated wider than a
-      // round so a CONCURRENT session on a different fixture/SF —
-      // whose store is fresh but fingerprint differs — is never
-      // deleted under it.
-      graft.Fs.gcStale("graft_cf_recs_v1_", maxAgeMs = 0L) // pre-v2 stores: stale by schema
-      graft.Fs.gcStale("graft_cf_recs_v2_")
+    val store = graft.Fs.materialized("cf_recs", 2, dir,
+        Seq("orders.parquet", "lineitem.parquet"),
+        Seq(cap, minCooc, kNbr, kRec, cut)) { tmp =>
       val nbrs = scoredNeighbors(train, minCooc)
         .withColumn("rank", row_number().over(Window.partitionBy("item")
           .orderBy(col("cos2_ppm").desc, col("cooc").desc, col("nbr"))))
@@ -145,17 +134,10 @@ object Recsys {
         .select(col("u"), col("rec"), col("rk"))
       // one store dir holding BOTH shared intermediates — the rec list
       // and the (item, n_item) popularity table q7c ranks by — so a
-      // standalone q7c run needs NO basket join at all; written to a
-      // UUID temp and renamed into place atomically
-      val tmp = s"$store.tmp_${java.util.UUID.randomUUID().toString.take(8)}"
+      // standalone q7c run needs NO basket join at all
       computed.write.parquet(s"$tmp/recs")
       train.groupBy("item").agg(count(lit(1)).as("n_item"))
         .write.parquet(s"$tmp/pop")
-      try java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-        java.nio.file.Paths.get(store))
-      catch { case _: java.nio.file.FileSystemException =>
-        graft.Fs.deleteRecursively(tmp) // another JVM won the race
-      }
     }
     // session-scoped cache on top: q7b and q7c in one session share the
     // materialized scans without even re-reading parquet

@@ -1112,6 +1112,9 @@ class DedupSimilaritySpec extends SparkSpec {
       "lists partition the corpus, probes prune partitions") {
     import graft.operators.AnnIndex
     val store = AnnIndex.ensure(spark, sfDir)
+    // the path formula existing stores were written under, so they still read
+    assert(store == s"/tmp/graft_ann_ivf_v1_${graft.Fs.inputFingerprint(sfDir,
+      Seq("embeddings.parquet"), Seq(4, 823L))}")
     assert(store == AnnIndex.ensure(spark, sfDir), "ensure must be idempotent")
     // pruning probe FIRST — the graded query caches the lists read, and
     // a cache hit would swallow the partition filter into an

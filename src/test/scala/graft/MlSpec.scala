@@ -159,6 +159,24 @@ class MlSpec extends SparkSpec {
     assert(res.map(_.getAs[Int]("rank")).toSet == Set(2, 4))
   }
 
+  test("gridSearchCV's grid is the nested (rank, maxIter, regParam) order on every call; " +
+      "cvResults breaks exact ties by it") {
+    def points(cv: Recommend.CvResult) = cv.getEstimatorParamMaps.toSeq.map { pm =>
+      val get = (n: String) => pm.toSeq.find(_.param.name == n).get.value
+      (get("rank"), get("maxIter"), get("regParam"))
+    }
+    def run() = Recommend.gridSearchCV(ratings, ranks = Seq(4, 2), maxIters = Seq(3, 2),
+      regParams = Seq(0.1, 0.05), numFolds = 2, parallelism = 2)
+    val first = run()
+    val nested = for (r <- Seq(4, 2); it <- Seq(3, 2); reg <- Seq(0.1, 0.05)) yield (r, it, reg)
+    assert(points(first) == nested)
+    assert(points(run()) == nested)
+    val tied = Recommend.cvResults(spark, Recommend.CvResult(
+      first.getEstimatorParamMaps.reverse, Array.fill(nested.size)(1.0))).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).toSeq
+    assert(tied == nested.sorted)
+  }
+
   test("gridSearchCV equals CrossValidator at the rule's block count: same grid points and avgMetrics") {
     import org.apache.spark.ml.evaluation.RegressionEvaluator
     import org.apache.spark.ml.recommendation.ALS
@@ -276,6 +294,9 @@ class MlSpec extends SparkSpec {
       graft.ml.ModelStore.factorChecksum(als.userFactors))
     // fixture store: same path on re-ensure (no refit), graded row shape
     val store = graft.ml.ModelStore.ensure(spark, sfDir)
+    // the path formula existing stores were written under, so they still read
+    assert(store == s"/tmp/graft_ml_models_v2_${Fs.inputFingerprint(sfDir,
+      Seq("lineitem.parquet", "part.parquet"), Seq(10, 3, 823))}")
     assert(store == graft.ml.ModelStore.ensure(spark, sfDir))
     val out = graft.ml.Serving.persistedServing(spark, sfDir).collect()
     assert(out.length == 8)
